@@ -4,7 +4,9 @@ data-processing capabilities of Apache Phoenix (reference: apache/phoenix).
 Architecture (Spark-first, NOT a port):
   - ``session``   : tuned SparkSession factory (AQE, shuffle sizing, UTC).
   - ``types``     : Phoenix type strings → Spark DataTypes.
-  - ``sqlfront``  : dialect front-end (literal-aware function rewrites,
+  - ``sqllex``    : the dialect lexer every SQL-scanning module shares
+                    (masking, depth-0 splitting, bracket matching).
+  - ``sqlfront``  : dialect front-end (literal-safe function rewrites,
                     statement classification).
   - ``ddl``       : CREATE TABLE/VIEW/SEQUENCE, UPSERT, DELETE parsing.
   - ``catalog``   : fixture-table registry over parquet directories.

@@ -20,6 +20,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
+from phoenix_spark.sqllex import iter_top, match_forward, split_top
 from phoenix_spark.types import parse_type
 
 
@@ -122,35 +123,6 @@ def _strip(s: str) -> str:
     return s.strip().rstrip(";").strip()
 
 
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on sep at paren depth 0, string-literal aware."""
-    out, depth, cur, i = [], 0, [], 0
-    while i < len(text):
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < len(text):
-                if text[j] == "'" and not (j + 1 < len(text) and text[j + 1] == "'"):
-                    break
-                j += 1 if text[j] != "'" else 2
-            cur.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c in "([":  # brackets too: ARRAY[1, 2] literals carry commas
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == sep and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur:
-        out.append("".join(cur).strip())
-    return [x for x in out if x]
-
-
 _CREATE_TABLE_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)\s*\((?P<body>.*)\)\s*(?P<tail>.*)$",
     re.IGNORECASE | re.DOTALL,
@@ -165,23 +137,13 @@ def parse_create_table(sql: str) -> CreateTable:
     if not m:
         raise ValueError(f"unparseable CREATE TABLE: {sql[:120]!r}")
     name = m.group("name").strip('"').lower()  # may be schema-qualified
-    body = m.group("body")
-    # body ends at the matching paren of the column list; tail re-split below
-    # handles `) SALT_BUCKETS=...` because the greedy regex grabs the LAST
-    # close paren — re-balance by scanning.
-    depth, end = 1, None
+    # the greedy regex grabs the LAST close paren; the column list ends at
+    # the one matching its open paren, and `SALT_BUCKETS=...` follows it
     raw = _strip(sql)
     start = raw.index("(") + 1
-    for i in range(start, len(raw)):
-        if raw[i] == "(":
-            depth += 1
-        elif raw[i] == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
-    body = raw[start:end]
-    tail = raw[end + 1 :]
+    end = match_forward(raw, start)
+    body = raw[start : end - 1]
+    tail = raw[end:]
 
     fields: list[T.StructField] = []
     pk: list[str] = []
@@ -191,7 +153,7 @@ def parse_create_table(sql: str) -> CreateTable:
     row_timestamp: str | None = None
     families: dict[str, str] = {}
     items = []
-    for item in _split_top(body):
+    for item in (x.strip() for x in split_top(body, ",") if x.strip()):
         # Phoenix's grammar accepts the CONSTRAINT clause without a
         # preceding comma (see the shipped examples/WEB_STAT.sql) — split a
         # trailing constraint off the last column def.
@@ -206,7 +168,7 @@ def parse_create_table(sql: str) -> CreateTable:
     for item in items:
         cm = _PK_CONSTRAINT_RE.match(item.strip())
         if cm:
-            for colspec in _split_top(cm.group("cols")):
+            for colspec in filter(str.strip, split_top(cm.group("cols"), ",")):
                 toks = colspec.split()
                 col = toks[0].strip('"').lower()
                 rest = [t.upper() for t in toks[1:]]
@@ -247,7 +209,7 @@ def parse_create_table(sql: str) -> CreateTable:
     tail = tail.strip().rstrip(";")
     if tail:
         tail = re.sub(r"SPLIT\s+ON\s*\([^)]*\)", "", tail, flags=re.I).strip()
-        for kv in _split_top(tail):
+        for kv in split_top(tail, ","):
             if "=" in kv:
                 k, v = kv.split("=", 1)
                 props[k.strip().upper()] = v.strip().strip("'")
@@ -287,7 +249,7 @@ def parse_create_view(sql: str) -> CreateView:
     columns: dict[str, str] = {}
     pk_cols: list[str] = []
     if m.group("cols"):
-        for item in m.group("cols").split(","):
+        for item in split_top(m.group("cols"), ","):
             parts = item.strip().split(None, 1)
             if len(parts) != 2:
                 raise ValueError(f"bad view column definition {item.strip()!r}")
@@ -377,7 +339,7 @@ def parse_upsert(sql: str) -> Upsert:
         raise ValueError(f"unparseable UPSERT: {sql[:120]!r}")
     table = m.group("name").strip('"').lower()
     columns = (
-        [c.strip().strip('"').lower() for c in m.group("cols").split(",")]
+        [c.strip().strip('"').lower() for c in split_top(m.group("cols"), ",")]
         if m.group("cols")
         else []
     )
@@ -393,7 +355,7 @@ def parse_upsert(sql: str) -> Upsert:
             update_only = what.upper().startswith("UPDATE_ONLY")
             kw = "UPDATE_ONLY" if update_only else "UPDATE"
             assigns = UpdateOnly() if update_only else {}
-            for a in _split_top(what[len(kw) :].strip()):
+            for a in filter(str.strip, split_top(what[len(kw) :], ",")):
                 col, expr = a.split("=", 1)
                 assigns[col.strip().strip('"').lower()] = expr.strip()
             on_dup = assigns
@@ -401,11 +363,10 @@ def parse_upsert(sql: str) -> Upsert:
     if rest.upper().startswith("VALUES"):
         vals_text = rest[len("VALUES") :].strip()
         rows = []
-        for grp in _split_top(vals_text):
-            grp = grp.strip()
+        for grp in (x.strip() for x in split_top(vals_text, ",") if x.strip()):
             if not (grp.startswith("(") and grp.endswith(")")):
                 raise ValueError(f"bad VALUES row: {grp!r}")
-            rows.append(_split_top(grp[1:-1]))
+            rows.append([v.strip() for v in split_top(grp[1:-1], ",") if v.strip()])
         return Upsert(table, columns, rows, None, on_dup, returning=bool(n_ret))
     return Upsert(table, columns, None, rest, on_dup, returning=bool(n_ret))
 
@@ -419,49 +380,11 @@ _DELETE_CLAUSE_RE = re.compile(
 )
 
 
-def _top_level_clauses(tail: str, pattern: re.Pattern) -> list[tuple[str, str]]:
-    """Split ``tail`` into (keyword, body) clauses, keyword matched only at
-    paren depth 0 and outside string literals — a WHERE subquery's own ORDER
-    BY/LIMIT (depth > 0) must not be mistaken for the delete's clauses."""
-    marks: list[tuple[int, int, str]] = []  # (start, end, canonical keyword)
-    depth, i = 0, 0
-    while i < len(tail):
-        c = tail[i]
-        if c == "'":
-            j = i + 1
-            while j < len(tail):
-                if tail[j] == "'" and not (j + 1 < len(tail) and tail[j + 1] == "'"):
-                    break
-                j += 1 if tail[j] != "'" else 2
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c.isalpha():
-            m = pattern.match(tail, i)
-            if m and (i == 0 or not (tail[i - 1].isalnum() or tail[i - 1] == "_")):
-                marks.append((m.start(), m.end(), re.sub(r"\s+", " ", m.group(1).upper())))
-                i = m.end()
-                continue
-            # skip the whole word so ORDER inside an identifier can't match
-            while i < len(tail) and (tail[i].isalnum() or tail[i] == "_"):
-                i += 1
-            continue
-        i += 1
-    out: list[tuple[str, str]] = []
-    for k, (start, end, kw) in enumerate(marks):
-        stop = marks[k + 1][0] if k + 1 < len(marks) else len(tail)
-        out.append((kw, tail[end:stop].strip()))
-    return out
-
-
 def parse_delete(sql: str) -> Delete:
     """DELETE FROM t [WHERE ...] [ORDER BY ...] [LIMIT n] — the ordered
     top-N delete is DeleteCompiler's LIMIT path (TopNIT.testTopNDelete).
-    Clause keywords are recognized only at paren depth 0 / outside string
-    literals, so ``WHERE id IN (SELECT ... ORDER BY x LIMIT 5)`` keeps the
+    Clause keywords are recognized only at bracket depth 0, outside
+    literals, quoted identifiers and comments, so ``WHERE id IN (SELECT ... ORDER BY x LIMIT 5)`` keeps the
     subquery's ORDER BY/LIMIT inside the predicate."""
     sql, n_ret = _RETURNING_RE.subn("", _strip(sql))
     m = _DELETE_HEAD_RE.match(_strip(sql))
@@ -470,10 +393,13 @@ def parse_delete(sql: str) -> Delete:
     where = order_by = None
     limit = None
     tail = m.group("tail").strip()
-    clauses = _top_level_clauses(tail, _DELETE_CLAUSE_RE)
-    if tail and (not clauses or not tail.upper().startswith(clauses[0][0].split()[0])):
+    marks = list(iter_top(tail, _DELETE_CLAUSE_RE))
+    if tail and (not marks or marks[0].start() != 0):
         raise ValueError(f"unparseable DELETE tail: {tail[:120]!r}")
-    for kw, body in clauses:
+    for k, cm in enumerate(marks):
+        kw = re.sub(r"\s+", " ", cm.group(1).upper())
+        stop = marks[k + 1].start() if k + 1 < len(marks) else len(tail)
+        body = tail[cm.end() : stop].strip()
         if kw == "WHERE":
             where = body or None
         elif kw == "ORDER BY":

@@ -21,6 +21,7 @@ no-concurrent-writers scope).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -32,6 +33,7 @@ from phoenix_spark import indexes as IX
 from phoenix_spark.catalog import Catalog
 from phoenix_spark.mutations import ManagedTable
 from phoenix_spark.sqlfront import classify, translate_phoenix_sql
+from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, unmask
 
 
 class Engine:
@@ -601,7 +603,7 @@ class Engine:
         handler = getattr(self, f"_exec_{stmt.kind}", None)
         if handler is None:
             raise ValueError(f"unsupported statement kind {stmt.kind}")
-        return handler(text)
+        return handler(stmt.text)
 
     @staticmethod
     def _render_literal(v) -> str:
@@ -626,7 +628,7 @@ class Engine:
     def _bind_params(self, text: str, params: list) -> str:
         """Substitute ``?`` placeholders OUTSIDE string literals/comments,
         left to right, erroring on arity mismatch like the reference."""
-        masked, unmask = self._mask_literals(text)
+        masked, stash = mask(text)
         n_slots = masked.count("?")
         if n_slots != len(params):
             raise ValueError(
@@ -635,15 +637,18 @@ class Engine:
             )
         it = iter(params)
         masked = re.sub(r"\?", lambda _m: self._render_literal(next(it)), masked)
-        return unmask(masked)
+        return unmask(masked, stash)
 
     def script(self, text: str) -> list[DataFrame | int]:
         """Run a multi-statement script (the SQL-file surface — reference
         fixture scripts live in phoenix-core/src/it/resources/sql_files/).
-        Statements split on ';' outside string literals."""
-        from phoenix_spark.ddl import _split_top
-
-        return [self.sql(stmt) for stmt in _split_top(text, ";") if stmt.strip()]
+        Statements split on ';' outside literals and comments; a piece
+        holding only comments is no statement."""
+        return [
+            self.sql(stmt)
+            for stmt in split_top(text, ";")
+            if code_start(stmt) < len(stmt)
+        ]
 
     def explain(self, text: str) -> str:
         # consume_sequences=False: explaining a query must not advance
@@ -671,6 +676,7 @@ class Engine:
         re.I,
     )
     _CURR_VAL_RE = re.compile(r"CURRENT\s+VALUE\s+FOR\s+([\w.]+)", re.I)
+    _ORDER_BY_RE = re.compile(r"ORDER\s+BY\b", re.I)
 
     def _check_next_values_n(self, text: str) -> None:
         m = self._NEXT_VAL_BAD_RE.search(text)
@@ -680,28 +686,6 @@ class Engine:
                 "constant (NUM_SEQ_TO_ALLOCATE_MUST_BE_CONSTANT): "
                 f"{m.group(0)!r}"
             )
-
-    @staticmethod
-    def _mask_literals(text: str):
-        """Stash string/quoted-identifier literals behind \\x00N\\x00 markers
-        so the engine-level regex rewrites (sequences, TABLESAMPLE, dynamic
-        columns) can never fire inside a literal — e.g. a VARCHAR value
-        containing the words 'NEXT VALUE FOR s'.  Returns (masked, unmask)."""
-        from phoenix_spark.sqlfront import segments
-
-        stash: list[str] = []
-        parts: list[str] = []
-        for kind, seg in segments(text):
-            if kind in ("string", "ident"):
-                parts.append(f"\x00{len(stash)}\x00")
-                stash.append(seg)
-            else:
-                parts.append(seg)
-
-        def unmask(s: str) -> str:
-            return re.sub(r"\x00(\d+)\x00", lambda m: stash[int(m.group(1))], s)
-
-        return "".join(parts), unmask
 
     def _exec_select(self, text: str, consume_sequences: bool = True) -> DataFrame:
         # tenant-owned views resolve only under their tenant — the shared
@@ -713,7 +697,12 @@ class Engine:
                 raise ValueError(f"Table undefined. tableName={vname}")
         if self._cdcs:
             self._register_cdc_views(text)
-        masked, unmask = self._mask_literals(text)
+        # literals, quoted identifiers and comments are masked, so the
+        # engine-level regex rewrites (sequences, TABLESAMPLE, dynamic
+        # columns) can never fire inside one — e.g. a VARCHAR value
+        # containing the words 'NEXT VALUE FOR s'
+        masked, stash = mask(text)
+        restore = functools.partial(unmask, stash=stash)
         masked = self._rewrite_qualified_refs(masked)
         # table-name qualifiers over an aliased table must resolve to the
         # alias BEFORE index substitution renames the FROM item
@@ -726,13 +715,13 @@ class Engine:
         elif self.tenant_id is not None:
             masked = self._rewrite_tenant_refs(masked)
         masked = self._rewrite_distinct_orderby(masked)
-        masked = self._rewrite_rvc_offset(masked, unmask)
+        masked = self._rewrite_rvc_offset(masked, restore)
         masked = self._rewrite_dynamic_cols(masked)
         masked = self._rewrite_tablesample(masked)
         masked = self._rewrite_sequence_refs(
-            masked, unmask, consume=consume_sequences
+            masked, restore, consume=consume_sequences
         )
-        text = unmask(masked)
+        text = restore(masked)
         # index substitution runs on the UNMASKED text: partial-index
         # predicate matching compares literal-containing conjuncts
         text = self._maybe_use_index(text)
@@ -1132,20 +1121,10 @@ class Engine:
         # (Catalyst evaluates nondeterministic select items before the sort).
         # So strip the trailing top-level ORDER BY (and pagination) — the
         # probe's own count aggregate then runs directly on that projection's
-        # partitions.  ``probe`` is literal-masked, so paren-depth scanning
-        # is safe.
-        cut = None
-        depth = 0
-        for m in re.finditer(r"[()]|\bORDER\s+BY\b", probe, re.IGNORECASE):
-            tok = m.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                cut = m.start()
-        if cut is not None:
-            probe = probe[:cut]
+        # partitions.
+        order_bys = list(iter_top(probe, self._ORDER_BY_RE))
+        if order_bys:
+            probe = probe[: order_bys[-1].start()]
         probe = re.sub(
             r"(?:\s+(?:LIMIT\s+\d+|OFFSET\s+\d+(?:\s+ROWS?)?"
             r"|FETCH\s+(?:FIRST|NEXT)\s+\d+\s+ROWS?\s+ONLY))+\s*;?\s*$",
@@ -1562,7 +1541,7 @@ class Engine:
         m = re.match(r"^\s*ALTER\s+SESSION\s+SET\s+(.+?)\s*;?\s*$", text, re.I | re.S)
         if not m:
             raise ValueError(f"unparseable ALTER SESSION: {text[:80]!r}")
-        for item in D._split_top(m.group(1)):
+        for item in (x.strip() for x in split_top(m.group(1), ",") if x.strip()):
             k, _, v = item.partition("=")
             if not _:
                 raise ValueError(f"bad session property {item!r}")
@@ -2304,7 +2283,7 @@ class Engine:
         if op == "SET":
             # ALTER TABLE t SET k=v, ... (fam_properties): metadata-only
             meta = mt.meta
-            for item in D._split_top(rest):
+            for item in (x.strip() for x in split_top(rest, ",") if x.strip()):
                 k, _, v = item.partition("=")
                 if not _:
                     raise ValueError(f"bad table property {item!r}")
@@ -2463,8 +2442,8 @@ class Engine:
                 # conjunct analysis runs on literal-MASKED text (r04
                 # advice): a constant like 'rock AND roll' or 'a<b' must
                 # not read as a compound/inequality predicate
-                masked_where, unmask = self._mask_literals(where)
-                for conj in IX._top_level_conjuncts(masked_where):
+                masked_where, stash = mask(where)
+                for conj in split_top(masked_where, "AND"):
                     m = re.match(
                         r"^\s*([A-Za-z_]\w*)\s*=\s*(.+?)\s*$", conj, re.S
                     )
@@ -2473,13 +2452,13 @@ class Engine:
                     ):
                         raise ValueError(
                             f"view {name} is read-only: predicate "
-                            f"{unmask(conj).strip()!r} is not a simple "
+                            f"{unmask(conj, stash).strip()!r} is not a simple "
                             "equality (ViewType.UPDATABLE requires "
                             "col = literal)"
                         )
                     col = m.group(1).lower()
                     consts.setdefault(
-                        col, self._eval_literal(unmask(m.group(2)))
+                        col, self._eval_literal(unmask(m.group(2), stash))
                     )
             node = parent
         return node, consts
@@ -2531,7 +2510,7 @@ class Engine:
                 # composes as F.when over the recursively-bound branches.
                 # Keyword scan runs on literal-MASKED text (a condition
                 # document could contain ' THEN ' inside a string).
-                masked, unmask = self._mask_literals(e)
+                masked, stash = mask(e)
                 cm = re.fullmatch(
                     r"\s*CASE\s+WHEN\s+(.+?)\s+THEN\s+(.+?)"
                     r"\s+ELSE\s+(.+?)\s+END\s*",
@@ -2543,7 +2522,7 @@ class Engine:
                 # which fails loudly on an embedded BSON_UPDATE_EXPRESSION
                 # instead of silently mis-splitting
                 if cm and len(re.findall(r"\bCASE\b", masked, re.I)) == 1:
-                    cond, then, els = (unmask(g) for g in cm.groups())
+                    cond, then, els = (unmask(g, stash) for g in cm.groups())
                     then_c, els_c = _dup_expr(then), _dup_expr(els)
                     if isinstance(then_c, F.Column) or isinstance(
                         els_c, F.Column

@@ -52,6 +52,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from phoenix_spark.sqllex import match_forward, segments, split_top
+
 
 class IndexError_(ValueError):
     pass
@@ -119,65 +121,6 @@ _HEAD_RE = re.compile(
 _IDENT_RE = re.compile(r"^[A-Za-z_]\w*$")
 
 
-def _paren_group(text: str, start: int) -> tuple[str, int]:
-    """text[start] must be '(' — return (inner text, index after ')')."""
-    assert text[start] == "("
-    depth, i = 1, start + 1
-    while i < len(text) and depth:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < len(text):
-                if text[j] == "'":
-                    if j + 1 < len(text) and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        raise IndexError_("unbalanced parens in CREATE INDEX")
-    return text[start + 1 : i - 1], i
-
-
-def _split_top(argtext: str) -> list[str]:
-    """Comma-split at paren depth 0 (string-literal aware)."""
-    parts, depth, cur, i = [], 0, [], 0
-    while i < len(argtext):
-        c = argtext[i]
-        if c == "'":
-            j = i + 1
-            while j < len(argtext):
-                if argtext[j] == "'":
-                    if j + 1 < len(argtext) and argtext[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(argtext[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur:
-        parts.append("".join(cur).strip())
-    return [p for p in parts if p]
-
-
 def parse_create_index(text: str) -> tuple[IndexDef, bool]:
     """Parse CREATE [LOCAL|UNCOVERED] INDEX; returns (def, if_not_exists).
 
@@ -194,11 +137,14 @@ def parse_create_index(text: str) -> tuple[IndexDef, bool]:
     pos = m.end()
     if pos >= len(text) or text[pos] != "(":
         raise IndexError_(f"CREATE INDEX missing key list: {text[:120]!r}")
-    key_text, pos = _paren_group(text, pos)
+    end = match_forward(text, pos + 1)
+    if end > len(text):
+        raise IndexError_("unbalanced parens in CREATE INDEX")
+    key_text, tail = text[pos + 1 : end - 1], text[end:]
     key: list[str] = []
     sort_orders: dict[str, str] = {}
     exprs: dict[str, str] = {}
-    for part in _split_top(key_text):
+    for part in (x.strip() for x in split_top(key_text, ",") if x.strip()):
         pm = re.match(r"^(.*?)\s*(ASC|DESC)?$", part, re.I | re.S)
         col = pm.group(1).strip()
         if _IDENT_RE.match(col):
@@ -217,13 +163,14 @@ def parse_create_index(text: str) -> tuple[IndexDef, bool]:
             sort_orders[name] = "DESC"
     if not key:
         raise IndexError_("CREATE INDEX requires at least one key column")
-    tail = text[pos:]
-    im = re.match(r"\s*INCLUDE\s*", tail, re.I)
+    im = re.match(r"\s*INCLUDE\s*\(", tail, re.I)
     include: list[str] = []
     if im:
-        inc_text, after = _paren_group(tail, im.end())
-        include = [c.strip().lower() for c in _split_top(inc_text)]
-        tail = tail[after:]
+        end = match_forward(tail, im.end())
+        if end > len(tail):
+            raise IndexError_("unbalanced parens in CREATE INDEX")
+        inc_text, tail = tail[im.end() : end - 1], tail[end:]
+        include = [c.strip().lower() for c in split_top(inc_text, ",") if c.strip()]
     for c in include:
         if not _IDENT_RE.match(c):
             raise IndexError_(f"bad INCLUDE column {c!r}")
@@ -302,43 +249,6 @@ _WHERE_RE = re.compile(
 )
 
 
-def _top_level_conjuncts(where: str) -> list[str]:
-    """Split a WHERE body on top-level AND (outside parens and string
-    literals).  Returns the raw conjunct texts."""
-    parts, depth, i, start = [], 0, 0, 0
-    n = len(where)
-    while i < n:
-        c = where[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if where[j] == "'":
-                    if j + 1 < n and where[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and where[i : i + 3].upper() == "AND":
-            before = where[i - 1] if i else " "
-            after = where[i + 3] if i + 3 < n else " "
-            if not (before.isalnum() or before == "_") and not (
-                after.isalnum() or after == "_"
-            ):
-                parts.append(where[start:i])
-                start = i + 3
-                i += 3
-                continue
-        i += 1
-    parts.append(where[start:])
-    return parts
-
-
 def _expr_pattern(expr: str) -> "re.Pattern[str]":
     """Whitespace-flexible, case-insensitive regex matching an index
     expression as written in a query (tokens fixed, spacing free)."""
@@ -349,8 +259,6 @@ def _expr_pattern(expr: str) -> "re.Pattern[str]":
 def _replace_exprs(text: str, exprs: dict[str, str]) -> str:
     """Replace occurrences of each functional-key expression with its
     generated index column name — outside string literals only."""
-    from phoenix_spark.sqlfront import segments
-
     out = []
     for kind, seg in segments(text):
         if kind == "code":
@@ -422,7 +330,7 @@ def choose_index(
             ewm0 = _WHERE_RE.search(eff_text)
             if not ewm0:
                 continue
-            conjuncts = _top_level_conjuncts(ewm0.group(1))
+            conjuncts = split_top(ewm0.group(1), "AND")
             match = next(
                 (c for c in conjuncts if _norm_pred(c) == target), None
             )
@@ -502,7 +410,7 @@ def choose_join_back(
     ]
     if not cands:
         return None
-    conjuncts = _top_level_conjuncts(wm.group(1))
+    conjuncts = split_top(wm.group(1), "AND")
     best = None
     for d in cands:
         keyset = set(d.key)
@@ -530,22 +438,9 @@ def _norm_pred(p: str) -> str:
     """Normalize a predicate for textual containment: lowercase, collapse
     whitespace, drop redundant outer parens."""
     p = re.sub(r"\s+", " ", p.strip().lower())
-    while p.startswith("(") and p.endswith(")"):
-        inner = p[1:-1].strip()
-        # only strip if the parens are balanced as a pair
-        depth = 0
-        ok = True
-        for i, c in enumerate(inner):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth < 0:
-                    ok = False
-                    break
-        if not ok or depth != 0:
-            break
-        p = inner
+    # strip only a pair: the first '(' must close at the last ')'
+    while p.startswith("(") and match_forward(p, 1) == len(p):
+        p = p[1:-1].strip()
     return p
 
 

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from phoenix_spark.sqllex import split_top
+
 _TS_COL = "_mutation_ts"
 _DEL_COL = "_deleted"
 _SEG_RE = re.compile(r"seg-(\d{12})-")
@@ -310,17 +312,7 @@ class ManagedTable:
             import re as _re
 
             sort_cols = []
-            depth, last, items = 0, 0, []
-            for i, ch in enumerate(order_by):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    items.append(order_by[last:i])
-                    last = i + 1
-            items.append(order_by[last:])
-            for item in items:
+            for item in split_top(order_by, ","):
                 m = _re.match(
                     r"(.*?)\s*(ASC|DESC)?\s*(?:NULLS\s+(FIRST|LAST))?\s*$",
                     item.strip(), _re.I | _re.S,

@@ -4,8 +4,9 @@ Phoenix parses its dialect with an ANTLR3 grammar (reference:
 phoenix-core-client/src/main/antlr3/PhoenixSQL.g).  Spark SQL covers the ANSI
 core, so this front-end closes the *dialect* gap:
 
-  * a literal-aware tokenizer — function renames never touch the inside of
-    string literals ('...'), quoted identifiers ("..."), or comments;
+  * literal safety from the dialect lexer (``sqllex``) — rewrites run on
+    masked text, so function renames never touch the inside of string
+    literals ('...'), quoted identifiers ("..."), or comments;
   * per-function rewrite rules, including argument-shape fixes:
       - REGEXP_SUBSTR(s, p)      → regexp_extract(s, p, 0)   (Phoenix returns
         the WHOLE match; Spark's default group 1 errors on group-free
@@ -26,33 +27,17 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-# ---------------------------------------------------------------------------
-# Tokenizer: split SQL into (kind, text) segments where kind ∈
-# {"code", "string", "ident", "comment"}.  Rewrites only ever apply to code.
-# ---------------------------------------------------------------------------
-
-_SEG_RE = re.compile(
-    r"""
-      (?P<string>'(?:[^']|'')*')
-    | (?P<ident>"(?:[^"]|"")*")
-    | (?P<comment>--[^\n]*|/\*.*?\*/)
-    """,
-    re.DOTALL | re.VERBOSE,
+from phoenix_spark.sqllex import (
+    code_start,
+    find_top,
+    iter_top,
+    mask,
+    match_backward,
+    match_forward,
+    split_top,
+    tokens,
+    unmask,
 )
-
-
-def segments(sql: str) -> list[tuple[str, str]]:
-    out: list[tuple[str, str]] = []
-    pos = 0
-    for m in _SEG_RE.finditer(sql):
-        if m.start() > pos:
-            out.append(("code", sql[pos : m.start()]))
-        out.append((m.lastgroup or "code", m.group()))
-        pos = m.end()
-    if pos < len(sql):
-        out.append(("code", sql[pos:]))
-    return out
-
 
 # 1:1 function renames (semantics verified in queries/scalar_*.py).
 RENAME = {
@@ -438,38 +423,6 @@ def _python_parse_dt_literal(value, java_fmt, tz):
         except Exception:
             return None
     return f"timestamp_ntz'{d:%Y-%m-%d %H:%M:%S.%f}'"
-
-
-def _split_args(argtext: str) -> list[str]:
-    """Split a paren-free-depth-0 comma list (string-literal aware)."""
-    args, depth, cur, i = [], 0, [], 0
-    while i < len(argtext):
-        c = argtext[i]
-        if c == "'":
-            j = i + 1
-            while j < len(argtext):
-                if argtext[j] == "'":
-                    if j + 1 < len(argtext) and argtext[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(argtext[i : j + 1])
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur or args:
-        args.append("".join(cur).strip())
-    return args
 
 
 def _regex_escape_literal(lit: str) -> str:
@@ -1100,17 +1053,6 @@ def _translate_hint_body(body: str, first_table: str | None) -> str:
 # full || chain → one concat_ws call), so untouched SQL passes through
 # byte-identical (the hypothesis passthrough property).
 
-_TYPED_TOK_RE = re.compile(
-    r"\x00\d+\x00"                  # masked literal / quoted identifier
-    r"|\d+\.\d*(?:[eE][+-]?\d+)?"   # 1.5   1.
-    r"|\.\d+(?:[eE][+-]?\d+)?"      # .5
-    r"|\d+[eE][+-]?\d+"             # 1e3
-    r"|\d+"                         # 42
-    r"|[A-Za-z_]\w*"                # ident / keyword
-    r"|\|\||<=|>=|<>|!=|::"
-    r"|\S"                          # any single char (operators, parens, ...)
-)
-
 # Keywords that terminate a scalar expression; comparison operators and
 # anything else unrecognized end a parse naturally (the driver loop then
 # advances token-by-token, so inner regions are still scanned for rewrites).
@@ -1161,9 +1103,11 @@ class _TypedRewriter:
 
     def __init__(self, masked, int_cols, str_cols, stash):
         self.src = masked
+        # (text, start, end, bracket depth) of every code token
         self.toks = [
-            (m.group(0), m.start(), m.end())
-            for m in _TYPED_TOK_RE.finditer(masked)
+            (t.text, t.start, t.end, t.depth)
+            for t in tokens(masked)
+            if t.kind != "comment"
         ]
         self.int_cols = {c.lower() for c in int_cols}
         self.str_cols = {c.lower() for c in str_cols}
@@ -1255,7 +1199,7 @@ class _TypedRewriter:
             return i, _T_UNK
         k = j
         while k < len(self.toks) and self.toks[k][0] in ("*", "/", "%"):
-            op, s, e = self.toks[k]
+            op, s, e, _d = self.toks[k]
             m, t2 = self._unary(k + 1)
             if m == k + 1:
                 return k, _T_UNK
@@ -1283,7 +1227,7 @@ class _TypedRewriter:
     def _primary(self, i):
         if i >= len(self.toks):
             return i, _T_UNK
-        tok, _s, _e = self.toks[i]
+        tok, _s, _e, _d = self.toks[i]
         if tok.startswith("\x00"):
             return i + 1, self._placeholder_type(tok)
         if tok[0].isdigit() or tok[0] == ".":
@@ -1354,7 +1298,7 @@ class _TypedRewriter:
         saw_else = False
         while True:
             j = self._scan_region_until(j, {"WHEN", "ELSE", "END"})
-            if j >= n or self.toks[j][0] == ")":
+            if j >= n or self.toks[j][0] in ")]":
                 return i, _T_UNK  # unterminated — region already scanned
             kw = self.toks[j][0].upper()
             if kw == "END":
@@ -1363,7 +1307,7 @@ class _TypedRewriter:
                 return self._postfix(j + 1, self._merge_branches(types))
             if kw == "WHEN":
                 j = self._scan_region_until(j + 1, {"THEN"})
-                if j >= n or self.toks[j][0] == ")":
+                if j >= n or self.toks[j][0] in ")]":
                     return i, _T_UNK
                 j += 1  # past THEN
             else:  # ELSE
@@ -1378,23 +1322,26 @@ class _TypedRewriter:
 
     def _scan_region_until(self, i, stops):
         """Advance to the next token in ``stops`` at the current nesting
-        level (parens and nested CASE...END), typed-parsing along the way so
-        rewrites inside the skipped region still land."""
+        level (brackets and nested CASE...END), or to the close bracket that
+        ends the level, typed-parsing along the way so rewrites inside the
+        skipped region still land.  CASE...END nesting is counted here: the
+        lexer tracks brackets, not keyword pairs."""
         n = len(self.toks)
-        depth_p = depth_c = 0
+        if i >= n:
+            return i
+        tok, _s, _e, level = self.toks[i]
+        level += tok in ")]"  # a close bracket sits one level out
+        depth_c = 0
         while i < n:
-            up = self.toks[i][0].upper()
-            if depth_p == 0 and depth_c == 0 and (up in stops or up == ")"):
+            tok, _s, _e, d = self.toks[i]
+            up = tok.upper()
+            if d < level or (d == level and depth_c == 0 and up in stops):
                 return i
             j, _t = self._concat(i)
             if j > i:
                 i = j
                 continue
-            if up == "(":
-                depth_p += 1
-            elif up == ")":
-                depth_p -= 1
-            elif up == "CASE":
+            if up == "CASE":
                 depth_c += 1
             elif up == "END":
                 depth_c -= 1
@@ -1533,7 +1480,7 @@ def _rewrite_distinct_orderby(masked: str) -> str:
         return re.sub(r"\s+", " ", s).strip().lower()
 
     items = []
-    for it in _split_top_level(sel):
+    for it in (x.strip() for x in split_top(sel, ",")):
         alias = None
         am = re.match(r"(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", it, re.I | re.S)
         if am:
@@ -1541,7 +1488,7 @@ def _rewrite_distinct_orderby(masked: str) -> str:
         items.append((_norm(it), _norm(alias) if alias else None))
     out = []
     changed = False
-    for ob in _split_top_level(order):
+    for ob in (x.strip() for x in split_top(order, ",")):
         dm = re.match(r"(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+\w+)?\s*$", ob, re.I | re.S)
         expr, sfx = dm.group(1), (dm.group(2) or "") + (dm.group(3) or "")
         key = _norm(expr)
@@ -1556,23 +1503,6 @@ def _rewrite_distinct_orderby(masked: str) -> str:
     if not changed:
         return masked
     return f"{head}{sel}{mid}{okw}{', '.join(out)}{tail}"
-
-
-def _split_top_level(text: str) -> list[str]:
-    items, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        items.append("".join(cur).strip())
-    return items
 
 
 # Row-value-constructor comparisons with UNEQUAL arity
@@ -1591,22 +1521,6 @@ _RVC_SIMPLE_TOKEN = re.compile(r"(?:\x00\d+\x00|[A-Za-z_][\w.]*|\d+(?:\.\d+)?)$"
 
 
 def _rewrite_rvc_arity(masked: str) -> str:
-    def _list_items(text):
-        """Top-level comma split of a paren body (masked text: no quotes)."""
-        items, depth, cur = [], 0, []
-        for ch in text:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                items.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        items.append("".join(cur).strip())
-        return items
-
     def _left_operand(s, i):
         """Operand ending at position i (exclusive): (list) or simple token.
         A close-paren preceded (at its matching open) by an identifier is a
@@ -1616,15 +1530,7 @@ def _rewrite_rvc_arity(masked: str) -> str:
         while j > 0 and s[j - 1].isspace():
             j -= 1
         if j > 0 and s[j - 1] == ")":
-            depth, k = 0, j - 1
-            while k >= 0:
-                if s[k] == ")":
-                    depth += 1
-                elif s[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = match_backward(s, j)
             if k < 0:
                 return None
             # function call?  walk back over a (qualified) name
@@ -1638,7 +1544,7 @@ def _rewrite_rvc_arity(masked: str) -> str:
             body = s[k + 1 : j - 1]
             if re.match(r"\s*SELECT\b", body, re.I):
                 return None
-            return (k, j, _list_items(body))
+            return (k, j, [x.strip() for x in split_top(body, ",")])
         m = _RVC_SIMPLE_TOKEN.search(s[:j])
         if m and m.group(0):
             return (m.start(), j, [m.group(0)])
@@ -1649,21 +1555,13 @@ def _rewrite_rvc_arity(masked: str) -> str:
         while j < len(s) and s[j].isspace():
             j += 1
         if j < len(s) and s[j] == "(":
-            depth, k = 0, j
-            while k < len(s):
-                if s[k] == "(":
-                    depth += 1
-                elif s[k] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            if k >= len(s):
+            k = match_forward(s, j + 1)
+            if k > len(s):
                 return None
-            body = s[j + 1 : k]
+            body = s[j + 1 : k - 1]
             if re.match(r"\s*SELECT\b", body, re.I):
                 return None
-            return (j, k + 1, _list_items(body))
+            return (j, k, [x.strip() for x in split_top(body, ",")])
         m = re.match(r"(?:\x00\d+\x00|[A-Za-z_][\w.]*|\d+(?:\.\d+)?)", s[j:])
         if m:
             end = j + m.end()
@@ -1680,18 +1578,9 @@ def _rewrite_rvc_arity(masked: str) -> str:
                 # it loudly (r7 advice fix).
                 if m.group(0).upper() in ("ANY", "SOME", "ALL"):
                     return None
-                depth = 0
-                while k < len(s):
-                    if s[k] == "(":
-                        depth += 1
-                    elif s[k] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k += 1
-                if k >= len(s):
+                end = match_forward(s, k + 1)
+                if end > len(s):
                     return None
-                end = k + 1
             return (j, end, [s[j:end]])
         return None
 
@@ -1738,6 +1627,8 @@ _DATE_FN_RE = re.compile(
 _DATE_FN_LTZ = {"NOW", "CURRENT_DATE", "CURRENT_TIME", "CURRENT_TIMESTAMP"}
 
 
+_AS_RE = re.compile(r"AS\b", re.I)
+
 _NUM_CAST_TARGETS = {
     "BIGINT": "bigint", "INTEGER": "int", "INT": "int", "SMALLINT": "smallint",
     "TINYINT": "tinyint", "DOUBLE": "double", "FLOAT": "float",
@@ -1777,12 +1668,12 @@ def _rewrite_datetime_casts(
         if re.fullmatch(r"(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)", t):
             return t.rsplit(".", 1)[-1].lower() in ts_l
         m = _DATE_FN_RE.match(t)
-        if m and _match_paren(t, m.end()) == len(t):
+        if m and match_forward(t, m.end()) == len(t):
             return True
         if re.match(r"(?:TIMESTAMP(?:_NTZ)?)\s*\x00?", t, re.I):
             return True
         m = re.match(r"CAST\s*\(", t, re.I)
-        if m and _match_paren(t, m.end()) == len(t):
+        if m and match_forward(t, m.end()) == len(t):
             return bool(
                 re.search(
                     r"\bAS\s+(?:UNSIGNED_)?(?:DATE|TIME|TIMESTAMP)\s*\)\s*$",
@@ -1800,7 +1691,7 @@ def _rewrite_datetime_casts(
         # a (possibly already-rewritten) cast to a numeric target — covers
         # CAST(CAST(date AS BIGINT) AS DATE) round-trips
         m = re.match(r"CAST\s*\(", t, re.I)
-        if m and _match_paren(t, m.end()) == len(t):
+        if m and match_forward(t, m.end()) == len(t):
             return bool(
                 re.search(
                     r"\bAS\s+(?:bigint|int|integer|smallint|tinyint|double"
@@ -1815,21 +1706,15 @@ def _rewrite_datetime_casts(
     for m in re.finditer(r"\bCAST\s*\(", masked, re.I):
         if m.start() < pos:
             continue
-        end = _match_paren(masked, m.end())
+        end = match_forward(masked, m.end())
         body = masked[m.end() : end - 1]
         # recurse into nested casts first
         body = _rewrite_datetime_casts(body, ts_columns, int_columns)
-        am = None
-        depth = 0
-        for tm in re.finditer(r"[()]|\bAS\b", body, re.I):
-            if tm.group(0) == "(":
-                depth += 1
-            elif tm.group(0) == ")":
-                depth -= 1
-            elif depth == 0:
-                am = tm  # last top-level AS wins (expr can't contain one)
-        if am is None:
+        # the last top-level AS wins (the expression can't contain one)
+        ases = list(iter_top(body, _AS_RE))
+        if not ases:
             continue
+        am = ases[-1]
         inner = body[: am.start()].strip()
         target = body[am.end() :].strip().rstrip()
         t_up = re.sub(r"\s*\(.*$", "", target).upper()
@@ -1896,7 +1781,7 @@ def _rewrite_date_arith(masked: str, ts_columns: set[str]) -> str:
     terms: list[tuple[int, int, str]] = []  # (start, end, term_sql)
     fn_spans: list[tuple[int, int]] = []
     for m in _DATE_FN_RE.finditer(masked):
-        end = _match_paren(masked, m.end())
+        end = match_forward(masked, m.end())
         text = masked[m.start() : end]
         if m.group(1).upper() in _DATE_FN_LTZ:
             # only the ARITHMETIC form needs the naive view; standalone
@@ -1968,33 +1853,26 @@ def translate_phoenix_sql(
     NULL-as-empty ``||`` rewrite (StringConcatExpression skips null
     children; Spark's concat propagates NULL).
     """
-    # Reassemble with rewrites applied to code segments only.  Function calls
-    # may span literal boundaries (an argument IS a literal), so rather than
-    # rewriting code segments independently, mask literals, rewrite, unmask.
-    segs = segments(sql)
-    masked_parts: list[str] = []
-    stash: list[str] = []
-    hint_stash: list[str] = []
-    for kind, text in segs:
-        if kind in ("string", "ident"):
-            masked_parts.append(f"\x00{len(stash)}\x00")
-            if kind == "ident":
-                # ANSI double-quoted identifiers (grammar: case-sensitive
-                # names) → Spark backticks; `""` unescapes to `"`
-                inner = text[1:-1].replace('""', '"').replace("`", "``")
-                stash.append(f"`{inner}`")
-            else:
-                stash.append(text)
-        elif kind == "comment":
-            if text.startswith("/*+"):
-                masked_parts.append(f"\x01{len(hint_stash)}\x01")
-                hint_stash.append(text[3:-2])
-            else:
-                masked_parts.append(" ")
-        else:
-            masked_parts.append(text)
-    masked = "".join(masked_parts)
-    if hint_stash:
+    # Rewrites apply to code only.  Function calls may span literal
+    # boundaries (an argument IS a literal), so rather than rewriting code
+    # segments independently, mask literals, rewrite, unmask.  Comments are
+    # put back at once (as a space, or a hint's Spark translation); ``view``
+    # maps every other marker to itself.
+    masked, stash = mask(sql)
+    view = [f"\x00{i}\x00" for i in range(len(stash))]
+    hints: list[int] = []
+    for i, tok in enumerate(stash):
+        if tok.startswith('"'):
+            # ANSI double-quoted identifiers (grammar: case-sensitive
+            # names) → Spark backticks; `""` unescapes to `"`
+            inner = tok[1:-1].replace('""', '"').replace("`", "``")
+            stash[i] = f"`{inner}`"
+        elif tok.startswith("/*+"):
+            hints.append(i)
+        elif not tok.startswith("'"):
+            view[i] = " "
+    masked = unmask(masked, view)
+    if hints:
         # Spark join hints bind to the relation ALIAS when one exists
         mfrom = re.search(
             r"\bFROM\s+([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)"
@@ -2014,16 +1892,12 @@ def translate_phoenix_sql(
                 if alias and alias.upper() not in _KEYWORDS
                 else mfrom.group(1)
             )
-        masked = re.sub(
-            r"\x01(\d+)\x01",
-            lambda m: _translate_hint_body(
-                hint_stash[int(m.group(1))], first_table
-            ),
-            masked,
-        )
+        for i in hints:
+            view[i] = _translate_hint_body(stash[i][3:-2], first_table)
+        masked = unmask(masked, view)
 
     def _unmask(s: str) -> str:
-        return re.sub(r"\x00(\d+)\x00", lambda m: stash[int(m.group(1))], s)
+        return unmask(s, stash)
 
     # ANSI pagination (grammar :1026-1036): Phoenix accepts `OFFSET m ROWS
     # FETCH FIRST|NEXT n ROWS ONLY`; Spark's grammar wants `LIMIT n OFFSET m`
@@ -2178,16 +2052,10 @@ def _rewrite_orderby_null_default(masked: str) -> str:
     Applies to statement-level ORDER BY only: ``OVER (... ORDER BY ...)``
     and ``WITHIN GROUP (ORDER BY ...)`` are beyond-reference / separately
     rewritten surfaces that keep their established semantics."""
-    skip: list[tuple[int, int]] = []
-    for m in re.finditer(r"\b(?:OVER|GROUP)\s*\(", masked, re.I):
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        skip.append((m.end(), i))
+    skip = [
+        (m.end(), match_forward(masked, m.end()))
+        for m in re.finditer(r"\b(?:OVER|GROUP)\s*\(", masked, re.I)
+    ]
 
     out, pos = [], 0
     for m in re.finditer(r"\bORDER\s+BY\b", masked, re.I):
@@ -2195,37 +2063,10 @@ def _rewrite_orderby_null_default(masked: str) -> str:
             continue
         if m.start() < pos:
             continue
-        # item list: up to the next top-level boundary
-        i, depth = m.end(), 0
-        end = len(masked)
-        for tm in re.finditer(
-            r"[()]|\b(?:LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT)\b",
-            masked[m.end():], re.I,
-        ):
-            t = tm.group(0)
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                if depth == 0:
-                    end = m.end() + tm.start()
-                    break
-                depth -= 1
-            elif depth == 0:
-                end = m.end() + tm.start()
-                break
-        region = masked[m.end() : end]
-        # split top-level commas; patch items ending in bare DESC
-        items, d, last = [], 0, 0
-        for cm in re.finditer(r"[(),]", region):
-            c = cm.group(0)
-            if c == "(":
-                d += 1
-            elif c == ")":
-                d -= 1
-            elif d == 0:
-                items.append(region[last : cm.start()])
-                last = cm.start() + 1
-        items.append(region[last:])
+        # item list: up to the next top-level boundary; patch items ending
+        # in bare DESC
+        end = find_top(masked, _OB_END_RE, m.end())
+        items = split_top(masked[m.end() : end], ",")
         changed = False
         for ii, item in enumerate(items):
             if re.search(r"\bDESC\s*$", item, re.I) and not re.search(
@@ -2241,11 +2082,11 @@ def _rewrite_orderby_null_default(masked: str) -> str:
     return "".join(out)
 
 
-_ON_REGION_STOP = {
-    "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "WHERE", "GROUP",
-    "ORDER", "HAVING", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-    "FETCH", "ON",
-}
+_ON_REGION_END_RE = re.compile(
+    r",|(?:JOIN|INNER|LEFT|RIGHT|FULL|CROSS|WHERE|GROUP|ORDER|HAVING|LIMIT"
+    r"|OFFSET|UNION|INTERSECT|EXCEPT|FETCH|ON)\b",
+    re.I,
+)
 
 _EXPR_NONCOL_KW = {
     "AND", "OR", "NOT", "NULL", "TRUE", "FALSE", "IS", "IN", "LIKE",
@@ -2340,63 +2181,23 @@ def _rewrite_on_nullsafe(masked: str, stash: list[str]) -> str:
             has_col = True
         return has_col or bool(quals), quals
 
-    def _split_top(text: str, sep_re: str) -> list[str]:
-        parts, depth, last = [], 0, 0
-        for m in re.finditer(r"[()]|" + sep_re, text, re.I):
-            t = m.group(0)
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                parts.append(text[last : m.start()])
-                last = m.end()
-        parts.append(text[last:])
-        return parts
-
     out, pos = [], 0
     for m in re.finditer(r"\bON\b(?!\s+DUPLICATE\b)", masked, re.I):
         if m.start() < pos:
             continue
         # region: from after ON to the next top-level boundary
-        i, depth, n = m.end(), 0, len(masked)
-        end = n
-        for tm in re.finditer(r"[(),]|\b[A-Za-z_]\w*\b", masked[m.end():]):
-            t = tm.group(0)
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                if depth == 0:
-                    end = m.end() + tm.start()
-                    break
-                depth -= 1
-            elif t == ",":
-                if depth == 0:
-                    end = m.end() + tm.start()
-                    break
-            elif depth == 0 and t.upper() in _ON_REGION_STOP:
-                end = m.end() + tm.start()
-                break
-        region = masked[m.end() : end]
-        conjuncts = _split_top(region, r"\bAND\b")
+        end = find_top(masked, _ON_REGION_END_RE, m.end())
+        conjuncts = split_top(masked[m.end() : end], "AND")
         changed = False
         for ci, conj in enumerate(conjuncts):
             if re.search(r"\bOR\b", conj, re.I):
                 continue
-            # exactly one top-level bare `=` (not !=, <=, >=, <=>)
-            eqs = []
-            depth2 = 0
-            for em in re.finditer(r"[()]|<=>|[<>!]=|=", conj):
-                t = em.group(0)
-                if t == "(":
-                    depth2 += 1
-                elif t == ")":
-                    depth2 -= 1
-                elif t == "=" and depth2 == 0:
-                    eqs.append(em.start())
-            if len(eqs) != 1:
+            # exactly one top-level bare `=` (the lexer reads !=, <=, >=
+            # and <=> as whole operators)
+            sides = split_top(conj, "=")
+            if len(sides) != 2:
                 continue
-            lhs, rhs = conj[: eqs[0]], conj[eqs[0] + 1 :]
+            lhs, rhs = sides
             lcol, lq = _analyze(lhs)
             rcol, rq = _analyze(rhs)
             if not (lcol and rcol):
@@ -2432,20 +2233,10 @@ def _rewrite_array_ctor(masked: str) -> str:
             return "".join(out)
         out.append(masked[pos : m.start()])
         out.append("array(")
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            c = masked[i]
-            if c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        inner = _rewrite_array_ctor(masked[m.end() : i])
-        out.append(inner)
+        end = match_forward(masked, m.end())
+        out.append(_rewrite_array_ctor(masked[m.end() : end - 1]))
         out.append(")")
-        pos = i + 1
+        pos = end
 
 
 # ---------------------------------------------------------------------------
@@ -2473,19 +2264,6 @@ _WG_FNS = (
 )
 _WG_RE = re.compile(r"\b(" + "|".join(_WG_FNS) + r")\s*\(", re.IGNORECASE)
 _WG_TAIL_RE = re.compile(r"\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+", re.IGNORECASE)
-
-
-def _match_paren(masked: str, start: int) -> int:
-    """Index just past the ')' closing the '(' that precedes ``start``."""
-    i, depth = start, 1
-    while i < len(masked) and depth:
-        c = masked[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    return i
 
 
 def _lower_within_group(name: str, args: list[str], key: str, desc: bool) -> str:
@@ -2552,16 +2330,16 @@ def _rewrite_within_group(masked: str) -> str:
         if not m:
             out.append(masked[pos:])
             return "".join(out)
-        close = _match_paren(masked, m.end())
+        close = match_forward(masked, m.end())
         tm = _WG_TAIL_RE.match(masked, close)
         if not tm:
             # no WITHIN GROUP: leave for Spark (e.g. window first_value)
             out.append(masked[pos : m.end()])
             pos = m.end()
             continue
-        wg_close = _match_paren(masked, tm.end())
+        wg_close = match_forward(masked, tm.end())
         order = masked[tm.end() : wg_close - 1].strip()
-        if _split_args(order) != [order]:
+        if len(split_top(order, ",")) != 1:
             raise PhoenixTranslationError(
                 f"{m.group(1).upper()} WITHIN GROUP supports a single "
                 "ORDER BY expression (as in the reference grammar)"
@@ -2569,7 +2347,7 @@ def _rewrite_within_group(masked: str) -> str:
         dm = re.search(r"\s+(ASC|DESC)\s*$", order, re.IGNORECASE)
         desc = bool(dm and dm.group(1).upper() == "DESC")
         key = (order[: dm.start()] if dm else order).strip()
-        args = _split_args(masked[m.end() : close - 1])
+        args = [a.strip() for a in split_top(masked[m.end() : close - 1], ",")]
         out.append(masked[pos : m.start()])
         out.append(_lower_within_group(m.group(1).upper(), args, key, desc))
         pos = wg_close
@@ -2584,16 +2362,7 @@ def _term_start(s: str, i: int) -> int:
     while j > 0 and s[j - 1].isspace():
         j -= 1
     if j > 0 and s[j - 1] == ")":
-        depth, k = 0, j - 1
-        while k >= 0:
-            if s[k] == ")":
-                depth += 1
-            elif s[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
-        j = max(k, 0)
+        j = max(match_backward(s, j), 0)
     while j > 0 and (s[j - 1].isalnum() or s[j - 1] in "_.\x00"):
         j -= 1
     return j
@@ -2640,14 +2409,7 @@ def _rewrite_subscripts(masked: str) -> str:
                         start = cm.start()
                         break
             term = masked[start:j]
-        depth, k = 1, idx + 1
-        while k < len(masked) and depth:
-            c = masked[k]
-            if c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-            k += 1
+        k = match_forward(masked, idx + 1)
         inner = masked[idx + 1 : k - 1]
         # Spark's try_element_at still errors on index 0 and reads negative
         # indices from the END — both meaningless in Phoenix (NULL); guard
@@ -2685,7 +2447,7 @@ def _rewrite_quantified(masked: str) -> str:
         if not m:
             out.append(masked[pos:])
             return "".join(out)
-        close = _match_paren(masked, m.end())
+        close = match_forward(masked, m.end())
         # nested quantified comparisons inside the subquery/array operand
         # must rewrite too (HashJoinMoreIT.testSubqueryWithoutData nests
         # `> ALL` and `< ANY` inside an `= ANY` subquery)
@@ -2759,21 +2521,10 @@ _OB_END_RE = re.compile(
 def _rewrite_invert_orderby(masked: str) -> str:
     if not re.search(r"\bINVERT\s*\(", masked, re.IGNORECASE):
         return masked
-    spans = []
-    for m in re.finditer(r"\bORDER\s+BY\b", masked, re.IGNORECASE):
-        i, depth = m.end(), 0
-        while i < len(masked):
-            c = masked[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and _OB_END_RE.match(masked, i):
-                break
-            i += 1
-        spans.append((m.end(), i))
+    spans = [
+        (m.end(), find_top(masked, _OB_END_RE, m.end()))
+        for m in re.finditer(r"\bORDER\s+BY\b", masked, re.IGNORECASE)
+    ]
     inv = re.compile(r"\bINVERT\s*\(", re.IGNORECASE)
     for start, end in reversed(spans):
         clause = masked[start:end]
@@ -2783,7 +2534,7 @@ def _rewrite_invert_orderby(masked: str) -> str:
             if im is None:
                 pieces.append(clause[pos:])
                 break
-            close = _match_paren(clause, im.end())
+            close = match_forward(clause, im.end())
             inner = clause[im.end() : close - 1]
             dm = re.match(r"\s*(ASC|DESC)\b", clause[close:], re.IGNORECASE)
             if dm:
@@ -2812,18 +2563,13 @@ def _rewrite_code_masked(masked: str, unmask) -> str:
             out.append(masked[pos:])
             return "".join(out)
         out.append(masked[pos : m.start()])
-        i, depth = m.end(), 1
-        while i < len(masked) and depth:
-            c = masked[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
+        i = match_forward(masked, m.end())
+        argtext = masked[m.end() : i - 1]
         # recurse so nested calls inside arguments are rewritten too
         args = [
-            unmask(_rewrite_code_masked(a, unmask))
-            for a in _split_args(masked[m.end() : i - 1])
+            unmask(_rewrite_code_masked(a.strip(), unmask))
+            for a in split_top(argtext, ",")
+            if argtext.strip()
         ]
         out.append(_rewrite_call(m.group(1), args))
         pos = i
@@ -2868,6 +2614,9 @@ _KIND_RE = [
 
 
 def classify(sql: str) -> Statement:
+    """Route on the first code token, as the grammar does: leading comments
+    are skipped, and ``Statement.text`` starts at that token."""
+    sql = sql[code_start(sql) :]
     for kind, rx in _KIND_RE:
         if rx.match(sql):
             return Statement(kind, sql)

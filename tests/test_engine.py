@@ -103,6 +103,13 @@ def test_parse_upsert_values_on_duplicate():
     assert up.on_duplicate == {"n": "n + 1"}
 
 
+def test_parse_delete_clause_keywords_inside_quoted_identifier():
+    from phoenix_spark.ddl import parse_delete
+
+    d = parse_delete('DELETE FROM t WHERE "ORDER BY" = 1 ORDER BY k LIMIT 2')
+    assert (d.where, d.order_by, d.limit) == ('"ORDER BY" = 1', "k", 2)
+
+
 # ---------------------------------------------------------------------------
 # Engine end-to-end (Spark)
 # ---------------------------------------------------------------------------
@@ -356,6 +363,32 @@ def test_script_multi_statement(engine):
     )
     assert results[1] == 1
     assert [(r.k, r.v) for r in results[2].collect()] == [(1, "a;b")]
+    # the apostrophe in a comment opens no literal, so the ';' still splits
+    results = engine.script(
+        "-- don't split\nUPSERT INTO sc VALUES (3, 'c');\nSELECT COUNT(*) FROM sc"
+    )
+    assert results[0] == 1
+    assert results[1].collect()[0][0] == 2
+
+
+def test_statement_leading_comment_routes_by_first_token(engine):
+    engine.sql("CREATE TABLE kv (k BIGINT NOT NULL, v VARCHAR, CONSTRAINT pk PRIMARY KEY (k))")
+    assert engine.sql("-- load\nUPSERT INTO kv VALUES (1, 'a')") == 1
+    assert engine.sql("/* c */ UPSERT INTO kv VALUES (2, 'b')") == 1
+    got = {r.k: r.v for r in engine.table("kv").collect()}
+    assert got == {1: "a", 2: "b"}
+
+
+def test_quoted_identifier_with_separator_round_trip(engine):
+    # the ',' inside "a,b" is part of the name, not a column-list separator
+    engine.sql(
+        'CREATE TABLE qc ("a,b" BIGINT NOT NULL, v VARCHAR, '
+        'CONSTRAINT pk PRIMARY KEY ("a,b"))'
+    )
+    assert engine.sql("""UPSERT INTO qc ("a,b", v) VALUES (1, 'x')""") == 1
+    assert [tuple(r) for r in engine.sql('SELECT "a,b", v FROM qc').collect()] == [
+        (1, "x")
+    ]
 
 
 def test_bulk_load_json(engine, tmp_path):

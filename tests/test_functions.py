@@ -8,6 +8,9 @@ PHOENIX_ROW_TIMESTAMP, PARTITION_ID)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from phoenix_spark.functions import (
@@ -25,10 +28,16 @@ from phoenix_spark.functions import (
 from phoenix_spark.sqlfront import translate_phoenix_sql
 
 
+_PHOENIX_CSV = "/root/reference/docs/phoenix.csv"
+
+
+@pytest.mark.skipif(
+    not os.path.exists(_PHOENIX_CSV), reason="reference docs/phoenix.csv not present"
+)
 def test_registry_covers_all_documented_functions():
     import csv
 
-    rows = csv.reader(open("/root/reference/docs/phoenix.csv"))
+    rows = csv.reader(open(_PHOENIX_CSV))
     documented = {r[1] for r in rows if len(r) > 1 and r[0].startswith("Functions")}
     assert documented <= set(FUNCTIONS), sorted(documented - set(FUNCTIONS))
 

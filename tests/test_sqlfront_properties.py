@@ -12,7 +12,8 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from phoenix_spark.sqlfront import RENAME, segments, translate_phoenix_sql
+from phoenix_spark.sqlfront import RENAME, translate_phoenix_sql
+from phoenix_spark.sqllex import segments
 
 _PLAIN = st.text(
     alphabet=st.characters(
