@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from phoenix_spark import ddl as D
 from phoenix_spark import indexes as IX
 from phoenix_spark.catalog import Catalog
-from phoenix_spark.mutations import ManagedTable
+from phoenix_spark.mutations import _DEL_COL, ManagedTable, key_join
 from phoenix_spark.sqlfront import classify, translate_phoenix_sql
 from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, unmask
 
@@ -1285,9 +1285,9 @@ class Engine:
         target = self.table(table)
         if not set(base.pk) <= set(target.schema.fieldNames()):
             return text
-        # the _sync_indexes shape: narrow index scan answers the probe, the
-        # (small) matching-PK set broadcasts into a semi-join against the
-        # base — the base is filtered by the join, never re-scanned per key
+        # narrow index scan answers the probe, the (small) matching-PK set
+        # broadcasts into a semi-join against the base — the base is
+        # filtered by the join, never re-scanned per key
         probe = self.table(d.name).filter(
             F.expr(self._translate_pred(probe_pred, d.table))
         )
@@ -1453,17 +1453,13 @@ class Engine:
             if "props" not in base_mt.schema.fieldNames():
                 from pyspark.sql import types as T
 
-                meta = base_mt.meta
-                schema = T.StructType.fromJson(meta["schema"]).add(
-                    "props", T.StringType()
-                )
-                meta["schema"] = schema.jsonValue()
+                base_mt.add_column("props", T.StringType())
                 # HIDDEN: the base's declared columns must not change when a
                 # view adds columns — the overflow is dropped from default
                 # projections (see table())
+                meta = base_mt.meta
                 meta["props"]["HIDDEN_OVERFLOW"] = True
-                with open(base_mt.meta_path, "w") as f:
-                    json.dump(meta, f, indent=1)
+                base_mt._save_meta(meta)
                 self._register(base_mt.name)
         self._views[cv.name] = (cv.parent, cv.where, cv.columns or {})
         if self.tenant_id is not None:
@@ -1857,6 +1853,8 @@ class Engine:
                 for c in cols
             ]
         )
+        nn = base.meta.get("not_null")
+        required = base.pk if nn is None else nn
         imt = ManagedTable.create(
             self.spark,
             self.warehouse,
@@ -1865,14 +1863,12 @@ class Engine:
             pk=d.key + [c for c in base.pk if c not in d.key],
             sort_orders=d.sort_orders,
             props={"INDEX_OF": d.table, "WRITE_SORT": d.key},
+            # index key columns keep the base's nullability: only the base
+            # row key's NOT NULL columns are required
+            not_null=[c for c in base.pk if c in required],
         )
         # initial build: one distributed projection scan of the base table
-        # (functional keys materialized; partial index: only rows satisfying
-        # the predicate are projected)
-        build = self._with_index_exprs(source, d)
-        if d.where is not None:
-            build = build.filter(self._translate_pred(d.where, d.table))
-        imt.upsert_df(build.select(*cols))
+        imt.upsert_df(self._index_rows(base.read(), d, chain, base.pk))
         self._indexes[d.name] = d
         self._save_indexes()
         self._register(d.name)
@@ -1944,11 +1940,31 @@ class Engine:
                 df = df.drop(*excluded)
         return df
 
-    def _sync_indexes(self, table: str, touched_pks: DataFrame, prev_ts: int) -> None:
-        """IndexMaintainer delete+put pair for one committed mutation batch:
-        tombstone the pre-image index rows of the touched base PKs, then
-        upsert their post-state projections.  Both sides are broadcast
-        semi-joins of the touched-PK set — never a full index rewrite."""
+    def _index_rows(
+        self, df: DataFrame, d: "IX.IndexDef", chain: list | None, pk: list[str]
+    ) -> DataFrame:
+        """IndexMaintainer.buildRowKey analogue: the index rows of base rows
+        ``df`` — view chain replayed, functional keys materialized, and for a
+        partial index only the rows satisfying its predicate."""
+        if chain is not None:
+            df = self._apply_view_chain(df, chain)
+        df = self._with_index_exprs(df, d)
+        if d.where is not None:
+            df = df.filter(self._translate_pred(d.where, d.table))
+        return df.select(*d.covered(pk))
+
+    def _sync_indexes(self, table: str, ts: int) -> None:
+        """Maintain every index of ``table`` for its commit at ``ts`` — the
+        IndexRegionObserver shape: read the batch's current row states once,
+        derive each index's deletes and puts from pre- and post-image.
+
+        The commit's segment holds whole rows for exactly the touched keys,
+        so it is the post-image (tombstones for deleted rows).  The
+        pre-image is a snapshot read at ``ts - 1`` scoped to those keys.
+        Each index gets one segment: the post-image's index rows, plus
+        tombstones for pre-image index rows that are not re-put (a row
+        whose key or predicate outcome changed).  A re-put key gets no
+        tombstone: both would carry the same ts and tie."""
         table = table.split(".")[-1].lower()
         work: list[tuple["IX.IndexDef", list | None]] = []
         for d in self._indexes.values():
@@ -1968,35 +1984,21 @@ class Engine:
         if not work:
             return
         base = self.managed(table)
-        keys = F.broadcast(touched_pks.select(*base.pk).distinct())
+        commit = base.read_commit(ts)
+        post = commit.filter(~F.col(_DEL_COL)).drop(_DEL_COL)
+        pre = base.read(as_of=ts - 1, keys=commit)
         for d, chain in work:
             imt = self.managed(d.name)
-            cols = d.covered(base.pk)
-            pred = (
-                self._translate_pred(d.where, d.table)
-                if d.where is not None
-                else None
+            puts = self._index_rows(post, d, chain, base.pk)
+            gone = key_join(
+                self._index_rows(pre, d, chain, base.pk), puts, imt.pk, "left_anti"
             )
-            if prev_ts >= 1:
-                stale = base.read(as_of=prev_ts).join(keys, base.pk, "semi")
-                if chain is not None:
-                    stale = self._apply_view_chain(stale, chain)
-                stale = self._with_index_exprs(stale, d)
-                if pred is not None:
-                    # only rows that satisfied the predicate were indexed
-                    stale = stale.filter(pred)
-                imt._append_segment(
-                    stale.select(*cols), imt._next_ts(), deleted=True
-                )
-            post = base.read().join(keys, base.pk, "semi")
-            if chain is not None:
-                post = self._apply_view_chain(post, chain)
-            post = self._with_index_exprs(post, d)
-            if pred is not None:
-                # a row updated OUT of the predicate leaves the index (its
-                # pre-image was tombstoned above and nothing re-enters)
-                post = post.filter(pred)
-            imt.upsert_df(post.select(*cols))
+            imt._append_segment(
+                puts.withColumn(_DEL_COL, F.lit(False)).unionByName(
+                    gone.withColumn(_DEL_COL, F.lit(True))
+                ),
+                imt._next_ts(),
+            )
             self._register(d.name)
 
     def _with_index_exprs(self, df: DataFrame, d: "IX.IndexDef") -> DataFrame:
@@ -2166,11 +2168,12 @@ class Engine:
         """ALTER TABLE t ADD|DROP COLUMN ... — metadata-only, like the
         reference (grammar PhoenixSQL.g:774-778; MetaDataClient.addColumn):
         existing segments are untouched; reads project the evolved schema
-        (missing columns read as NULL via the cast-projection in
-        ManagedTable.read).  ALTER INDEX i ON t <state> (grammar :725,
-        PIndexState) drives the index lifecycle: DISABLE stops maintenance
-        and substitution, UNUSABLE stops substitution only, REBUILD
-        re-materializes from the current base state and reactivates."""
+        (missing columns read as NULL; a re-added column gets a fresh
+        physical name, ManagedTable.add_column).  ALTER INDEX i ON t <state>
+        (grammar :725, PIndexState) drives the index lifecycle: DISABLE
+        stops maintenance and substitution, UNUSABLE stops substitution
+        only, REBUILD re-materializes from the current base state and
+        reactivates."""
         am = self._ALTER_INDEX_RE.match(text)
         if am:
             if_exists, iname, _table, verb = (
@@ -2196,15 +2199,8 @@ class Engine:
                 start = _dt.datetime.now().isoformat()
                 base, chain = self._index_base(d.table)
                 imt = self.managed(d.name)
-                cols = d.covered(base.pk)
                 imt.delete_where(None)
-                build = base.read()
-                if chain is not None:
-                    build = self._apply_view_chain(build, chain)
-                build = self._with_index_exprs(build, d)
-                if d.where is not None:
-                    build = build.filter(self._translate_pred(d.where, d.table))
-                imt.upsert_df(build.select(*cols))
+                imt.upsert_df(self._index_rows(base.read(), d, chain, base.pk))
                 imt.compact()
                 self._register(d.name)
                 d.state = "ACTIVE"
@@ -2288,27 +2284,16 @@ class Engine:
                 if not _:
                     raise ValueError(f"bad table property {item!r}")
                 meta.setdefault("props", {})[k.strip().upper()] = v.strip().strip("'")
-            with open(mt.meta_path, "w") as f:
-                json.dump(meta, f, indent=1)
+            mt._save_meta(meta)
             return 0
-        meta = mt.meta
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(meta["schema"])
         if op == "ADD":
             from phoenix_spark.types import parse_type
 
             col, typ = rest.split(None, 1)
             typ = re.sub(r"\bNOT\s+NULL\b|\bNULL\b", "", typ, flags=re.I)
-            schema = schema.add(col.lower(), parse_type(typ.strip()))
+            mt.add_column(col.lower(), parse_type(typ.strip()))
         else:
-            col = rest.strip().strip('"').lower()
-            if col in mt.pk:
-                raise ValueError("cannot drop a PK column")
-            schema = T.StructType([f for f in schema.fields if f.name != col])
-        meta["schema"] = schema.jsonValue()
-        with open(mt.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+            mt.drop_column(rest.strip().strip('"').lower())
         self._register(name)
         return 0
 
@@ -2409,8 +2394,7 @@ class Engine:
         }
         meta = mt.meta
         meta["stats"] = stats
-        with open(mt.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        mt._save_meta(meta)
         return stats
 
     def _exec_update_stats(self, text: str) -> int:
@@ -2796,7 +2780,7 @@ class Engine:
         from phoenix_spark.types import parse_type
 
         base_by_name = {f.name: f for f in mt.schema.fields}
-        prev_ts = mt._next_ts() - 1  # for index maintenance pre-images
+        ts = mt._next_ts()  # this statement's commit (index maintenance)
         if up.select is not None:
             src = self._exec_select(up.select).toDF(*cols)
             for c in dyn:
@@ -2879,18 +2863,23 @@ class Engine:
             src = self.spark.createDataFrame(rows, schema=src_schema)
         listed = set(cols) - set(dyn)
         unlisted = [c for c in mt.schema.fieldNames() if c not in listed]
-        if unlisted:
+        if unlisted and up.on_duplicate is None:
             # Partial column list — Phoenix writes only the listed CELLS
             # (UpsertCompiler builds one Put per listed column): unlisted
             # columns of existing rows are preserved, brand-new rows read
             # NULL.  The change-log stores whole rows, so the write is a
-            # read-modify-write: left-join the incoming rows against current
-            # state by PK and take unlisted values from the existing row.
-            # At scale this is one PK-join of batch × table — the same cost
-            # the reference pays server-side (its RegionServer reads the row
-            # to merge cells on every partial upsert).
-            cur = mt.read().select(*mt.pk, *unlisted)
-            src = src.join(cur, on=list(mt.pk), how="left")
+            # read-modify-write: left-join the incoming rows against the
+            # current state of their own keys and take unlisted values from
+            # the existing row — the read the reference's RegionServer makes
+            # to merge cells on every partial upsert.  ON DUPLICATE KEY needs
+            # no merge here: upsert_df keeps an existing row's cells itself,
+            # and a new row's unlisted cells are NULL either way.
+            cur = mt.read(keys=src).select(*mt.pk, *unlisted)
+            src = key_join(src, cur, mt.pk, "left")
+        elif unlisted:
+            src = src.withColumns(
+                {c: F.lit(None).cast(base_by_name[c].dataType) for c in unlisted}
+            )
         if dyn:
             # merge the typed dynamic values into the JSON overflow column,
             # preserving unrelated keys of an existing row's JSON
@@ -2956,9 +2945,8 @@ class Engine:
             else:
                 n = len(up.values)
                 mt.upsert_df(df, on_duplicate=up.on_duplicate)
-        written = df
         self._register(up.table)
-        self._sync_indexes(up.table, written.select(*mt.pk), prev_ts)
+        self._sync_indexes(up.table, ts)
         if up.returning:
             # RETURNING * (grammar :901): the written slice as full rows.
             # With ON DUPLICATE KEY the reference returns the POST-operation
@@ -2968,12 +2956,8 @@ class Engine:
             # stored rows for the incoming PKs rather than echoing the
             # incoming values.
             if up.on_duplicate is not None:
-                return (
-                    mt.read()
-                    .join(df.select(*mt.pk), on=list(mt.pk), how="left_semi")
-                    .select(*mt.schema.fieldNames())
-                )
-            return written.select(*mt.schema.fieldNames())
+                return mt.read(keys=df)
+            return df
         return n
 
     def _exec_delete(self, text: str) -> DataFrame | int:
@@ -3010,28 +2994,14 @@ class Engine:
             )
         cond = translate_phoenix_sql(dl.where) if dl.where else None
         order = translate_phoenix_sql(dl.order_by) if dl.order_by else None
-        has_idx = any(
-            d.table == dl.table.split(".")[-1].lower() for d in self._indexes.values()
-        )
-        victims = None
-        if dl.returning or has_idx:
-            if dl.limit is not None or order:
-                # the RETURNING/index paths capture their own victim slice;
-                # re-deriving the top-N cut twice risks divergence under
-                # ties — refuse loudly rather than desync an index
-                raise ValueError(
-                    "DELETE ... ORDER BY/LIMIT is not supported with "
-                    "RETURNING or on an indexed table"
-                )
-            # capture the affected slice against the pre-delete segment list
-            # (segments are immutable; the tombstone commit adds new files)
-            victims = mt.read().filter(cond) if cond else mt.read()
-        prev_ts = mt._next_ts() - 1
+        ts = mt._next_ts()
         n = mt.delete_where(cond, order_by=order, limit=dl.limit)
         self._register(dl.table)
-        if has_idx:
-            self._sync_indexes(dl.table, victims.select(*mt.pk), prev_ts)
-        return victims if dl.returning else n
+        self._sync_indexes(dl.table, ts)
+        if dl.returning:
+            # the tombstones are the exact victim rows, top-N cut included
+            return mt.read_commit(ts).drop(_DEL_COL)
+        return n
 
     def _eval_literal(self, lit: str):
         """Evaluate one UPSERT VALUES literal driver-side (UpsertCompiler's

@@ -8,8 +8,9 @@ per (rowkey, timestamp) natively.
 
 The Spark-native analogue is an append-only **change log**: every commit
 writes one immutable parquet segment stamped with a monotonically increasing
-``_mutation_ts``; deletes append tombstones (``_deleted = true``).  The table
-read is the latest-wins compaction::
+``_mutation_ts``; deletes append tombstones (``_deleted = true``).  A commit's
+segment holds whole rows, so it is the post-image of exactly the keys the
+statement touched.  The table read is the latest-wins compaction::
 
     row_number() OVER (PARTITION BY pk ORDER BY _mutation_ts DESC) = 1
     ... AND NOT _deleted
@@ -17,12 +18,24 @@ read is the latest-wins compaction::
 Scale design (100 TB):
   * segments are immutable + append-only — writers never rewrite data, and a
     single atomic rename publishes a commit (object-store friendly);
-  * the compaction window shuffles on the PK — exactly once, and only while
-    un-compacted segments exist: ``compact()`` folds history into one base
-    segment, after which reads take the single-segment fast path (plain scan,
-    zero shuffle);
+  * every segment is read with the stored schema (``meta.json`` plus the two
+    change-log columns), so building a read launches no job and no footer
+    is opened until an action;
+  * a DML statement reads only its own keys: ``read(keys=...)`` semi-joins
+    the raw segment union with the touched keys *before* the window (valid
+    because the window partitions on exactly the PK), so the window shuffles
+    the touched keys' versions, never the table.  Index maintenance takes
+    the post-image from the statement's own segment (``read_commit``) and the
+    pre-image from a key-scoped snapshot read;
+  * ``compact()`` folds history into one base segment, after which reads
+    take the single-segment fast path (plain scan, zero shuffle);
   * snapshot reads (time travel) prune whole segments by the commit ts in
     the filename — no data read from newer segments.
+
+Columns carry a physical name in the segments.  It equals the logical name
+unless a dropped column is re-added: the re-added column gets a fresh
+physical name (``meta["physical"]``), so the dropped column's bytes never
+resurface — the analogue of Phoenix's column encoding.
 
 Single-writer batch semantics (no concurrent-commit arbitration) — the same
 scope Phoenix documents for its non-transactional tables (SURVEY §7 hard
@@ -45,6 +58,22 @@ from phoenix_spark.sqllex import split_top
 _TS_COL = "_mutation_ts"
 _DEL_COL = "_deleted"
 _SEG_RE = re.compile(r"seg-(\d{12})-")
+
+
+def _seg_ts(path: str) -> int:
+    return int(_SEG_RE.search(os.path.basename(path)).group(1))
+
+
+def key_join(left: DataFrame, right: DataFrame, pk: list[str], how: str) -> DataFrame:
+    """Join ``left`` to ``right`` on the PK columns with NULL-safe equality —
+    the latest-wins window groups NULL key components together, so key
+    matching must too.  Returns ``left``'s columns plus, for an outer join,
+    ``right``'s non-key columns."""
+    tmp = {c: f"__key_{c}" for c in pk}
+    r = right.withColumnsRenamed(tmp)
+    on = [F.col(c).eqNullSafe(F.col(t)) for c, t in tmp.items()]
+    out = left.join(r, on=on, how=how)
+    return out if how in ("left_semi", "left_anti") else out.drop(*tmp.values())
 
 
 class ManagedTable:
@@ -98,8 +127,7 @@ class ManagedTable:
             # fall back to treating every PK column as required)
             "not_null": not_null,
         }
-        with open(tbl.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        tbl._save_meta(meta)
         return tbl
 
     def drop(self) -> None:
@@ -113,12 +141,49 @@ class ManagedTable:
         shutil.rmtree(self.seg_dir, ignore_errors=True)
         os.makedirs(self.seg_dir, exist_ok=True)
 
+    def add_column(self, name: str, dtype: T.DataType) -> None:
+        """ALTER TABLE ADD (metadata-only).  A name some segment may
+        already hold — a dropped column's, or another column's physical
+        name — gets a fresh physical name, so old cells never read back
+        under the new column."""
+        meta = self.meta
+        schema = T.StructType.fromJson(meta["schema"])
+        phys = meta.get("physical", {})
+        taken = {phys.get(f.name, f.name).lower() for f in schema.fields}
+        taken |= {p.lower() for p in meta.get("retired", [])}
+        physical, n = name, 1
+        while physical.lower() in taken:
+            n += 1
+            physical = f"{name}_{n}"
+        if physical != name:
+            meta["physical"] = {**phys, name: physical}
+        meta["schema"] = schema.add(name, dtype).jsonValue()
+        self._save_meta(meta)
+
+    def drop_column(self, name: str) -> None:
+        """ALTER TABLE DROP (metadata-only): the column leaves the schema
+        and its physical name is retired for good."""
+        meta = self.meta
+        if name in meta["pk"]:
+            raise ValueError("cannot drop a PK column")
+        schema = T.StructType.fromJson(meta["schema"])
+        phys = meta.get("physical", {})
+        meta["retired"] = [*meta.get("retired", []), phys.pop(name, name)]
+        meta["schema"] = T.StructType(
+            [f for f in schema.fields if f.name != name]
+        ).jsonValue()
+        self._save_meta(meta)
+
     # -- metadata ----------------------------------------------------------
 
     @property
     def meta(self) -> dict:
         with open(self.meta_path) as f:
             return json.load(f)
+
+    def _save_meta(self, meta: dict) -> None:
+        with open(self.meta_path, "w") as f:
+            json.dump(meta, f, indent=1)
 
     @property
     def schema(self) -> T.StructType:
@@ -141,18 +206,60 @@ class ManagedTable:
         )
 
     def _next_ts(self) -> int:
-        best = 0
-        for p in self._segments():
-            m = _SEG_RE.search(os.path.basename(p))
-            if m:
-                best = max(best, int(m.group(1)))
-        return best + 1
+        return max((_seg_ts(p) for p in self._segments()), default=0) + 1
 
-    # -- write path --------------------------------------------------------
+    # -- stored layout -----------------------------------------------------
 
-    def _append_segment(self, df: DataFrame, ts: int, deleted: bool = False) -> int:
-        from pyspark.sql import types as _T
+    @staticmethod
+    def stored_schema(meta: dict) -> T.StructType:
+        """The segment schema: data columns under their physical names,
+        then the change-log columns."""
+        phys = meta.get("physical", {})
+        return T.StructType(
+            [
+                T.StructField(phys.get(f.name, f.name), f.dataType)
+                for f in T.StructType.fromJson(meta["schema"]).fields
+            ]
+            + [
+                T.StructField(_TS_COL, T.LongType()),
+                T.StructField(_DEL_COL, T.BooleanType()),
+            ]
+        )
 
+    @staticmethod
+    def logical(raw: DataFrame, meta: dict) -> DataFrame:
+        """Project stored rows onto the logical columns (physical names
+        mapped back, DEFAULTs applied) plus the change-log columns.
+        Schema evolution is metadata-only: a column an older segment lacks
+        reads NULL, and a dropped column is simply not projected."""
+        phys = meta.get("physical", {})
+        dfl = meta.get("defaults", {})
+        cols = []
+        for f in T.StructType.fromJson(meta["schema"]).fields:
+            c = F.col(phys.get(f.name, f.name))
+            if f.name in dfl:
+                # DefaultValueExpression: an absent (or explicitly nulled)
+                # cell reads as the declared default
+                c = F.coalesce(c, F.expr(dfl[f.name]).cast(f.dataType))
+            cols.append(c.alias(f.name))
+        return raw.select(*cols, _TS_COL, _DEL_COL)
+
+    def _scan(self, segs: list[str], meta: dict) -> DataFrame:
+        """Every stored row of ``segs`` (see ``logical``)."""
+        stored = self.stored_schema(meta)
+        if segs:
+            raw = self.spark.read.schema(stored).parquet(*segs)
+        else:
+            # limit(0) turns the empty frame into an empty LocalRelation, so
+            # the optimizer prunes joins against it (a table's first commit
+            # has an empty pre-image) instead of broadcasting the other side
+            raw = self.spark.createDataFrame([], schema=stored).limit(0)
+        return self.logical(raw, meta)
+
+    def _to_stored(self, df: DataFrame, ts: int, deleted: bool, meta: dict) -> DataFrame:
+        """Rows ready to write at ``ts``: typed, canonicalized, under their
+        physical names.  A ``_deleted`` column in ``df`` marks per-row
+        tombstones; otherwise every row is flagged ``deleted``."""
         # Phoenix stores the empty string as NULL — an empty byte array IS
         # the VARCHAR/CHAR null representation (PVarchar;
         # NullIT.testEmptyStringValue) — canonicalize at write time so every
@@ -163,12 +270,13 @@ class ManagedTable:
         # NULLABLE PK components legally hold null
         # (SkipScanQueryIT.testSkipScanFilterQuery upserts '' into a middle
         # nullable PK column).
-        nn = self.meta.get("not_null")
-        required = set(self.pk if nn is None else nn) & set(self.pk)
+        nn = meta.get("not_null")
+        required = set(meta["pk"] if nn is None else nn) & set(meta["pk"])
+        phys = meta.get("physical", {})
         cols = []
-        for f in self.schema.fields:
+        for f in T.StructType.fromJson(meta["schema"]).fields:
             c = F.col(f.name).cast(f.dataType)
-            if isinstance(f.dataType, _T.StringType):
+            if isinstance(f.dataType, T.StringType):
                 if f.name in required:
                     c = F.when(
                         c.isNull() | (c == ""),
@@ -180,10 +288,20 @@ class ManagedTable:
                     ).otherwise(c)
                 else:
                     c = F.nullif(c, F.lit(""))
-            cols.append(c.alias(f.name))
-        out = df.select(*cols).withColumns(
-            {_TS_COL: F.lit(ts).cast("long"), _DEL_COL: F.lit(deleted)}
+            cols.append(c.alias(phys.get(f.name, f.name)))
+        flag = F.col(_DEL_COL) if _DEL_COL in df.columns else F.lit(deleted)
+        return df.select(
+            *cols,
+            F.lit(ts).cast("long").alias(_TS_COL),
+            flag.cast("boolean").alias(_DEL_COL),
         )
+
+    # -- write path --------------------------------------------------------
+
+    def _append_segment(self, df: DataFrame, ts: int, deleted: bool = False) -> int:
+        meta = self.meta
+        out = self._to_stored(df, ts, deleted, meta)
+        phys = meta.get("physical", {})
         # Segment layout mirrors the reference's row-key order (SURVEY §1.1):
         #   * WRITE_SORT (secondary indexes): range-partition + sort by the
         #     index key — globally disjoint sorted files, the covered-probe
@@ -195,11 +313,12 @@ class ManagedTable:
         #     extra shuffle or the sampling re-read of the source that
         #     range partitioning would cost on every UPSERT (it would also
         #     double-fire observe() metrics — the single-pass count).
-        sort_cols = self.meta.get("props", {}).get("WRITE_SORT")
+        sort_cols = meta.get("props", {}).get("WRITE_SORT")
         if sort_cols:
+            sort_cols = [phys.get(c, c) for c in sort_cols]
             out = out.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
         else:
-            out = out.sortWithinPartitions(*self.pk)
+            out = out.sortWithinPartitions(*[phys.get(c, c) for c in meta["pk"]])
         path = os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
         out.write.mode("errorifexists").parquet(path)
         return ts
@@ -218,7 +337,7 @@ class ManagedTable:
         ``on_duplicate``:
           * None      — plain upsert (latest wins at read time; no read needed)
           * 'ignore'  — ON DUPLICATE KEY IGNORE: only rows whose PK is absent
-                        are appended (left-anti join against the current state)
+                        are appended
           * {col: expr} — ON DUPLICATE KEY UPDATE: expressions evaluated over
                         the EXISTING row's columns for matched PKs; unmatched
                         rows insert as given.  Values are SQL strings or
@@ -230,50 +349,56 @@ class ManagedTable:
                         (grammar :899,911): matched PKs update as above;
                         unmatched rows are DROPPED, never inserted
                         (IndexRegionObserver.java:2305-2311)
+
+        All three are one left join of the incoming rows against the current
+        rows of their own keys; they differ only in which rows they keep.
+        Returns the commit ts, except for IGNORE and UPDATE_ONLY, which
+        return the count of rows actually written, observed on the write
+        action itself (OnDuplicateKey2IT.testIgnoreReturnValue:112 pins 0 for
+        a fully-ignored upsert; the reference's IndexRegionObserver returns
+        no mutation for an UPDATE_ONLY on an absent PK).
         """
+        from pyspark.sql import Observation
+
+        from phoenix_spark.ddl import UpdateOnly
+
         ts = self._next_ts()
         if on_duplicate is None:
             return self._append_segment(df, ts)
-        current = self.read()
-        if on_duplicate == "ignore":
-            # count of rows actually INSERTED (existing PKs are ignored and
-            # report 0 — OnDuplicateKey2IT.testIgnoreReturnValue:112 pins
-            # executeUpdate returning 0 for a fully-ignored upsert),
-            # observed on the write action itself
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            fresh = df.join(current.select(self.pk), on=self.pk, how="left_anti")
-            self._append_segment(
-                fresh.observe(obs, F.count(F.lit(1)).alias("n")), ts
-            )
-            return int(obs.get["n"])
-        assert isinstance(on_duplicate, dict)
-        matched = current.join(df.select(self.pk), on=self.pk, how="left_semi")
-        updated = matched.withColumns(
-            {
-                col: expr if isinstance(expr, F.Column) else F.expr(expr)
-                for col, expr in on_duplicate.items()
-            }
+        pk, names = self.pk, self.schema.fieldNames()
+        incoming = df.select(*[F.col(c).alias(f"__in_{c}") for c in names])
+        current = self.read(keys=df).withColumn("__hit", F.lit(True))
+        joined = incoming.join(
+            current,
+            on=[F.col(f"__in_{c}").eqNullSafe(F.col(c)) for c in pk],
+            how="left",
         )
-        from phoenix_spark.ddl import UpdateOnly
-
-        if isinstance(on_duplicate, UpdateOnly):
-            # UPDATE_ONLY: unmatched incoming rows vanish — no insert.
-            # Return the count of rows ACTUALLY written (observed on the
-            # write action itself, not a separate scan) so executeUpdate
-            # counts exclude dropped absent-PK rows (r7 advice fix; the
-            # reference's IndexRegionObserver returns no mutation for an
-            # absent PK, so the client counts 0 for it).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            self._append_segment(
-                updated.observe(obs, F.count(F.lit(1)).alias("n")), ts
-            )
-            return int(obs.get["n"])
-        fresh = df.join(current.select(self.pk), on=self.pk, how="left_anti")
-        return self._append_segment(updated.unionByName(fresh), ts)
+        hit = F.col("__hit").isNotNull()
+        sets: dict = {}
+        if on_duplicate == "ignore":
+            joined = joined.filter(~hit)
+        else:
+            sets = {
+                c: e if isinstance(e, F.Column) else F.expr(e)
+                for c, e in on_duplicate.items()
+            }
+            if isinstance(on_duplicate, UpdateOnly):
+                joined = joined.filter(hit)
+        out = joined.select(
+            *[
+                F.col(f"__in_{c}").alias(c)
+                if c in pk
+                else F.when(hit, sets.get(c, F.col(c)))
+                .otherwise(F.col(f"__in_{c}"))
+                .alias(c)
+                for c in names
+            ]
+        )
+        obs = Observation()
+        self._append_segment(out.observe(obs, F.count(F.lit(1)).alias("n")), ts)
+        if isinstance(on_duplicate, dict) and not isinstance(on_duplicate, UpdateOnly):
+            return ts
+        return int(obs.get["n"])
 
     def upsert_rows(self, rows: list[dict], on_duplicate: str | dict | None = None) -> int:
         """UPSERT VALUES: literal rows (partial columns allowed → NULL fill).
@@ -299,9 +424,12 @@ class ManagedTable:
         tombstone write itself).
 
         Mirrors DeleteCompiler's "run a query for the row keys, emit delete
-        mutations" shape — the scan is distributed, only tombstone PK rows
-        are written.  The ordered LIMIT form is DeleteCompiler's top-N
-        delete (TopNIT.testTopNDelete): sort, cut, tombstone.
+        mutations" shape — the scan is distributed, only tombstone rows are
+        written.  The ordered LIMIT form is DeleteCompiler's top-N delete
+        (TopNIT.testTopNDelete): sort, cut, tombstone.  The tombstones are
+        whole rows, so the commit's segment (``read_commit``) is the exact
+        victim set for RETURNING and index maintenance.  A predicate on PK
+        columns only is pushed below the latest-wins window by Catalyst.
         """
         from pyspark.sql import Observation
 
@@ -309,13 +437,11 @@ class ManagedTable:
         cur = self.read()
         victims = cur.filter(condition) if condition is not None else cur
         if order_by:
-            import re as _re
-
             sort_cols = []
             for item in split_top(order_by, ","):
-                m = _re.match(
+                m = re.match(
                     r"(.*?)\s*(ASC|DESC)?\s*(?:NULLS\s+(FIRST|LAST))?\s*$",
-                    item.strip(), _re.I | _re.S,
+                    item.strip(), re.I | re.S,
                 )
                 col = F.expr(m.group(1))
                 desc = (m.group(2) or "").upper() == "DESC"
@@ -350,16 +476,19 @@ class ManagedTable:
         stays uniform; the write lands in a temp dir and is published by a
         single atomic rename before the superseded segments are removed.
         """
+        meta = self.meta
         ts = self._next_ts()
-        snap = self.read().withColumns(
-            {_TS_COL: F.lit(ts).cast("long"), _DEL_COL: F.lit(False)}
-        )
+        snap = self._to_stored(self.read(), ts, False, meta)
         # Compaction is where the GLOBAL sort pays off: one range shuffle
         # rewrites the whole history as disjoint sorted files (the sampling
         # pass is amortized over the full rewrite), so the single-segment
         # fast path afterwards serves PK scans with maximal row-group
         # pruning.
-        sort_cols = self.meta.get("props", {}).get("WRITE_SORT") or self.pk
+        phys = meta.get("physical", {})
+        sort_cols = [
+            phys.get(c, c)
+            for c in meta.get("props", {}).get("WRITE_SORT") or meta["pk"]
+        ]
         snap = snap.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
         tmp = os.path.join(self.dir, f"_compact-{uuid.uuid4().hex[:8]}.parquet")
         snap.write.mode("errorifexists").parquet(tmp)
@@ -374,53 +503,48 @@ class ManagedTable:
     # -- read path ---------------------------------------------------------
 
     def read(
-        self, as_of: int | None = None, with_row_timestamp: bool = False
+        self,
+        as_of: int | None = None,
+        with_row_timestamp: bool = False,
+        keys: DataFrame | None = None,
     ) -> DataFrame:
         """Latest-wins compacted view (optionally AS OF a mutation ts — the
         TableSnapshotResultIterator analogue).  ``with_row_timestamp``
         exposes the commit ts as ``phoenix_row_timestamp`` (the
-        PhoenixRowTimestampFunction analogue)."""
+        PhoenixRowTimestampFunction analogue).  ``keys`` (a frame holding
+        the PK columns of one statement's rows) scopes the read to those
+        keys: a broadcast semi-join on the raw segment rows, before the
+        window, so only their versions are shuffled."""
+        meta = self.meta
         segs = self._segments()
         if as_of is not None:
-            segs = [
-                p
-                for p in segs
-                if int(_SEG_RE.search(os.path.basename(p)).group(1)) <= as_of
-            ]
-        if not segs:
-            return self.spark.createDataFrame([], schema=self.schema)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*segs)
-        # Schema evolution (ALTER TABLE ADD COLUMN is metadata-only): columns
-        # missing from old segments read as NULL; dropped columns are simply
-        # not projected.
-        data_cols = []
-        dfl = self.meta.get("defaults", {})
-        for f in self.schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            if f.name in dfl:
-                # DefaultValueExpression: an absent (or explicitly nulled)
-                # cell reads as the declared default
-                df = df.withColumn(
-                    f.name,
-                    F.coalesce(
-                        F.col(f.name), F.expr(dfl[f.name]).cast(f.dataType)
-                    ),
-                )
-            data_cols.append(f.name)
+            segs = [p for p in segs if _seg_ts(p) <= as_of]
+        df = self._scan(segs, meta)
+        if keys is not None:
+            keys = F.broadcast(keys.select(*meta["pk"]))
+            df = key_join(df, keys, meta["pk"], "left_semi")
+        data_cols = [f["name"] for f in meta["schema"]["fields"]]
         if with_row_timestamp:
             data_cols.append("phoenix_row_timestamp")
             df = df.withColumn("phoenix_row_timestamp", F.col(_TS_COL))
-        if len(segs) == 1:
+        if len(segs) <= 1:
             # Fast path: a single segment holds no superseded versions; only
             # tombstones (rare in a fresh segment) need filtering.
             return df.filter(~F.col(_DEL_COL)).select(*data_cols)
-        w = Window.partitionBy(*self.pk).orderBy(F.col(_TS_COL).desc())
+        w = Window.partitionBy(*meta["pk"]).orderBy(F.col(_TS_COL).desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & ~F.col(_DEL_COL))
             .select(*data_cols)
         )
+
+    def read_commit(self, ts: int) -> DataFrame:
+        """The rows committed at ``ts``: the data columns plus ``_deleted``.
+        One statement commits one segment of whole rows, so this is the
+        statement's post-image, with a tombstone per deleted row."""
+        meta = self.meta
+        segs = [p for p in self._segments() if _seg_ts(p) == ts]
+        return self._scan(segs, meta).drop(_TS_COL)
 
     # -- CDC surface (SURVEY §2.11) ---------------------------------------
 
@@ -435,12 +559,14 @@ class ManagedTable:
         segs = self._segments()
         if not segs:
             raise ValueError("no changes")
-        df = self.spark.read.parquet(*segs).filter(F.col(_TS_COL) > since)
-        data_cols = self.schema.fieldNames()
-        w = Window.partitionBy(*self.pk).orderBy(F.col(_TS_COL).asc())
+        meta = self.meta
+        df = self._scan(segs, meta).filter(F.col(_TS_COL) > since)
+        pk = meta["pk"]
+        data_cols = [f["name"] for f in meta["schema"]["fields"]]
+        w = Window.partitionBy(*pk).orderBy(F.col(_TS_COL).asc())
         img = F.struct(*[F.col(c) for c in data_cols])
         out = df.select(
-            *self.pk,
+            *pk,
             F.col(_TS_COL).alias("change_ts"),
             F.when(F.col(_DEL_COL), F.lit("DELETE")).otherwise(F.lit("UPSERT")).alias(
                 "change_op"
@@ -449,7 +575,7 @@ class ManagedTable:
             F.when(~F.col(_DEL_COL), img).alias("post_image"),
         )
         if scope == "PRE":
-            return out.select(*self.pk, "change_ts", "change_op", "pre_image")
+            return out.select(*pk, "change_ts", "change_op", "pre_image")
         if scope == "POST":
-            return out.select(*self.pk, "change_ts", "change_op", "post_image")
+            return out.select(*pk, "change_ts", "change_op", "post_image")
         return out

@@ -132,6 +132,8 @@ class Registry:
 # to an RDD (~0.1-0.9 s of driver time per fresh DataFrame object — measured),
 # but the answer depends only on the scanned files, so cache it per file set.
 _SPLIT_COUNT_CACHE: dict[tuple[str, ...], int] = {}
+# spread()'s size cap: one round-robin partition per this many input bytes
+_SPREAD_CHUNK = 128 * 1024
 
 
 def spread(spark, df):
@@ -153,11 +155,11 @@ def spread(spark, df):
     of Python round-trip wait on mapInArrow stages — dwarfed the per-row
     work (CPU for an identical query measured 9.5 s at 132 tasks vs 1.8 s
     at 36, scripts/profile_r09.py notes).  The target is therefore capped
-    at one partition per SPARK_GRAFT_SPREAD_CHUNK_KB (default 128 KiB) of
-    compressed input, so tiny inputs get a handful of tasks, 10x data gets
-    proportionally more, and at-scale inputs keep the no-op branch.  When
-    file sizes are unavailable (non-local storage) the old
-    cores-wide behavior is kept.
+    at one partition per ``_SPREAD_CHUNK`` (128 KiB) of compressed input,
+    so tiny inputs get a handful of tasks, 10x data gets proportionally
+    more, and at-scale inputs keep the no-op branch.  When the source has
+    no file list, or file sizes are unavailable (non-local storage), the
+    cores-wide target is kept.
     """
     target = spark.sparkContext.defaultParallelism
     try:
@@ -175,13 +177,14 @@ def spread(spark, df):
         return df
     import os  # noqa: PLC0415
 
-    chunk = int(os.environ.get("SPARK_GRAFT_SPREAD_CHUNK_KB", "128")) * 1024
-    if key:  # no file list (non-file source) -> keep the cores-wide target
+    # only a file-backed source is size-capped; a source without a file list
+    # keeps the cores-wide target
+    if key:
         try:
             total = sum(
                 os.path.getsize(p.removeprefix("file:")) for p in key
             )
-            target = max(1, min(target, -(-total // chunk)))
+            target = max(1, min(target, -(-total // _SPREAD_CHUNK)))
         except OSError:
             pass  # unknown sizes: keep the cores-wide target
     if n >= target:

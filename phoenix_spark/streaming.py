@@ -34,14 +34,14 @@ def stream_changes(spark: SparkSession, table: ManagedTable) -> DataFrame:
     (Pre-images need cross-commit state and belong to the batch
     ``ManagedTable.changes`` / ``apply_changes`` path.)
     """
-    schema = table.schema.add(_TS_COL, "long").add(_DEL_COL, "boolean")
+    meta = table.meta
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ManagedTable.stored_schema(meta))
         .option("recursiveFileLookup", "true")
         .parquet(table.seg_dir)
     )
-    return raw.select(
-        *table.schema.fieldNames(),
+    return ManagedTable.logical(raw, meta).select(
+        *[f["name"] for f in meta["schema"]["fields"]],
         F.col(_TS_COL).alias("change_ts"),
         F.when(F.col(_DEL_COL), F.lit("DELETE")).otherwise(F.lit("UPSERT")).alias(
             "change_op"
@@ -77,7 +77,7 @@ def apply_changes(
             target.upsert_df(ups)
         if dels.limit(1).count():
             # tombstone exactly these PKs
-            victims = target.read().join(dels.select(pk), on=pk, how="left_semi")
+            victims = target.read(keys=dels)
             if victims.limit(1).count():
                 target._append_segment(victims, target._next_ts(), deleted=True)
 

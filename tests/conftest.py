@@ -9,10 +9,11 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 
 # The FAST test set (run by default — see pytest.ini): full oracle parity
 # for every registered query, the 100 TB plan-contract sweep, the
-# Arrow-kernel equivalence pins, and the SQL front end (the dialect lexer's
-# primitives and the sqlfront property tests).  Everything else (the
-# IT-replay suites, engine/mutation/streaming tests) is marked slow and runs
-# via `pytest tests/ -m "" -q`.
+# Arrow-kernel equivalence pins, the SQL front end (the dialect lexer's
+# primitives and the sqlfront property tests), and the index-consistency
+# property test over random DML scripts.  Everything else (the IT-replay
+# suites, engine/mutation/streaming tests) is marked slow and runs via
+# `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",
@@ -21,6 +22,7 @@ _FAST_FILES = {
     "test_cosine_kernel.py",
     "test_sqllex.py",
     "test_sqlfront_properties.py",
+    "test_index_consistency.py",
 }
 
 

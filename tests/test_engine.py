@@ -212,6 +212,39 @@ def test_cdc_changes_pre_post_images(engine):
     assert ch[2].pre_image.v == "b" and ch[2].post_image is None
 
 
+def test_cdc_changes_after_add_column(engine):
+    """changes() reads every segment with the stored schema: a column added
+    by ALTER TABLE reads NULL in the images of older commits."""
+    engine.sql("CREATE TABLE ca (k BIGINT NOT NULL, v VARCHAR, CONSTRAINT pk PRIMARY KEY (k))")
+    engine.sql("UPSERT INTO ca VALUES (1, 'a')")
+    engine.sql("ALTER TABLE ca ADD d INTEGER")
+    engine.sql("UPSERT INTO ca VALUES (1, 'b', 7)")
+    ch = engine.managed("ca").changes().orderBy("change_ts").collect()
+    assert [(c.post_image.v, c.post_image.d) for c in ch] == [("a", None), ("b", 7)]
+    assert ch[1].pre_image.v == "a" and ch[1].pre_image.d is None
+
+
+def test_readded_column_does_not_resurrect_dropped_values(engine):
+    """DROP COLUMN then ADD of the same name (here with another type) is a
+    new, empty column: the re-added column gets a fresh physical name, so
+    the dropped cells never read back — in table reads, after compaction
+    and in the CDC feed."""
+    engine.sql("CREATE TABLE ra (k BIGINT NOT NULL, c INTEGER, CONSTRAINT pk PRIMARY KEY (k))")
+    engine.sql("UPSERT INTO ra VALUES (1, 10)")
+    engine.sql("ALTER TABLE ra DROP COLUMN c")
+    engine.sql("ALTER TABLE ra ADD c VARCHAR")
+    assert [tuple(r) for r in engine.sql("SELECT k, c FROM ra").collect()] == [(1, None)]
+    engine.sql("UPSERT INTO ra VALUES (2, 'x')")
+    mt = engine.managed("ra")
+    want = [(1, None), (2, "x")]
+    assert sorted(tuple(r) for r in mt.read().collect()) == want
+    mt.compact()
+    assert sorted(tuple(r) for r in mt.read().collect()) == want
+    engine.sql("UPSERT INTO ra VALUES (3, 'y')")
+    post = {r.k: r.post_image.c for r in mt.changes().collect()}
+    assert post == {1: None, 2: "x", 3: "y"}
+
+
 def test_sequence_next_value(engine):
     engine.sql("CREATE SEQUENCE my_seq START WITH 100 INCREMENT BY 5")
     engine.sql("CREATE TABLE sq (id BIGINT NOT NULL, tag VARCHAR, CONSTRAINT pk PRIMARY KEY (id))")
@@ -664,6 +697,24 @@ def test_index_maintained_on_upsert_and_delete(ixengine):
         via_base = e.sql(f"SELECT a, b, c FROM ixt WHERE {pred}")
         assert sorted((r.a, r.b) for r in via_index.collect()) == sorted(
             (r.a, r.b) for r in via_base.collect()
+        )
+
+
+def test_delete_top_n_returning_on_indexed_table(ixengine):
+    """DELETE ... ORDER BY ... LIMIT with RETURNING on an indexed table
+    (TopNIT.testTopNDelete shape): the top-N cut is computed once, RETURNING
+    shows exactly the tombstoned rows, and the index drops the same rows."""
+    e = ixengine
+    out = e.sql("DELETE FROM ixt ORDER BY k DESC LIMIT 3 RETURNING *")
+    assert out.columns == ["k", "a", "b", "c"]
+    assert sorted(r.k for r in out.collect()) == [298, 299, 300]
+    assert e.sql("SELECT k FROM ixt WHERE k > 297").collect() == []
+    for pred in ("a = 'F'", "a = 'O'", "a = 'P'"):
+        via_index = e.sql(f"SELECT k, a, b FROM ixt WHERE {pred}")
+        assert _reads_index(via_index, "ix_a")
+        via_base = e.sql(f"SELECT k, a, b, c FROM ixt WHERE {pred}")
+        assert sorted((r.k, r.b) for r in via_index.collect()) == sorted(
+            (r.k, r.b) for r in via_base.collect()
         )
 
 

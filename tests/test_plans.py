@@ -480,3 +480,20 @@ def test_sample_temperature_broadcast_no_corpus_shuffle(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_spread_without_file_list_keeps_cores_wide_target(spark, tmp_path):
+    """spread() caps its width at one partition per 128 KiB of input files;
+    a source with no file list (spark.range) has no size to cap by and
+    keeps the cores-wide target, while a tiny file stays one task."""
+    from phoenix_spark.queries._util import spread
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 1
+    ranged = spark.range(0, 1000, 1, 1)
+    assert ranged.inputFiles() == []
+    assert spread(spark, ranged).rdd.getNumPartitions() == cores
+    path = str(tmp_path / "tiny.parquet")
+    spark.range(0, 1000, 1, 1).write.parquet(path)
+    tiny = spark.read.parquet(path)
+    assert spread(spark, tiny).rdd.getNumPartitions() == 1
