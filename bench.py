@@ -20,7 +20,9 @@ MEDIAN run is reported (round-7 protocol: single-sample/best-of-2 rounds
 drifted 1.1-1.5x on unchanged code between machines, making round-over-round
 comparisons an exercise in noise attribution; the median tolerates one
 outlier in either direction).  The raw per-run timings are appended to
-.benchmarks/bench_history.jsonl for round-over-round diffs.
+.benchmarks/bench_history.jsonl for round-over-round diffs, with each
+triplet's executor CPU and exact Spark counts, which
+``perfbench.tracer.SparkProbe`` reads in-process over py4j (no UI server).
 """
 
 from __future__ import annotations
@@ -79,82 +81,39 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-class _CpuProbe:
-    """Per-query executor-CPU totals from the UI stages endpoint.
+def measure(spark, probe, build, sf_dir) -> tuple[list[float], dict]:
+    """Time three forced runs of ``build`` at ``sf_dir``; return the walls
+    and Spark's totals over all three (``perfbench.tracer.SparkProbe.end``).
 
-    Round-9 instrumentation (VERDICT r8 item 2): wall medians alone cannot
-    be compared across rounds on a host with episodic interference, so each
-    bench_history row now ALSO records the summed executor CPU of the
-    stages each query's timed triplet ran (additions-only; all reads happen
-    BETWEEN queries, never inside a timed region).  Degrades to None when
-    the UI endpoint is unavailable.
-    """
-
-    def __init__(self, spark) -> None:
-        import urllib.request  # noqa: PLC0415
-
-        self._req = urllib.request
-        self.base = None
-        try:
-            url = spark.sparkContext.uiWebUrl
-            if url:
-                with self._req.urlopen(f"{url}/api/v1/applications") as r:
-                    app = json.loads(r.read())[0]["id"]
-                self.base = f"{url}/api/v1/applications/{app}/stages"
-        except Exception:
-            self.base = None
-
-    def _stages(self) -> dict:
-        out = {}
-        # poll until no new stages appear across two consecutive reads
-        # (stages can still be finalizing right after an action returns)
-        prev = -1
-        for _ in range(4):
-            with self._req.urlopen(f"{self.base}?status=complete") as r:
-                out = {s["stageId"]: s for s in json.loads(r.read())}
-            if len(out) == prev:
-                break
-            prev = len(out)
-            time.sleep(0.2)
-        return out
-
-    def snapshot(self):
-        if self.base is None:
-            return None
-        try:
-            return set(self._stages())
-        except Exception:
-            return None
-
-    def cpu_since(self, before) -> float | None:
-        if self.base is None or before is None:
-            return None
-        try:
-            st = self._stages()
-            return round(
-                sum(
-                    s["executorCpuTime"]
-                    for sid, s in st.items()
-                    if sid not in before
-                )
-                / 1e9,
-                3,
-            )
-        except Exception:
-            return None
+    Measurement fix (round 8): Spark's CacheManager keeps every
+    DataFrame.persist() for the whole session, and identical plan subtrees
+    are shared across queries, so a later query's timing could silently
+    reuse frames materialized during an EARLIER query's timed runs.
+    Clearing the SQL cache first makes every per-query number attributable
+    to that query's own computation from parquet.  The within-query warm
+    median-of-3 (run 1 pays materialization, runs 2-3 may reuse it) is
+    unchanged from the round-6/7 protocol.  The probe reads the status
+    store over py4j between runs, never inside a timed region."""
+    spark.catalog.clearCache()
+    probe.begin()
+    runs = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        _force(build(spark, sf_dir))
+        runs.append(round(time.perf_counter() - t0, 4))
+    return runs, probe.end()
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")  # CPU recording, see _CpuProbe
-
+    from perfbench.tracer import SparkProbe
     from phoenix_spark.queries import all_queries
     from phoenix_spark.session import get_spark
 
     spark = get_spark(app_name="phoenix_spark_bench")
-    probe = _CpuProbe(spark)
+    probe = SparkProbe(spark)
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs]
 
@@ -170,28 +129,10 @@ def main() -> int:
 
     timings: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
-    cpu: dict[str, float | None] = {}
+    counts: dict[str, dict] = {}
     for name in names:
-        # Measurement fix (round 8): Spark's CacheManager keeps every
-        # DataFrame.persist() for the whole session, and identical plan
-        # subtrees are shared across queries — so a later query's timing
-        # could silently reuse shingle/band frames materialized during an
-        # EARLIER query's timed runs (verified: dedup_incremental registered
-        # only 1 new cached plan after dedup_minhash_lsh).  Clearing the SQL
-        # cache before each query's triplet makes every per-query number
-        # attributable to that query's own computation from parquet.  The
-        # within-query warm median-of-3 (run 1 pays materialization, runs
-        # 2-3 may reuse it) is unchanged from the round-6/7 protocol.
-        spark.catalog.clearCache()
-        before = probe.snapshot()
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _force(qs[name](spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 4))
-        raw[name] = runs
-        cpu[name] = probe.cpu_since(before)
-        timings[name] = sorted(runs)[1]  # median of 3
+        raw[name], counts[name] = measure(spark, probe, qs[name], sf_dir)
+        timings[name] = sorted(raw[name])[1]  # median of 3
 
     total = round(sum(timings.values()), 4)
     result = {
@@ -208,18 +149,23 @@ def main() -> int:
 
     os.makedirs(".benchmarks", exist_ok=True)
     with open(os.path.join(".benchmarks", "bench_history.jsonl"), "a") as f:
-        # additions-only history fields (round 9): "cold" = run 1 of each
-        # triplet (pays any within-query cache materialization — runs 2-3
-        # may reuse it, so the median is a warm number); "cpu_s" = summed
-        # executor CPU of the whole triplet (noise-robust comparison
-        # metric).  The printed contract line above is unchanged.
+        # additions-only history fields: "cold" = run 1 of each triplet
+        # (pays any within-query cache materialization — runs 2-3 may reuse
+        # it, so the median is a warm number); "cpu_s" = summed executor
+        # CPU of the whole triplet; "counts" = every SparkProbe total of the
+        # triplet (jobs, stages, tasks, shuffle, broadcast, Arrow, Catalyst
+        # phases).  The printed contract line above is unchanged.
         f.write(
             json.dumps(
                 {
                     **result,
                     "runs": raw,
                     "cold": {n: r[0] for n, r in raw.items()},
-                    "cpu_s": cpu,
+                    "cpu_s": {
+                        n: round(c["jobs.executor_cpu_s"], 3)
+                        for n, c in counts.items()
+                    },
+                    "counts": counts,
                     "protocol": "median3",
                 }
             )

@@ -1508,9 +1508,10 @@ class Engine:
 
     def _exec_trace(self, text: str) -> DataFrame:
         """TRACE ON|OFF (grammar trace_node).  The reference starts an HTrace
-        span and returns its trace id; the Spark analogue tags subsequent
-        jobs with a job group so they are identifiable in the Spark UI —
-        the UI's SQL/Jobs tabs are the tracing surface."""
+        span and returns its trace id; here TRACE ON only sets a Spark job
+        group on subsequent jobs and returns its id, and TRACE OFF clears
+        it.  No span is recorded, and ``WITH SAMPLING`` is parsed and
+        ignored until per-statement traces exist (ROADMAP item 2)."""
         m = re.match(r"^\s*TRACE\s+(ON|OFF)(?:\s+WITH\s+SAMPLING\s+[\d.]+)?\s*;?\s*$",
                      text, re.I)
         if not m:

@@ -154,7 +154,7 @@ def spread(spark, df):
     measured per-task cost — ~20-60 ms of fixed JVM overhead plus ~300 ms
     of Python round-trip wait on mapInArrow stages — dwarfed the per-row
     work (CPU for an identical query measured 9.5 s at 132 tasks vs 1.8 s
-    at 36, scripts/profile_r09.py notes).  The target is therefore capped
+    at 36, OPTIMIZATION_r09.md §5).  The target is therefore capped
     at one partition per ``_SPREAD_CHUNK`` (128 KiB) of compressed input,
     so tiny inputs get a handful of tasks, 10x data gets proportionally
     more, and at-scale inputs keep the no-op branch.  When the source has

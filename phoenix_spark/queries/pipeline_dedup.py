@@ -243,7 +243,7 @@ _B = [(0x9E3779B97F4A7C15 * (i + 1)) % _P for i in range(_K)]
 # --- Arrow-batched shingle-hash kernels (round 9, guide §4.2) -----------------
 # The JVM form of the tokenize + 3-gram + md5 map runs its gram-building
 # lambda in Catalyst's expression interpreter: per-element decomposition at
-# sf0.1 (scripts/profile_r09.py) measured tokenize 0.15 s, +gram-build 0.74 s,
+# sf0.1 (OPTIMIZATION_r09.md §1) measured tokenize 0.15 s, +gram-build 0.74 s,
 # +array_distinct 0.81 s, +md5 0.93 s, +conv/pmod 1.1 s executor CPU — i.e.
 # the HOF-lambda machinery, not md5, dominates (the round-8 deferral asked
 # exactly this question).  The 32 affine-permutation signature minima

@@ -26,119 +26,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from phoenix_spark.queries._util import Registry, ship_package, spread, t
+from phoenix_spark.queries._util import Registry, spread, t
 
 REG = Registry()
 
 _SCALE = 10_000_000
 
-# --- Arrow-batched exact cosine kernels (round 9, guide §4.2) -----------------
-# The JVM `aggregate(zip_with(q_a, q_b, ...))` dot-product fold runs in
-# Catalyst's expression interpreter at ~85 µs/pair (measured: the knn scored
-# join costs 0.45 s executor CPU without the fold and 1.8 s with it, for 16k
-# pairs at sf0.1 — scripts/profile_r09.py §2).  These kernels compute the
-# BIT-IDENTICAL values with numpy int64 arithmetic:
-#   * the dot product and norms are *integer* sums (quantized vectors, see
-#     module docstring): products < 2^46 and 64-dim sums < 2^53, so int64
-#     numpy arithmetic is exact and order-independent — the round-8 numpy
-#     decline (float pairwise-summation order) does not apply to integers.
-#   * the final double is dot / (sqrt(na) * sqrt(nb)): int→double conversion
-#     is exact below 2^53, and sqrt / * / / are each single correctly-rounded
-#     IEEE ops — identical bits on the JVM, numpy, and DuckDB.
-# A per-row pure-Python fallback (exact big-int dot) covers ragged/null
-# batches.  Pinned by tests/test_cosine_kernel.py.
-
-
-def _exact_dots(batch, lo=2):
-    """Exact int64 dot products + norm columns of a (…, q_a, qn_a, q_b, qn_b)
-    batch; returns (dot float64 ndarray|list-with-Nones, na, nb)."""
-    import numpy as np  # noqa: PLC0415
-
-    qa, na_col, qb, nb_col = (batch.column(i) for i in range(lo, lo + 4))
-    n = batch.num_rows
-    na = na_col.to_numpy(zero_copy_only=False).astype(np.float64)
-    nb = nb_col.to_numpy(zero_copy_only=False).astype(np.float64)
-    if n and qa.null_count == 0 and qb.null_count == 0:
-        wa = np.diff(qa.offsets.to_numpy())
-        wb = np.diff(qb.offsets.to_numpy())
-        if wa.min() == wa.max() == wb.min() == wb.max():
-            d = int(wa[0])
-            ma = qa.flatten().to_numpy().reshape(n, d)
-            mb = qb.flatten().to_numpy().reshape(n, d)
-            return (
-                np.einsum("ij,ij->i", ma, mb).astype(np.float64),
-                na,
-                nb,
-            )
-    # ragged or null rows: exact per-row big-int fallback
-    dots = []
-    for va, vb in zip(qa.to_pylist(), qb.to_pylist()):
-        if va is None or vb is None:
-            dots.append(None)
-        else:
-            dots.append(float(sum(x * y for x, y in zip(va, vb))))
-    return dots, na, nb
-
-
-def _cos_from(batch, out_names):
-    import numpy as np  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
-
-    dot, na, nb = _exact_dots(batch)
-    if isinstance(dot, list):
-        cos = [
-            None if d is None else d / (na[i] ** 0.5 * nb[i] ** 0.5)
-            for i, d in enumerate(dot)
-        ]
-        cos_arr = pa.array(cos, type=pa.float64())
-    else:
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos_arr = pa.array(
-                dot / (np.sqrt(na) * np.sqrt(nb)), type=pa.float64()
-            )
-    return pa.RecordBatch.from_arrays(
-        [batch.column(0), batch.column(1), cos_arr], names=list(out_names)
-    )
-
-
-def _cos_pair_kernel(batches):
-    """(id_a, id_b, q_a, qn_a, q_b, qn_b) -> (id_a, id_b, cosine)."""
-    for batch in batches:
-        yield _cos_from(batch, ("id_a", "id_b", "cosine"))
-
-
-def _cos_scored_kernel(batches):
-    """(qid, vec_id, q, qn, qq, qqn) -> (qid, vec_id, cosine)."""
-    for batch in batches:
-        yield _cos_from(batch, ("qid", "vec_id", "cosine"))
-
-
-def _ivf_dist_kernel(batches):
-    """(vec_id, cell, q, qn, cq, cqn) -> (vec_id, cell, d): exact integer
-    squared L2 |v|² + |c|² − 2·v·c (all < 2^53 — int64-exact)."""
-    import numpy as np  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
-
-    for batch in batches:
-        dot, na, nb = _exact_dots(batch)
-        qn = batch.column(3).to_numpy(zero_copy_only=False)
-        cqn = batch.column(5).to_numpy(zero_copy_only=False)
-        if isinstance(dot, list):
-            d = [
-                None if v is None else int(qn[i]) + int(cqn[i]) - 2 * int(v)
-                for i, v in enumerate(dot)
-            ]
-        else:
-            d = qn + cqn - 2 * dot.astype(np.int64)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column(0), batch.column(1), pa.array(d, type=pa.int64())],
-            names=["vec_id", "cell", "d"],
-        )
-
 # Quantized embedding: array<long>, exact in both engines.
 _QEMB = f"transform(embedding, x -> cast(round(x * {_SCALE}, 0) as bigint))"
 # Exact integer self-dot (squared norm) of the quantized embedding.
 _QNORM = f"aggregate({_QEMB}, cast(0 as bigint), (acc, v) -> acc + v * v)"
+
+
+def _dot(a: str, b: str) -> str:
+    """Exact integer dot product of two quantized vector columns: the one
+    fold every cosine and distance here uses.  Arrow kernels for it were
+    measured slower at 1x, 10x and 8 cores (OPTIMIZATION_r09.md)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0 as bigint),"
+        " (acc, v) -> acc + v)"
+    )
 
 
 def _quantized(spark, sf) -> DataFrame:
@@ -157,10 +64,7 @@ def _topk(spark, sf):
     query = emb.filter(F.col("vec_id") == 1).select(
         F.col("q").alias("qq"), F.col("qn").alias("qqn")
     )
-    dot = F.expr(
-        "aggregate(zip_with(q, qq, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    dot = F.expr(_dot("q", "qq"))
     return (
         emb.crossJoin(F.broadcast(query))
         .filter(F.col("vec_id") != 1)
@@ -212,10 +116,7 @@ def _label_affinity(spark, sf):
     query = emb.filter(F.col("vec_id") == 1).select(
         F.col("q").alias("qq"), F.col("qn").alias("qqn")
     )
-    dot = F.expr(
-        "aggregate(zip_with(q, qq, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    dot = F.expr(_dot("q", "qq"))
     per_vec = (
         emb.crossJoin(F.broadcast(query))
         .filter(F.col("vec_id") != 1)
@@ -281,7 +182,7 @@ _KNN_K = 5
 _KNN_BUCKETS = 64
 
 
-def _knn_batch(spark, sf, arrow_kernel: bool = False):
+def _knn_batch(spark, sf):
     from pyspark.sql.window import Window
 
     emb = _quantized(spark, sf)
@@ -291,34 +192,13 @@ def _knn_batch(spark, sf, arrow_kernel: bool = False):
         F.col("qn").alias("qqn"),
     )
     corpus = emb.filter(F.col("vec_id") > 8)
-    if arrow_kernel:
-        # MEASURED AND DECLINED as the default (round 9): the crossJoin
-        # emits BOTH vectors per scored pair, so the kernel ships ~1 KB/pair
-        # across the Arrow boundary — interleaved A/B walls: 0.48 -> 0.65 s
-        # at 32 cores / 0.69 -> 0.80 s at 8 cores at sf0.1, and 2.5 -> 5.3 s
-        # at 10x data: the serialization loses at every measured scale
-        # (guide §8: this moves payloads, not decisions).  Kept for the
-        # equivalence test and future A/Bs.
-        ship_package(spark)
-        scored = (
-            corpus.crossJoin(F.broadcast(queries))
-            .select("qid", "vec_id", "q", "qn", "qq", "qqn")
-            .mapInArrow(
-                _cos_scored_kernel, "qid bigint, vec_id bigint, cosine double"
-            )
-            .withColumn("bkt", F.pmod(F.hash("vec_id"), F.lit(_KNN_BUCKETS)))
-        )
-    else:
-        dot = F.expr(
-            "aggregate(zip_with(q, qq, (x, y) -> x * y), cast(0 as bigint),"
-            " (acc, v) -> acc + v)"
-        )
-        scored = corpus.crossJoin(F.broadcast(queries)).select(
-            "qid",
-            "vec_id",
-            (dot / (F.sqrt(F.col("qn")) * F.sqrt(F.col("qqn")))).alias("cosine"),
-            F.pmod(F.hash("vec_id"), F.lit(_KNN_BUCKETS)).alias("bkt"),
-        )
+    dot = F.expr(_dot("q", "qq"))
+    scored = corpus.crossJoin(F.broadcast(queries)).select(
+        "qid",
+        "vec_id",
+        (dot / (F.sqrt(F.col("qn")) * F.sqrt(F.col("qqn")))).alias("cosine"),
+        F.pmod(F.hash("vec_id"), F.lit(_KNN_BUCKETS)).alias("bkt"),
+    )
     w1 = Window.partitionBy("qid", "bkt").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
     )
@@ -451,7 +331,6 @@ def _lsh_pairs(
     n_bands: int = _SIM_BANDS,
     candidates_only: bool = False,
     persist_bands: bool = True,
-    arrow_kernel: bool = False,
 ):
     """``candidates_only``: return the pre-verify candidate pair set — the
     quantity whose growth rate IS the LSH scale contract (measured at 1x and
@@ -518,27 +397,7 @@ def _lsh_pairs(
     ea = emb.select(F.col("vec_id").alias("id_a"), F.col("q").alias("q_a"), F.col("qn").alias("qn_a"))
     eb = emb.select(F.col("vec_id").alias("id_b"), F.col("q").alias("q_b"), F.col("qn").alias("qn_b"))
     joined = cand.join(ea, "id_a").join(eb, "id_b")
-    if arrow_kernel:
-        # MEASURED AND DECLINED as the default (round 9): unlike the knn /
-        # ivf stages, the verify join emits BOTH 64-dim vectors per
-        # candidate pair, so the kernel ships ~1 KB/pair (~150 MB at sf0.1's
-        # 143k pairs) across the Arrow boundary — interleaved A/B measured
-        # executor CPU 7.4-9.5 s (JVM fold) vs 10.3-10.8 s (kernel): the
-        # serialization costs more than the interpreted fold saves (guide
-        # §8: the kernel moves payloads, not decisions).  Kept for the
-        # equivalence test and future A/Bs.
-        ship_package(spark)
-        return (
-            joined.select("id_a", "id_b", "q_a", "qn_a", "q_b", "qn_b")
-            .mapInArrow(
-                _cos_pair_kernel, "id_a bigint, id_b bigint, cosine double"
-            )
-            .filter(F.col("cosine") >= _SIM_THRESHOLD)
-        )
-    dot = F.expr(
-        "aggregate(zip_with(q_a, q_b, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    dot = F.expr(_dot("q_a", "q_b"))
     return (
         joined.select(
             "id_a",
@@ -639,7 +498,7 @@ _N_CELLS = 8
 _N_PROBE = 2
 
 
-def _ivf_probe(spark, sf, arrow_kernel: bool = False):
+def _ivf_probe(spark, sf):
     emb = _quantized(spark, sf)
     cents = (
         emb.filter(F.col("vec_id") < _N_CELLS)
@@ -649,44 +508,22 @@ def _ivf_probe(spark, sf, arrow_kernel: bool = False):
             F.col("qn").alias("cqn"),
         )
     )
-    if arrow_kernel:
-        # MEASURED AND DECLINED as the default (round 9): like _knn_batch,
-        # the assignment crossJoin emits both vectors per (vector, cell)
-        # row, so the kernel ships ~1 KB/row across the Arrow boundary —
-        # interleaved A/B walls 0.62 -> 0.79 s at 8 cores sf0.1 and
-        # 1.5 -> 2.4 s at 10x data.  Kept for the equivalence test.
-        ship_package(spark)
-        assign = (
-            emb.crossJoin(F.broadcast(cents))
-            .select("vec_id", "cell", "q", "qn", "cq", "cqn")
-            .mapInArrow(_ivf_dist_kernel, "vec_id bigint, cell bigint, d bigint")
-            .groupBy("vec_id")
-            .agg(F.min(F.struct(F.col("d"), F.col("cell"))).alias("m"))
-            .select("vec_id", F.col("m.cell").alias("cell"))
+    dot_c = F.expr(_dot("q", "cq"))
+    # squared L2 in integer space: |v|^2 + |c|^2 - 2 v·c
+    dist = F.col("qn") + F.col("cqn") - 2 * dot_c
+    assign = (
+        emb.crossJoin(F.broadcast(cents))
+        .groupBy("vec_id")
+        .agg(
+            F.min(F.struct(dist.alias("d"), F.col("cell").alias("cell"))).alias("m")
         )
-    else:
-        dot_c = F.expr(
-            "aggregate(zip_with(q, cq, (x, y) -> x * y), cast(0 as bigint),"
-            " (acc, v) -> acc + v)"
-        )
-        # squared L2 in integer space: |v|^2 + |c|^2 - 2 v·c
-        dist = F.col("qn") + F.col("cqn") - 2 * dot_c
-        assign = (
-            emb.crossJoin(F.broadcast(cents))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct(dist.alias("d"), F.col("cell").alias("cell"))).alias("m")
-            )
-            .select("vec_id", F.col("m.cell").alias("cell"))
-        )
+        .select("vec_id", F.col("m.cell").alias("cell"))
+    )
     # probe cells: the P nearest centroids to the query vector (vec_id = 1)
     qrow = emb.filter(F.col("vec_id") == 1).select(
         F.col("q").alias("qq"), F.col("qn").alias("qqn")
     )
-    qdist = F.col("qqn") + F.col("cqn") - F.expr(
-        "2 * aggregate(zip_with(qq, cq, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    qdist = F.col("qqn") + F.col("cqn") - F.expr(f"2 * {_dot('qq', 'cq')}")
     probe = (
         cents.crossJoin(F.broadcast(qrow))
         .select("cell", qdist.alias("qd"))
@@ -700,10 +537,7 @@ def _ivf_probe(spark, sf, arrow_kernel: bool = False):
         .join(F.broadcast(probe), "cell", "left_semi")
         .filter(F.col("vec_id") != 1)
     )
-    dot_q = F.expr(
-        "aggregate(zip_with(q, qq, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    dot_q = F.expr(_dot("q", "qq"))
     return (
         cand.crossJoin(F.broadcast(qrow))
         .select(
@@ -777,10 +611,7 @@ def _ivf_persisted(spark, sf):
         F.col("q").alias("cq"),
         F.col("qn").alias("cqn"),
     )
-    dot_c = F.expr(
-        "aggregate(zip_with(q, cq, (x, y) -> x * y), cast(0 as bigint),"
-        " (acc, v) -> acc + v)"
-    )
+    dot_c = F.expr(_dot("q", "cq"))
     dist = F.col("qn") + F.col("cqn") - 2 * dot_c
     assign = (
         emb.crossJoin(F.broadcast(cents))
@@ -823,10 +654,7 @@ def _ivf_persisted(spark, sf):
         qrow = emb.filter(F.col("vec_id") == 1).select(
             F.col("q").alias("qq"), F.col("qn").alias("qqn")
         )
-        qdist = F.col("qqn") + F.col("cqn") - F.expr(
-            "2 * aggregate(zip_with(qq, cq, (x, y) -> x * y), cast(0 as bigint),"
-            " (acc, v) -> acc + v)"
-        )
+        qdist = F.col("qqn") + F.col("cqn") - F.expr(f"2 * {_dot('qq', 'cq')}")
         probe_cells = [
             r.cell
             for r in cents.crossJoin(F.broadcast(qrow))
@@ -840,10 +668,7 @@ def _ivf_persisted(spark, sf):
         cand = stored.filter(
             F.col("cell").isin(probe_cells) & (F.col("vec_id") != 1)
         )
-        dot_q = F.expr(
-            "aggregate(zip_with(q, qq, (x, y) -> x * y), cast(0 as bigint),"
-            " (acc, v) -> acc + v)"
-        )
+        dot_q = F.expr(_dot("q", "qq"))
         out = (
             cand.crossJoin(F.broadcast(qrow))
             .select(

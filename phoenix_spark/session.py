@@ -41,16 +41,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # SPARK_GRAFT_UI=1 serves the /api/v1 stages endpoint on an
-        # ephemeral port so harnesses can read executor-CPU totals (the
-        # backing AppStatusListener runs regardless; only the HTTP server
-        # is toggled, so timing is unaffected).  bench.py sets it to record
-        # per-query CPU alongside wall in bench_history.
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
-        .config("spark.ui.port", "0")
+        # no HTTP server: stage, job and task numbers are read in-process
+        # from the status store (perfbench.tracer.SparkProbe)
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # deep-path BSON update expressions nest one lambda per path level
         # per op (bson._deep_set_json); the analyzer resolves one lambda

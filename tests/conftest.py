@@ -9,9 +9,10 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 
 # The FAST test set (run by default — see pytest.ini): full oracle parity
 # for every registered query, the 100 TB plan-contract sweep, the
-# Arrow-kernel equivalence pins, the SQL front end (the dialect lexer's
-# primitives and the sqlfront property tests), and the index-consistency
-# property test over random DML scripts.  Everything else (the IT-replay
+# Arrow-kernel equivalence pins, the exact integer dot behind every cosine,
+# the SQL front end (the dialect lexer's primitives and the sqlfront
+# property tests), and the index-consistency property test over random DML
+# scripts.  Everything else (the IT-replay
 # suites, engine/mutation/streaming tests) is marked slow and runs via
 # `pytest tests/ -m "" -q`.
 _FAST_FILES = {
@@ -19,7 +20,7 @@ _FAST_FILES = {
     "test_plans.py",
     "test_text_kernel.py",
     "test_shingle_kernel.py",
-    "test_cosine_kernel.py",
+    "test_exact_dot.py",
     "test_sqllex.py",
     "test_sqlfront_properties.py",
     "test_index_consistency.py",
@@ -33,9 +34,20 @@ def pytest_collection_modifyitems(config, items):
 
 
 def pytest_terminal_summary(terminalreporter):
-    """Name every test skipped because the Phoenix reference tree is absent
-    (their skip reasons read "reference ... not present"), so a green run
-    says which reference-dependent checks it did not make."""
+    """Say how many tests the fast run left out as slow, and name every test
+    skipped because the Phoenix reference tree is absent (their skip reasons
+    read "reference ... not present"), so a green run says which checks it
+    did not make."""
+    slow = [
+        i
+        for i in terminalreporter.stats.get("deselected", [])
+        if i.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"fast set: {len(slow)} tests deselected as slow; "
+            'run -m "" for the full suite'
+        )
     names = [
         r.nodeid
         for r in terminalreporter.stats.get("skipped", [])

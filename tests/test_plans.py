@@ -155,14 +155,12 @@ _ALLOWED_PYTHON = {
 # boundary crossing with a CPU A/B and an exact-equivalence pin on record:
 #   * text_repetition_stats (r8 §8: interpreted HOF form ~60x the CPU),
 #   * the shingle+md5(+MinHash-signature) kernels (r9: HOF gram-build +
-#     32 interpreted permutations, tests/test_shingle_kernel.py),
-#   * the integer-cosine kernels (r9: ~85 µs/pair interpreted fold,
-#     tests/test_cosine_kernel.py).
-# The similarity family stays on JVM folds (the cosine kernels were
-# measured and DECLINED as defaults: their joins emit both vectors per
-# scored row, so the kernel ships ~1 KB/row of payload across the Arrow
-# boundary and loses at 1x AND 10x data — see _lsh_pairs/_knn_batch/
-# _ivf_probe), so MapInArrow stays BANNED there and for every other entry.
+#     32 interpreted permutations, tests/test_shingle_kernel.py).
+# The similarity family stays on JVM folds (integer-cosine kernels were
+# measured and declined: their joins emit both vectors per scored row, so
+# they ship ~1 KB/row across the Arrow boundary and lost at 1x AND 10x
+# data — OPTIMIZATION_r09.md §4), so MapInArrow stays BANNED there and for
+# every other entry.
 _ALLOWED_ARROW = {
     "text_repetition_stats",
     "dedup_minhash_lsh", "dedup_incremental",
@@ -497,3 +495,21 @@ def test_spread_without_file_list_keeps_cores_wide_target(spark, tmp_path):
     spark.range(0, 1000, 1, 1).write.parquet(path)
     tiny = spark.read.parquet(path)
     assert spread(spark, tiny).rdd.getNumPartitions() == 1
+
+
+def test_bench_measures_cpu_and_counts_with_ui_off(spark):
+    """bench.py's per-query measurement reads executor CPU and Spark's
+    counts in-process, so it works on a session with no UI server (the
+    HTTP poller it replaced recorded nothing there)."""
+    import bench
+    from perfbench.tracer import SparkProbe
+
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    probe = SparkProbe(spark)
+    runs, counts = bench.measure(
+        spark, probe, QUERIES["q1_pricing_summary"], SF_TEST_DIR
+    )
+    cpu_s = round(counts["jobs.executor_cpu_s"], 3)
+    assert len(runs) == 3
+    assert isinstance(cpu_s, float) and cpu_s > 0
+    assert counts["jobs.count"] >= 1
