@@ -31,7 +31,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from phoenix_spark import ddl as D
 from phoenix_spark import indexes as IX
 from phoenix_spark.catalog import Catalog
-from phoenix_spark.mutations import _DEL_COL, ManagedTable, key_join
+from phoenix_spark.mutations import (
+    _DEL_COL,
+    ManagedTable,
+    key_join,
+    local_frame,
+    wall_clock,
+)
 from phoenix_spark.sqlfront import classify, translate_phoenix_sql
 from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, unmask
 
@@ -1265,7 +1271,10 @@ class Engine:
         choice = IX.choose_index(text, active, base_cols_of, base_pk_of)
         if choice is not None:
             table_ref, d, eff_text = choice
-            self._register(d.name)  # index temp view must resolve
+            if d.name.split(".")[-1] not in self._registered:
+                # every writer of an index re-registers its temp view, so a
+                # registered one is current
+                self._register(d.name)
             return IX.substitute_table(eff_text, table_ref, d.name)
         jb = IX.choose_join_back(
             text, active, base_cols_of, base_pk_of, forced=forced
@@ -1324,8 +1333,8 @@ class Engine:
                     f"UPSERT VALUES INTO {up.table}: "
                     f"{len(up.values)} literal row(s), client-evaluated"
                 )
-            return self.spark.createDataFrame(
-                [(line,) for line in plan.splitlines()], "plan: string"
+            return local_frame(
+                self.spark, [(line,) for line in plan.splitlines()], "plan: string"
             )
         if kind == "delete":
             dl = D.parse_delete(body)
@@ -1336,8 +1345,8 @@ class Engine:
                 f"DELETE FROM {dl.table} (tombstone append over victim scan)\n"
                 + self.explain(victims)
             )
-            return self.spark.createDataFrame(
-                [(line,) for line in plan.splitlines()], "plan: string"
+            return local_frame(
+                self.spark, [(line,) for line in plan.splitlines()], "plan: string"
             )
         plan = self.explain(body)
         lines = [(line,) for line in plan.splitlines()]
@@ -1345,7 +1354,7 @@ class Engine:
             df = self._exec_select(body, consume_sequences=False)
             lines.append(("-- input splits (region analogue):",))
             lines.extend((f"--   {f}",) for f in sorted(df.inputFiles()))
-        return self.spark.createDataFrame(lines, "plan: string")
+        return local_frame(self.spark, lines, "plan: string")
 
     def _exec_create_table(self, text: str) -> int:
         if self.tenant_id is not None:
@@ -1528,7 +1537,7 @@ class Engine:
                 "spark.job.description", None
             )
             rows = [(getattr(self, "_trace_id", 0),)]
-        return self.spark.createDataFrame(rows, "trace_id: bigint")
+        return local_frame(self.spark, rows, "trace_id: bigint")
 
     def _exec_alter_session(self, text: str) -> int:
         """ALTER SESSION SET k=v, ... (grammar :768-771).  The reference's
@@ -1591,7 +1600,7 @@ class Engine:
         # toLocalIterator streams partition-by-partition — client paging
         # without materializing the result on the driver.
         df = self._exec_select(cur["sql"])
-        cur["it"] = df.toLocalIterator()
+        cur["it"] = wall_clock(df).toLocalIterator()
         cur["schema"] = df.schema  # FETCH reuses it (no per-fetch recompile)
         return 0
 
@@ -1607,7 +1616,7 @@ class Engine:
         import itertools
 
         rows = list(itertools.islice(cur["it"], n))
-        return self.spark.createDataFrame(rows, schema=cur["schema"])
+        return local_frame(self.spark, rows, schema=cur["schema"])
 
     def _exec_close_cursor(self, text: str) -> int:
         m = re.match(r"^\s*CLOSE\s+(\w+)\s*;?\s*$", text, re.I)
@@ -1822,7 +1831,7 @@ class Engine:
         CreateIndexCompiler.java / IndexMaintainer.java:143 analogue).
 
         The index is a ManagedTable with PK = (index key ++ base PK) whose
-        segments are written sorted by the index key (WRITE_SORT), read-path
+        segments are sorted by the index key (WRITE_SORT), read-path
         substituted by _exec_select when it covers a query."""
         d, if_not_exists = IX.parse_create_index(text)
         if d.name in self._indexes:
@@ -1868,8 +1877,9 @@ class Engine:
             # row key's NOT NULL columns are required
             not_null=[c for c in base.pk if c in required],
         )
-        # initial build: one distributed projection scan of the base table
-        imt.upsert_df(self._index_rows(base.read(), d, chain, base.pk))
+        # initial build: one distributed projection scan of the base table,
+        # written globally sorted by the index key
+        imt.rewrite(self._index_rows(base.read(), d, chain, base.pk))
         self._indexes[d.name] = d
         self._save_indexes()
         self._register(d.name)
@@ -2147,8 +2157,10 @@ class Engine:
         ]
         if dr.truncate:
             mt.truncate()
+            self._register(dr.name)
             for ix in dependent:  # indexes follow the base table's state
                 ManagedTable(self.spark, self.warehouse, ix).truncate()
+                self._register(ix)
         else:
             mt.drop()
             self.spark.catalog.dropTempView(dr.name)
@@ -2200,9 +2212,7 @@ class Engine:
                 start = _dt.datetime.now().isoformat()
                 base, chain = self._index_base(d.table)
                 imt = self.managed(d.name)
-                imt.delete_where(None)
-                imt.upsert_df(self._index_rows(base.read(), d, chain, base.pk))
-                imt.compact()
+                imt.rewrite(self._index_rows(base.read(), d, chain, base.pk))
                 self._register(d.name)
                 d.state = "ACTIVE"
                 if am.group(6):  # ASYNC: recorded in SYSTEM.TASK (the
@@ -2308,12 +2318,12 @@ class Engine:
         if m:
             name = m.group(1).strip('"').split(".")[-1].lower()
             ddl = self._render_create_table(name)
-            return self.spark.createDataFrame(
-                [(name, ddl)], "table: string, create_statement: string"
+            return local_frame(
+                self.spark, [(name, ddl)], "table: string, create_statement: string"
             )
         if "SEQUENCE" in up:
             rows = [(k,) for k in sorted(self._sequences())]
-            return self.spark.createDataFrame(rows or [("",)], "sequence_name: string")
+            return local_frame(self.spark, rows or [("",)], "sequence_name: string")
         names = set()
         if self.catalog is not None:
             names |= set(self.catalog.tables)
@@ -2322,8 +2332,8 @@ class Engine:
                 rel = os.path.relpath(root, self.warehouse)
                 names.add(rel.replace(os.sep, "."))
         names |= set(self._views)
-        return self.spark.createDataFrame(
-            [(n,) for n in sorted(names)], "table_name: string"
+        return local_frame(
+            self.spark, [(n,) for n in sorted(names)], "table_name: string"
         )
 
     def _render_create_table(self, name: str) -> str:
@@ -2861,7 +2871,7 @@ class Engine:
                 )
                 for r in rows
             ]
-            src = self.spark.createDataFrame(rows, schema=src_schema)
+            src = local_frame(self.spark, rows, schema=src_schema)
         listed = set(cols) - set(dyn)
         unlisted = [c for c in mt.schema.fieldNames() if c not in listed]
         if unlisted and up.on_duplicate is None:
@@ -3065,5 +3075,7 @@ class Engine:
         except ValueError:
             pass
         # last resort: let Spark evaluate the scalar expression
-        row = self.spark.range(1).select(F.expr(translate_phoenix_sql(s))).head()
+        row = wall_clock(
+            self.spark.range(1).select(F.expr(translate_phoenix_sql(s)))
+        ).head()
         return row[0]

@@ -11,9 +11,11 @@ Reference behavior being reproduced (NOT ported):
     QueryOptimizer.java:230-236, exercised by GlobalIndexOptimizationIT.java
 
 Spark-first design: an index is a ManagedTable holding the covered
-projection with PK = (index key ++ base PK).  Its segments are written
-range-partitioned and sorted by the index key (the ``WRITE_SORT`` table
-prop), so a probe on that key scans a NARROW table whose parquet row-groups
+projection with PK = (index key ++ base PK).  Its segments are sorted by
+the index key (the ``WRITE_SORT`` table prop): a maintenance segment within
+each write task, the way an HBase flush writes one sorted file; the build and
+``REBUILD`` globally, as disjoint sorted files (``ManagedTable.rewrite``).
+So a probe on that key scans a NARROW table whose parquet row-groups
 prune by min/max statistics — the covered-index O(result) win, delivered by
 the Parquet reader instead of an HBase row-key scan.  At 100 TB the index is
 a fraction of the base table's width and the probe reads only the row-groups

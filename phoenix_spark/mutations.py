@@ -16,8 +16,8 @@ statement touched.  The table read is the latest-wins compaction::
     ... AND NOT _deleted
 
 Scale design (100 TB):
-  * segments are immutable + append-only — writers never rewrite data, and a
-    single atomic rename publishes a commit (object-store friendly);
+  * segments are immutable + append-only — a commit never rewrites data, and
+    a single atomic rename publishes it (object-store friendly);
   * every segment is read with the stored schema (``meta.json`` plus the two
     change-log columns), so building a read launches no job and no footer
     is opened until an action;
@@ -27,8 +27,16 @@ Scale design (100 TB):
     the touched keys' versions, never the table.  Index maintenance takes
     the post-image from the statement's own segment (``read_commit``) and the
     pre-image from a key-scoped snapshot read;
-  * ``compact()`` folds history into one base segment, after which reads
-    take the single-segment fast path (plain scan, zero shuffle);
+  * client-built rows (UPSERT VALUES) reach Spark as an Arrow-built
+    ``LocalRelation`` (``local_frame``), so a small commit starts no Python
+    worker;
+  * a commit's segment is sorted within each write task, by the PK or an
+    index's key — the LSM shape of an HBase flush.  No range partitioning,
+    so no sampling job re-runs the statement's reads;
+  * the global sort is left to whole-table rewrites (``rewrite``: the index
+    build, ``REBUILD`` and ``compact()``), which lay the table out as
+    disjoint sorted files in one base segment; reads of a single segment
+    take the fast path (plain scan, zero shuffle);
   * snapshot reads (time travel) prune whole segments by the commit ts in
     the filename — no data read from newer segments.
 
@@ -48,6 +56,7 @@ import json
 import os
 import re
 import uuid
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -58,10 +67,89 @@ from phoenix_spark.sqllex import split_top
 _TS_COL = "_mutation_ts"
 _DEL_COL = "_deleted"
 _SEG_RE = re.compile(r"seg-(\d{12})-")
+# wide enough for any DECIMAL(38, s) value (the default context holds 28)
+_WIDE = Context(prec=80)
 
 
 def _seg_ts(path: str) -> int:
     return int(_SEG_RE.search(os.path.basename(path)).group(1))
+
+
+def _half_up(v, dt: T.DataType):
+    """``v`` with its decimals rounded half up to ``dt``'s scale, as Spark's
+    row conversion rounds them (Arrow refuses a lossy rescale)."""
+    if v is None:
+        return None
+    if isinstance(dt, T.DecimalType):
+        return v.quantize(Decimal(1).scaleb(-dt.scale), ROUND_HALF_UP, _WIDE)
+    if isinstance(dt, T.ArrayType):
+        return [_half_up(x, dt.elementType) for x in v]
+    return v
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples, Rows or dicts): the
+    client-built batch, as Phoenix's MutationState holds it.
+
+    The rows travel as one Arrow table and plan as a ``LocalRelation``
+    (``LocalTableScan``), so no task that scans the frame starts a Python
+    worker — a pickled list becomes an RDD that re-pickles through Python
+    on every evaluation.  Each row is checked against ``schema`` first, with
+    the errors the pickled path raised (Arrow would silently truncate
+    ``1.5`` into an integer column).  A naive datetime in a TIMESTAMP
+    column is a wall-clock time in the session time zone, as a SQL
+    literal is."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    decimals = [
+        f for f in schema.fields if "decimal" in f.dataType.simpleString()
+    ]
+    recs = []
+    for r in rows:
+        verify(r)
+        rec = dict(r) if isinstance(r, dict) else dict(zip(schema.names, r))
+        for f in decimals:
+            rec[f.name] = _half_up(rec.get(f.name), f.dataType)
+        recs.append(rec)
+    table = pa.Table.from_pylist(
+        recs, schema=to_arrow_schema(schema, timestamp_utc=False)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def wall_clock(df: DataFrame) -> DataFrame:
+    """``df`` with its TIMESTAMP values as session-zone wall-clock times
+    (TIMESTAMP_NTZ), so collected datetimes mean what ``local_frame``
+    reads them as — collect otherwise yields the Python process's local
+    time."""
+
+    def ntz(dt: T.DataType) -> T.DataType:
+        if isinstance(dt, T.TimestampType):
+            return T.TimestampNTZType()
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(ntz(dt.elementType), dt.containsNull)
+        if isinstance(dt, T.MapType):
+            return T.MapType(ntz(dt.keyType), ntz(dt.valueType), dt.valueContainsNull)
+        if isinstance(dt, T.StructType):
+            return T.StructType(
+                [T.StructField(f.name, ntz(f.dataType), f.nullable) for f in dt.fields]
+            )
+        return dt
+
+    types = [ntz(f.dataType) for f in df.schema.fields]
+    if types == [f.dataType for f in df.schema.fields]:
+        return df
+    # positional: a SELECT may repeat a column name
+    tmp = [f"_c{i}" for i in range(len(types))]
+    return df.toDF(*tmp).select(
+        *[F.col(c).cast(dt) for c, dt in zip(tmp, types)]
+    ).toDF(*df.columns)
 
 
 def key_join(left: DataFrame, right: DataFrame, pk: list[str], how: str) -> DataFrame:
@@ -253,7 +341,7 @@ class ManagedTable:
             # limit(0) turns the empty frame into an empty LocalRelation, so
             # the optimizer prunes joins against it (a table's first commit
             # has an empty pre-image) instead of broadcasting the other side
-            raw = self.spark.createDataFrame([], schema=stored).limit(0)
+            raw = local_frame(self.spark, [], stored).limit(0)
         return self.logical(raw, meta)
 
     def _to_stored(self, df: DataFrame, ts: int, deleted: bool, meta: dict) -> DataFrame:
@@ -298,29 +386,30 @@ class ManagedTable:
 
     # -- write path --------------------------------------------------------
 
+    @staticmethod
+    def _sort_cols(meta: dict) -> list[str]:
+        """The physical columns a segment is sorted by: the ``WRITE_SORT``
+        prop (an index's key) or else the PK — the reference's row-key
+        order (SURVEY §1.1)."""
+        phys = meta.get("physical", {})
+        keys = meta.get("props", {}).get("WRITE_SORT") or meta["pk"]
+        return [phys.get(c, c) for c in keys]
+
+    def _segment_path(self, ts: int) -> str:
+        return os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
+
     def _append_segment(self, df: DataFrame, ts: int, deleted: bool = False) -> int:
+        # A delta segment is written the way HBase flushes a memstore: each
+        # task writes a locally sorted run of its own partition, so parquet
+        # row-group min/max stats prune key range/point scans.  No range
+        # partitioning: its sampling jobs would re-run the source (a DML
+        # statement's key-scoped pre-image read) before the write runs it
+        # again, and double-fire observe() metrics.  Only a whole-table
+        # ``rewrite`` sorts globally.
         meta = self.meta
         out = self._to_stored(df, ts, deleted, meta)
-        phys = meta.get("physical", {})
-        # Segment layout mirrors the reference's row-key order (SURVEY §1.1):
-        #   * WRITE_SORT (secondary indexes): range-partition + sort by the
-        #     index key — globally disjoint sorted files, the covered-probe
-        #     layout.  repartitionByRange SAMPLES its input (an extra pass),
-        #     which is fine for index builds/maintenance scans.
-        #   * default (base tables): sortWithinPartitions by the PK — each
-        #     task writes a locally-sorted run (the LSM shape), so parquet
-        #     row-group min/max stats prune PK range/point scans WITHOUT an
-        #     extra shuffle or the sampling re-read of the source that
-        #     range partitioning would cost on every UPSERT (it would also
-        #     double-fire observe() metrics — the single-pass count).
-        sort_cols = meta.get("props", {}).get("WRITE_SORT")
-        if sort_cols:
-            sort_cols = [phys.get(c, c) for c in sort_cols]
-            out = out.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
-        else:
-            out = out.sortWithinPartitions(*[phys.get(c, c) for c in meta["pk"]])
-        path = os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
-        out.write.mode("errorifexists").parquet(path)
+        out = out.sortWithinPartitions(*self._sort_cols(meta))
+        out.write.mode("errorifexists").parquet(self._segment_path(ts))
         return ts
 
     def upsert_df(self, df: DataFrame, on_duplicate: str | dict | None = None) -> int:
@@ -410,7 +499,7 @@ class ManagedTable:
         the read-side latest-wins window would break the tie arbitrarily."""
         full = [{f.name: r.get(f.name) for f in self.schema.fields} for r in rows]
         by_pk = {tuple(r[c] for c in self.pk): r for r in full}
-        df = self.spark.createDataFrame(list(by_pk.values()), schema=self.schema)
+        df = local_frame(self.spark, list(by_pk.values()), self.schema)
         return self.upsert_df(df, on_duplicate=on_duplicate)
 
     def delete_where(
@@ -469,36 +558,33 @@ class ManagedTable:
         )
         return int(obs.get["n"])
 
-    def compact(self) -> None:
-        """Fold all segments into one base segment (retention/TTL hook).
+    def rewrite(self, df: DataFrame) -> None:
+        """Replace the table's contents with the rows of ``df`` (one row per
+        PK), written as one base segment at a new ts.
 
-        The base segment keeps the change-log columns so the read fast path
-        stays uniform; the write lands in a temp dir and is published by a
-        single atomic rename before the superseded segments are removed.
-        """
-        meta = self.meta
-        ts = self._next_ts()
-        snap = self._to_stored(self.read(), ts, False, meta)
-        # Compaction is where the GLOBAL sort pays off: one range shuffle
-        # rewrites the whole history as disjoint sorted files (the sampling
-        # pass is amortized over the full rewrite), so the single-segment
-        # fast path afterwards serves PK scans with maximal row-group
-        # pruning.
-        phys = meta.get("physical", {})
-        sort_cols = [
-            phys.get(c, c)
-            for c in meta.get("props", {}).get("WRITE_SORT") or meta["pk"]
-        ]
-        snap = snap.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
-        tmp = os.path.join(self.dir, f"_compact-{uuid.uuid4().hex[:8]}.parquet")
-        snap.write.mode("errorifexists").parquet(tmp)
+        This is the one write that sorts globally — the analogue of a major
+        compaction: one range shuffle lays the table out as disjoint sorted
+        files (the sampling pass is amortized over the full rewrite), so the
+        single-segment fast path serves key scans with maximal row-group
+        pruning.  The write lands in a temp dir and is published by a single
+        atomic rename before the superseded segments are removed."""
         import shutil
 
+        meta = self.meta
+        ts = self._next_ts()
+        cols = self._sort_cols(meta)
+        out = self._to_stored(df, ts, False, meta)
+        out = out.repartitionByRange(*cols).sortWithinPartitions(*cols)
+        tmp = os.path.join(self.dir, f"_rewrite-{uuid.uuid4().hex[:8]}.parquet")
+        out.write.mode("errorifexists").parquet(tmp)
         old = self._segments()
-        final = os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
-        shutil.move(tmp, final)
+        shutil.move(tmp, self._segment_path(ts))
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
+
+    def compact(self) -> None:
+        """Fold all segments into one base segment (retention/TTL hook)."""
+        self.rewrite(self.read())
 
     # -- read path ---------------------------------------------------------
 

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, types as T
 
+from phoenix_spark.mutations import local_frame
+
 # java.sql.Types codes (public JDBC constants) keyed by Spark type name —
 # what the reference's DATA_TYPE column carries (PDataType.getSqlType()).
 _JDBC_TYPE = {
@@ -231,7 +233,7 @@ def catalog_df(engine) -> DataFrame:
             view_type="u",  # predicate-plus-columns views are updatable
         )
 
-    return engine.spark.createDataFrame(rows, _CATALOG_SCHEMA)
+    return local_frame(engine.spark, rows, _CATALOG_SCHEMA)
 
 
 _SEQUENCE_SCHEMA = (
@@ -257,7 +259,7 @@ def sequence_df(engine) -> DataFrame:
                 bool(s.get("cycle")),
             )
         )
-    return engine.spark.createDataFrame(rows, _SEQUENCE_SCHEMA)
+    return local_frame(engine.spark, rows, _SEQUENCE_SCHEMA)
 
 
 _FUNCTION_SCHEMA = (
@@ -273,7 +275,7 @@ def function_df(engine) -> DataFrame:
             getattr(engine, "_functions", {}).items()
         )
     ]
-    return engine.spark.createDataFrame(rows, _FUNCTION_SCHEMA)
+    return local_frame(engine.spark, rows, _FUNCTION_SCHEMA)
 
 
 _TASK_SCHEMA = (
@@ -304,7 +306,7 @@ def task_df(engine) -> DataFrame:
                 t.get("data"),
             )
         )
-    return engine.spark.createDataFrame(rows, _TASK_SCHEMA)
+    return local_frame(engine.spark, rows, _TASK_SCHEMA)
 
 
 _STATS_SCHEMA = (
@@ -328,7 +330,7 @@ def stats_df(engine) -> DataFrame:
                     stats.get("n_segments"),
                 )
             )
-    return engine.spark.createDataFrame(rows, _STATS_SCHEMA)
+    return local_frame(engine.spark, rows, _STATS_SCHEMA)
 
 
 BUILDERS = {
