@@ -20,7 +20,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
-from phoenix_spark.sqllex import iter_top, match_forward, split_top
+from phoenix_spark.sqllex import iter_top, match_forward, segments, split_top
 from phoenix_spark.types import parse_type
 
 
@@ -133,6 +133,9 @@ _PK_CONSTRAINT_RE = re.compile(
 
 
 def parse_create_table(sql: str) -> CreateTable:
+    # comments go first: a `-- note, with comma` in the column list would
+    # otherwise reach the column parser as text
+    sql = "".join(" " if kind == "comment" else text for kind, text in segments(sql))
     m = _CREATE_TABLE_RE.match(_strip(sql))
     if not m:
         raise ValueError(f"unparseable CREATE TABLE: {sql[:120]!r}")

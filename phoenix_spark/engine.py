@@ -86,13 +86,7 @@ class Engine:
                 self._view_owners = json.load(f)
         self._seq_path = os.path.join(self.warehouse, "_sequences.json")
         # secondary indexes (SYSTEM.CATALOG's PTableType.INDEX rows analogue)
-        self._indexes_path = os.path.join(self.warehouse, "_indexes.json")
-        self._indexes: dict[str, "IX.IndexDef"] = {}
-        if os.path.exists(self._indexes_path):
-            with open(self._indexes_path) as f:
-                self._indexes = {
-                    k: IX.IndexDef.from_json(v) for k, v in json.load(f).items()
-                }
+        self._indexes = IX.load_indexes(self.warehouse)
         self._cursors: dict[str, dict] = {}
         # CDC objects (CREATE CDC, grammar :593-616): name -> (table, scope)
         self._cdcs_path = os.path.join(self.warehouse, "_cdcs.json")
@@ -120,24 +114,29 @@ class Engine:
         self._ts_cols: dict[str, set[str]] | None = None
         if sf_dir is not None:
             self.attach(sf_dir)
+        # a registry written before indexes recorded their base: bind each
+        # entry once, or base commits would never maintain it
+        unbound = [d for d in self._indexes.values() if d.base is None]
+        for d in unbound:
+            try:
+                self._bind_index(d)
+            except ValueError:
+                continue  # its base is gone; never served (_maybe_use_index)
+        if unbound:
+            IX.save_indexes(self.warehouse, self._indexes)
 
     def with_tenant(self, tenant_id: str) -> "Engine":
         """A tenant-scoped connection sharing this engine's warehouse."""
-        e = Engine(self.spark, warehouse=self.warehouse, tenant_id=tenant_id)
-        e.catalog = self.catalog
-        e._views = self._views
-        e._view_owners = self._view_owners
-        return e
+        return self._connection(tenant_id, None)
 
     def with_scn(self, scn: int) -> "Engine":
         """A point-in-time connection (CurrentSCN): reads resolve AS OF the
         given commit timestamp; mutations are rejected."""
-        e = Engine(
-            self.spark,
-            warehouse=self.warehouse,
-            tenant_id=self.tenant_id,
-            scn=scn,
-        )
+        return self._connection(self.tenant_id, scn)
+
+    def _connection(self, tenant_id: str | None, scn: int | None) -> "Engine":
+        """A connection sharing this engine's warehouse, catalog and views."""
+        e = Engine(self.spark, warehouse=self.warehouse, tenant_id=tenant_id, scn=scn)
         e.catalog = self.catalog
         e._views = self._views
         e._view_owners = self._view_owners
@@ -283,10 +282,7 @@ class Engine:
         snapshot views instead (_rewrite_tenant_refs / _rewrite_scn_refs)."""
         if self.tenant_id is None and self.scn is None:
             return self
-        e = Engine(self.spark, warehouse=self.warehouse)
-        e.catalog = self.catalog
-        e._views = self._views
-        e._view_owners = self._view_owners
+        e = self._connection(None, None)
         e._registered = self._registered
         return e
 
@@ -295,40 +291,44 @@ class Engine:
         # The shared temp view always carries the UNSCOPED state — a tenant
         # connection registering its filtered frame here would leak its
         # scope into every other connection (TenantSpecificTablesDMLIT).
-        bare = name.split(".")[-1]
-        owner = self._view_owners.get(self._qualify(name))
-        if owner is None:
-            self._unscoped().table(name).createOrReplaceTempView(bare)
-            self._registered.add(bare)
-        elif owner == self.tenant_id:
-            # tenant-owned view: only its owner can resolve it; register the
-            # scoped frame (foreign connections are rejected before lookup)
-            self.table(name).createOrReplaceTempView(bare)
+        # Views recompile their predicate over the CURRENT base state
+        # (QueryCompiler.java:803-806), and an index follows its base's
+        # commits — but a Spark temp view pins the segment list that existed
+        # when it was registered, so re-register every view whose chain
+        # bottoms out at this table, and every index on it, or the temp view
+        # would keep serving the pre-mutation snapshot.
+        base = name.split(".")[-1].lower()
+        deps = [
+            v
+            for v in self._views
+            if v != name and self._view_root(v).split(".")[-1] == base
+        ]
+        try:
+            deps += [d.name for d in self.managed(name)._indexes()]
+        except ValueError:
+            pass  # a view: its indexes are on its physical base
+        for n in [name, *deps]:
+            bare = n.split(".")[-1]
+            owner = self._view_owners.get(self._qualify(n))
+            if owner is None:
+                self._unscoped().table(n).createOrReplaceTempView(bare)
+            elif owner == self.tenant_id:
+                # tenant-owned view: only its owner can resolve it; register
+                # the scoped frame (foreign connections are rejected before
+                # lookup)
+                self.table(n).createOrReplaceTempView(bare)
+            else:
+                continue
             self._registered.add(bare)
         self._ts_cols = None  # new schema may add date/timestamp columns
-        # Views recompile their predicate over the CURRENT base state
-        # (QueryCompiler.java:803-806) — but a Spark temp view pins the
-        # segment list that existed when it was registered, so re-register
-        # every view whose chain bottoms out at this table or the temp view
-        # would keep serving the pre-mutation snapshot.
-        base = bare.lower()
-        for vname in self._views:
-            if vname == name:
-                continue
-            vowner = self._view_owners.get(vname)
-            node = vname
-            while node in self._views:
-                node = self._views[node][0]
-            if node.split(".")[-1].lower() != base:
-                continue
-            if vowner is None:
-                self._unscoped().table(vname).createOrReplaceTempView(
-                    vname.split(".")[-1]
-                )
-                self._registered.add(vname.split(".")[-1])
-            elif vowner == self.tenant_id:
-                self.table(vname).createOrReplaceTempView(vname.split(".")[-1])
-                self._registered.add(vname.split(".")[-1])
+
+    def _view_root(self, name: str) -> str:
+        """The table at the bottom of view ``name``'s chain (``name`` itself
+        when it is no view)."""
+        node = self._qualify(name)
+        while node in self._views:
+            node = self._qualify(self._views[node][0])
+        return node
 
     def _ts_columns(self) -> dict[str, set[str]]:
         """Per-table names of date/timestamp-typed columns across attached +
@@ -1247,7 +1247,7 @@ class Engine:
                     return None
                 if chain is None:
                     return None
-                frame = self._apply_view_chain(b.read(), chain)
+                frame = IX.apply_view_chain(b.read(), chain)
                 return set(frame.schema.fieldNames())  # analysis only, no job
 
         def base_pk_of(table: str):
@@ -1257,7 +1257,7 @@ class Engine:
                 return self._index_base(table)[0].pk
 
         active = {
-            k: d for k, d in self._indexes.items() if d.state == "ACTIVE"
+            k: d for k, d in self._indexes.items() if d.state == "ACTIVE" and d.base
         }
         if forced:
             # INDEX(t ix...) restricts each hinted table to the named indexes
@@ -1272,8 +1272,9 @@ class Engine:
         if choice is not None:
             table_ref, d, eff_text = choice
             if d.name.split(".")[-1] not in self._registered:
-                # every writer of an index re-registers its temp view, so a
-                # registered one is current
+                # an index changes only by its base's commits and TRUNCATE
+                # (both re-register the base, so its indexes) or by CREATE
+                # and REBUILD (which register it): a registered one is current
                 self._register(d.name)
             return IX.substitute_table(eff_text, table_ref, d.name)
         jb = IX.choose_join_back(
@@ -1412,11 +1413,8 @@ class Engine:
             # a tenant connection resolves only MULTI_TENANT bases
             # (TenantSpecificTablesDDLIT.testCreateTenantViewFromNonMultiTenant
             # -> TableNotFoundException)
-            node = self._qualify(cv.parent)
-            while node in self._views:
-                node = self._qualify(self._views[node][0])
             try:
-                base_mt0 = self.managed(node)
+                base_mt0 = self.managed(self._view_root(cv.parent))
             except ValueError:
                 base_mt0 = None
             if base_mt0 is None or self._tenant_col(base_mt0) is None:
@@ -1455,10 +1453,7 @@ class Engine:
             # column (the reference writes them as ordinary cells of the same
             # physical HBase table — any row can grow cells; here the base
             # grows the overflow column once, metadata-only)
-            node = cv.parent
-            while self._qualify(node) in self._views:
-                node = self._views[self._qualify(node)][0]
-            base_mt = self.managed(node)
+            base_mt = self.managed(self._view_root(cv.parent))
             if "props" not in base_mt.schema.fieldNames():
                 from pyspark.sql import types as T
 
@@ -1832,37 +1827,31 @@ class Engine:
 
         The index is a ManagedTable with PK = (index key ++ base PK) whose
         segments are sorted by the index key (WRITE_SORT), read-path
-        substituted by _exec_select when it covers a query."""
+        substituted by _exec_select when it covers a query.  Every commit
+        on the base maintains it, from what ``_bind_index`` records."""
         d, if_not_exists = IX.parse_create_index(text)
         if d.name in self._indexes:
             if if_not_exists:
                 return 0
             raise ValueError(f"index {d.name} already exists")
-        base, chain = self._index_base(d.table)
+        base = self._bind_index(d)
         source = base.read()
-        if chain is not None:
+        if d.chain is not None:
             # view index: rows come from the view's filtered frame; the PK
             # stays the BASE table's row key (view rows are base rows)
-            source = self._apply_view_chain(source, chain)
-        base_fields = {f.name.lower(): f for f in source.schema.fields}
+            source = IX.apply_view_chain(source, d.chain)
+        # functional keys: the generated columns' types come from evaluating
+        # the expressions against the base schema
+        fields = {
+            f.name.lower(): f for f in IX.with_index_exprs(source, d).schema.fields
+        }
         cols = d.covered(base.pk)
         for c in cols:
-            if c not in base_fields and c not in d.exprs:
+            if c not in fields:
                 raise ValueError(f"index column {c} not in table {d.table}")
         from pyspark.sql import types as T
 
-        # functional keys: the generated columns' types come from evaluating
-        # the expressions against the base schema
-        expr_fields: dict[str, T.StructField] = {}
-        if d.exprs:
-            probe = self._with_index_exprs(source, d)
-            expr_fields = {f.name.lower(): f for f in probe.schema.fields}
-        schema = T.StructType(
-            [
-                base_fields[c] if c in base_fields else expr_fields[c]
-                for c in cols
-            ]
-        )
+        schema = T.StructType([fields[c] for c in cols])
         nn = base.meta.get("not_null")
         required = base.pk if nn is None else nn
         imt = ManagedTable.create(
@@ -1879,19 +1868,26 @@ class Engine:
         )
         # initial build: one distributed projection scan of the base table,
         # written globally sorted by the index key
-        imt.rewrite(self._index_rows(base.read(), d, chain, base.pk))
+        imt.rewrite(IX.index_rows(base.read(), d, base.pk))
         self._indexes[d.name] = d
-        self._save_indexes()
+        IX.save_indexes(self.warehouse, self._indexes)
         self._register(d.name)
         return 0
 
-    def _save_indexes(self) -> None:
-        with open(self._indexes_path, "w") as f:
-            json.dump({k: v.to_json() for k, v in self._indexes.items()}, f, indent=1)
+    def _bind_index(self, d: "IX.IndexDef") -> ManagedTable:
+        """Record in ``d`` what a commit on its base needs to maintain it —
+        the serialized IndexMaintainer analogue: the physical base table,
+        the view chain, and the Spark SQL of the functional keys and of the
+        partial predicate.  Returns the physical base."""
+        base, d.chain = self._index_base(d.table)
+        d.base = base.name
+        d.expr_sql = {n: self._translate_pred(x, d.table) for n, x in d.exprs.items()}
+        d.where_sql = d.where and self._translate_pred(d.where, d.table)
+        return base
 
     def _drop_index(self, name: str) -> None:
         self._indexes.pop(name, None)
-        self._save_indexes()
+        IX.save_indexes(self.warehouse, self._indexes)
         ManagedTable(self.spark, self.warehouse, name).drop()
         self.spark.catalog.dropTempView(name)
         self._registered.discard(name)
@@ -1924,99 +1920,6 @@ class Engine:
             node = parent if parent in self._views else self._qualify(parent)
         chain.reverse()
         return self.managed(node), chain
-
-    def _apply_view_chain(
-        self, df: DataFrame, chain: list, json_col: str = "props"
-    ) -> DataFrame:
-        """Replay a view chain over ``df`` — same semantics as table():
-        each view's added columns resolve from the JSON overflow column
-        (NULL when the base has none), then its predicate filters."""
-        from phoenix_spark.types import parse_type
-
-        for where, vcols in chain:
-            excluded = []
-            for col, typ in (vcols or {}).items():
-                if typ is None:  # diverged view: parent column excluded
-                    excluded.append(col)
-                    continue
-                src = (
-                    F.get_json_object(F.col(json_col), f"$.{col}")
-                    if json_col in df.columns
-                    else F.lit(None)
-                )
-                df = df.withColumn(col, src.cast(parse_type(typ)))
-            if where:
-                df = df.filter(where)
-            if excluded:
-                df = df.drop(*excluded)
-        return df
-
-    def _index_rows(
-        self, df: DataFrame, d: "IX.IndexDef", chain: list | None, pk: list[str]
-    ) -> DataFrame:
-        """IndexMaintainer.buildRowKey analogue: the index rows of base rows
-        ``df`` — view chain replayed, functional keys materialized, and for a
-        partial index only the rows satisfying its predicate."""
-        if chain is not None:
-            df = self._apply_view_chain(df, chain)
-        df = self._with_index_exprs(df, d)
-        if d.where is not None:
-            df = df.filter(self._translate_pred(d.where, d.table))
-        return df.select(*d.covered(pk))
-
-    def _sync_indexes(self, table: str, ts: int) -> None:
-        """Maintain every index of ``table`` for its commit at ``ts`` — the
-        IndexRegionObserver shape: read the batch's current row states once,
-        derive each index's deletes and puts from pre- and post-image.
-
-        The commit's segment holds whole rows for exactly the touched keys,
-        so it is the post-image (tombstones for deleted rows).  The
-        pre-image is a snapshot read at ``ts - 1`` scoped to those keys.
-        Each index gets one segment: the post-image's index rows, plus
-        tombstones for pre-image index rows that are not re-put (a row
-        whose key or predicate outcome changed).  A re-put key gets no
-        tombstone: both would carry the same ts and tie."""
-        table = table.split(".")[-1].lower()
-        work: list[tuple["IX.IndexDef", list | None]] = []
-        for d in self._indexes.values():
-            if d.state == "DISABLED":
-                continue
-            if d.table == table:
-                work.append((d, None))
-                continue
-            # view indexes maintain on BASE-table writes (the reference's
-            # IndexMaintainer covers view indexes server-side the same way)
-            try:
-                b, chain = self._index_base(d.table)
-            except ValueError:
-                continue
-            if chain is not None and b.name.split(".")[-1].lower() == table:
-                work.append((d, chain))
-        if not work:
-            return
-        base = self.managed(table)
-        commit = base.read_commit(ts)
-        post = commit.filter(~F.col(_DEL_COL)).drop(_DEL_COL)
-        pre = base.read(as_of=ts - 1, keys=commit)
-        for d, chain in work:
-            imt = self.managed(d.name)
-            puts = self._index_rows(post, d, chain, base.pk)
-            gone = key_join(
-                self._index_rows(pre, d, chain, base.pk), puts, imt.pk, "left_anti"
-            )
-            imt._append_segment(
-                puts.withColumn(_DEL_COL, F.lit(False)).unionByName(
-                    gone.withColumn(_DEL_COL, F.lit(True))
-                ),
-                imt._next_ts(),
-            )
-            self._register(d.name)
-
-    def _with_index_exprs(self, df: DataFrame, d: "IX.IndexDef") -> DataFrame:
-        """Materialize an index's functional-key expressions as columns."""
-        for name, ex in d.exprs.items():
-            df = df.withColumn(name, F.expr(self._translate_pred(ex, d.table)))
-        return df
 
     def _translate_pred(self, pred: str, table: str | None = None) -> str:
         """Phoenix-dialect predicate fragment -> Spark SQL condition (the
@@ -2106,6 +2009,11 @@ class Engine:
                 raise ValueError(f"no view {dr.name}")
             self._save_views()
             self.spark.catalog.dropTempView(dr.name)
+            # its indexes go with it: base commits would keep maintaining them
+            leaf = dr.name.split(".")[-1]
+            for d in list(self._indexes.values()):
+                if d.chain is not None and d.table == leaf:
+                    self._drop_index(d.name)
             return 0
         mt = ManagedTable(self.spark, self.warehouse, self._qualify(dr.name))
         if not mt.exists():
@@ -2120,54 +2028,34 @@ class Engine:
             raise ValueError(f"Table undefined. tableName={dr.name}")
         # child views block a plain DROP TABLE; CASCADE drops them too
         # (MetaDataClient.dropTable: CANNOT_MUTATE_TABLE unless cascade)
+        # whole chains: a view-of-a-view goes too
         base = dr.name.split(".")[-1].lower()
-        child_views = []
-        for v in self._views:  # whole chains: a view-of-a-view goes too
-            node = v
-            while node in self._views:
-                node = self._views[node][0]
-            if node.split(".")[-1].lower() == base:
-                child_views.append(v)
+        child_views = [
+            v for v in self._views if self._view_root(v).split(".")[-1] == base
+        ]
         if child_views and not dr.truncate:
             if not dr.cascade:
                 raise ValueError(
                     f"cannot drop table {dr.name}: dependent view(s) "
                     f"{sorted(child_views)} exist — use DROP TABLE ... CASCADE"
                 )
-            # indexes created ON the dropped child views go with them (r04
-            # advice: they otherwise stay ACTIVE with orphaned segments) —
-            # collected BEFORE the views pop so the name match still resolves
-            view_leaves = {v.split(".")[-1].lower() for v in child_views}
-            view_indexes = [
-                d.name
-                for d in self._indexes.values()
-                if d.table.split(".")[-1].lower() in view_leaves
-            ]
             for v in child_views:
                 self._views.pop(v, None)
                 self.spark.catalog.dropTempView(v.split(".")[-1])
                 self._registered.discard(v.split(".")[-1])
             self._save_views()
-            for ix in view_indexes:
-                self._drop_index(ix)
-        dependent = [
-            d.name
-            for d in self._indexes.values()
-            if d.table == dr.name.split(".")[-1].lower()
-        ]
         if dr.truncate:
-            mt.truncate()
+            mt.truncate()  # its indexes too
             self._register(dr.name)
-            for ix in dependent:  # indexes follow the base table's state
-                ManagedTable(self.spark, self.warehouse, ix).truncate()
-                self._register(ix)
         else:
             mt.drop()
             self.spark.catalog.dropTempView(dr.name)
             self._registered.discard(dr.name.split(".")[-1])
             self._ts_cols = None
-            for ix in dependent:
-                self._drop_index(ix)
+            # its indexes go with it, those on the dropped child views too
+            # (r04 advice: they otherwise stay ACTIVE with orphaned segments)
+            for d in mt._indexes():
+                self._drop_index(d.name)
         return 0
 
     _ALTER_INDEX_RE = re.compile(
@@ -2210,9 +2098,9 @@ class Engine:
                 import datetime as _dt
 
                 start = _dt.datetime.now().isoformat()
-                base, chain = self._index_base(d.table)
+                base = self._bind_index(d)
                 imt = self.managed(d.name)
-                imt.rewrite(self._index_rows(base.read(), d, chain, base.pk))
+                imt.rewrite(IX.index_rows(base.read(), d, base.pk))
                 self._register(d.name)
                 d.state = "ACTIVE"
                 if am.group(6):  # ASYNC: recorded in SYSTEM.TASK (the
@@ -2229,7 +2117,7 @@ class Engine:
                         status="COMPLETED",
                         data=f"INDEX_REBUILD {d.name}",
                     )
-            self._save_indexes()
+            IX.save_indexes(self.warehouse, self._indexes)
             return 0
         m = re.match(
             r"^\s*ALTER\s+(TABLE|VIEW)\s+([\w.]+)\s+(ADD|DROP|SET)\s+"
@@ -2271,10 +2159,7 @@ class Engine:
                             f"cannot drop {col} through view {name}: "
                             "no such column"
                         )
-                    node = parent
-                    while node in self._views:
-                        node = self._views[node][0]
-                    if col in self.managed(node).pk:
+                    if col in self.managed(self._view_root(parent)).pk:
                         raise ValueError(
                             f"cannot drop PK column {col} through view "
                             f"{name}: the row key is the row identity"
@@ -2791,7 +2676,6 @@ class Engine:
         from phoenix_spark.types import parse_type
 
         base_by_name = {f.name: f for f in mt.schema.fields}
-        ts = mt._next_ts()  # this statement's commit (index maintenance)
         if up.select is not None:
             src = self._exec_select(up.select).toDF(*cols)
             for c in dyn:
@@ -2957,7 +2841,6 @@ class Engine:
                 n = len(up.values)
                 mt.upsert_df(df, on_duplicate=up.on_duplicate)
         self._register(up.table)
-        self._sync_indexes(up.table, ts)
         if up.returning:
             # RETURNING * (grammar :901): the written slice as full rows.
             # With ON DUPLICATE KEY the reference returns the POST-operation
@@ -3005,10 +2888,9 @@ class Engine:
             )
         cond = translate_phoenix_sql(dl.where) if dl.where else None
         order = translate_phoenix_sql(dl.order_by) if dl.order_by else None
-        ts = mt._next_ts()
+        ts = mt._next_ts()  # this statement's commit (RETURNING)
         n = mt.delete_where(cond, order_by=order, limit=dl.limit)
         self._register(dl.table)
-        self._sync_indexes(dl.table, ts)
         if dl.returning:
             # the tombstones are the exact victim rows, top-N cut included
             return mt.read_commit(ts).drop(_DEL_COL)

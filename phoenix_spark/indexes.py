@@ -21,11 +21,14 @@ the Parquet reader instead of an HBase row-key scan.  At 100 TB the index is
 a fraction of the base table's width and the probe reads only the row-groups
 whose [min,max] straddle the predicate.
 
-Maintenance is synchronous per mutation batch (the reference maintains
-global indexes server-side per batch too): the pre-images of the touched
-base PKs are tombstoned in the index, then the post-state rows are upserted.
-Both sides are computed as broadcast semi-joins of the (small) touched-PK
-set against the base snapshot — never a full rewrite of the index.
+The commit maintains the indexes, whatever wrote it (DML, a bulk load, a
+CDC apply, a TTL expiry), as IndexRegionObserver applies the IndexMaintainer
+riding on every mutation batch.  CREATE INDEX and ``REBUILD`` record in the
+registry entry what the commit needs (``IndexDef.base`` and what follows),
+and ``ManagedTable``'s commit derives one segment per index from the segment
+it wrote: post-image index rows, plus tombstones for pre-image rows not
+re-put — never a full rewrite of the index.  ``index_rows`` is the one row
+derivation of the build, ``REBUILD`` and the commit.
 
 Read-path plan selection (QueryOptimizer.java:225-353 analogue):
   * covered substitution — the index table replaces the base table when it
@@ -51,10 +54,16 @@ Read-path plan selection (QueryOptimizer.java:225-353 analogue):
 
 from __future__ import annotations
 
+import json
+import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
+
+from pyspark.sql import DataFrame, functions as F
 
 from phoenix_spark.sqllex import match_forward, segments, split_top
+
+REGISTRY = "_indexes.json"
 
 
 class IndexError_(ValueError):
@@ -87,6 +96,14 @@ class IndexDef:
     # but never substituted; DISABLED = neither (REBUILD required to
     # reactivate, as in the reference).
     state: str = "ACTIVE"
+    # IndexMaintainer analogue, recorded by CREATE INDEX and REBUILD so a
+    # base commit derives the index rows without the engine: the physical
+    # base, the view chain (base-outward ``[where, vcols]``; None on a table)
+    # and the Spark SQL of the functional keys and the partial predicate.
+    base: str | None = None
+    chain: list | None = None
+    expr_sql: dict[str, str] = field(default_factory=dict)
+    where_sql: str | None = None
 
     def covered(self, base_pk: list[str]) -> list[str]:
         """All columns present in the index table, in storage order."""
@@ -96,22 +113,71 @@ class IndexDef:
         return cols
 
     def to_json(self) -> dict:
-        return {
-            "name": self.name,
-            "table": self.table,
-            "key": self.key,
-            "sort_orders": self.sort_orders,
-            "include": self.include,
-            "local": self.local,
-            "uncovered": self.uncovered,
-            "where": self.where,
-            "exprs": self.exprs,
-            "state": self.state,
-        }
+        return asdict(self)
 
     @classmethod
     def from_json(cls, d: dict) -> "IndexDef":
         return cls(**d)
+
+
+def load_indexes(warehouse: str) -> dict[str, IndexDef]:
+    """The warehouse's index registry, the one store of index state."""
+    path = os.path.join(warehouse, REGISTRY)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return {k: IndexDef.from_json(v) for k, v in json.load(f).items()}
+
+
+def save_indexes(warehouse: str, defs: dict[str, IndexDef]) -> None:
+    """Write the registry ``load_indexes`` reads."""
+    with open(os.path.join(warehouse, REGISTRY), "w") as f:
+        json.dump({k: d.to_json() for k, d in defs.items()}, f, indent=1)
+
+
+def apply_view_chain(df: DataFrame, chain: list) -> DataFrame:
+    """Replay a view chain over base rows ``df`` as ``Engine.table`` does:
+    each view's added columns resolve from the JSON overflow column
+    ``props`` (NULL when the base has none), then its predicate filters."""
+    from phoenix_spark.types import parse_type
+
+    for where, vcols in chain:
+        excluded = []
+        for col, typ in (vcols or {}).items():
+            if typ is None:  # diverged view: parent column excluded
+                excluded.append(col)
+                continue
+            src = (
+                F.get_json_object(F.col("props"), f"$.{col}")
+                if "props" in df.columns
+                else F.lit(None)
+            )
+            df = df.withColumn(col, src.cast(parse_type(typ)))
+        if where:
+            df = df.filter(where)
+        if excluded:
+            df = df.drop(*excluded)
+    return df
+
+
+def with_index_exprs(df: DataFrame, d: IndexDef) -> DataFrame:
+    """Materialize an index's functional-key expressions as columns."""
+    for name, sql in d.expr_sql.items():
+        df = df.withColumn(name, F.expr(sql))
+    return df
+
+
+def index_rows(df: DataFrame, d: IndexDef, pk: list[str]) -> DataFrame:
+    """IndexMaintainer.buildRowKey analogue: the index rows of base rows
+    ``df`` (base PK ``pk``) — view chain replayed, functional keys
+    materialized, and for a partial index only the rows satisfying its
+    predicate."""
+    if d.chain is not None:
+        df = apply_view_chain(df, d.chain)
+    df = with_index_exprs(df, d)
+    if d.where_sql is not None:
+        df = df.filter(d.where_sql)
+    return df.select(*d.covered(pk))
 
 
 _HEAD_RE = re.compile(

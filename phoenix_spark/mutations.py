@@ -24,9 +24,11 @@ Scale design (100 TB):
   * a DML statement reads only its own keys: ``read(keys=...)`` semi-joins
     the raw segment union with the touched keys *before* the window (valid
     because the window partitions on exactly the PK), so the window shuffles
-    the touched keys' versions, never the table.  Index maintenance takes
-    the post-image from the statement's own segment (``read_commit``) and the
-    pre-image from a key-scoped snapshot read;
+    the touched keys' versions, never the table;
+  * the commit maintains the table's indexes, whatever wrote it (DML, bulk
+    loads, CDC apply, TTL expiry): the post-image is the commit's own
+    segment (``read_commit``), the pre-image a snapshot read scoped to its
+    keys, and the index rows follow the index's registry entry;
   * client-built rows (UPSERT VALUES) reach Spark as an Arrow-built
     ``LocalRelation`` (``local_frame``), so a small commit starts no Python
     worker;
@@ -62,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from phoenix_spark import indexes as IX
 from phoenix_spark.sqllex import split_top
 
 _TS_COL = "_mutation_ts"
@@ -169,6 +172,7 @@ class ManagedTable:
 
     def __init__(self, spark: SparkSession, warehouse: str, name: str):
         self.spark = spark
+        self.warehouse = warehouse
         self.name = name
         # dotted names (schema.table, grammar :516-518) nest as directories
         self.dir = os.path.join(warehouse, *name.split("."))
@@ -224,10 +228,13 @@ class ManagedTable:
         shutil.rmtree(self.dir, ignore_errors=True)
 
     def truncate(self) -> None:
+        """Drop every row, of this table's indexes too."""
         import shutil
 
         shutil.rmtree(self.seg_dir, ignore_errors=True)
         os.makedirs(self.seg_dir, exist_ok=True)
+        for d in self._indexes():
+            ManagedTable(self.spark, self.warehouse, d.name).truncate()
 
     def add_column(self, name: str, dtype: T.DataType) -> None:
         """ALTER TABLE ADD (metadata-only).  A name some segment may
@@ -295,6 +302,13 @@ class ManagedTable:
 
     def _next_ts(self) -> int:
         return max((_seg_ts(p) for p in self._segments()), default=0) + 1
+
+    def _indexes(self) -> list["IX.IndexDef"]:
+        """The indexes whose physical base is this table (view indexes too)."""
+        return [
+            d for d in IX.load_indexes(self.warehouse).values()
+            if d.base == self.name
+        ]
 
     # -- stored layout -----------------------------------------------------
 
@@ -410,7 +424,35 @@ class ManagedTable:
         out = self._to_stored(df, ts, deleted, meta)
         out = out.sortWithinPartitions(*self._sort_cols(meta))
         out.write.mode("errorifexists").parquet(self._segment_path(ts))
+        self._maintain_indexes(ts)
         return ts
+
+    def _maintain_indexes(self, ts: int) -> None:
+        """Maintain every index that is not DISABLED for the commit at
+        ``ts`` (IndexRegionObserver).  The commit's segment holds whole rows
+        for exactly the touched keys, so it is the post-image (tombstones
+        for deleted rows); the pre-image is a snapshot read at ``ts - 1``
+        scoped to those keys.  Each index gets one segment: the post-image's
+        index rows, plus tombstones for pre-image index rows not re-put (key
+        or predicate outcome changed).  A re-put key gets no tombstone: both
+        would carry the same ts and tie."""
+        defs = [d for d in self._indexes() if d.state != "DISABLED"]
+        if not defs:
+            return
+        commit = self.read_commit(ts)
+        post = commit.filter(~F.col(_DEL_COL)).drop(_DEL_COL)
+        pre = self.read(as_of=ts - 1, keys=commit)
+        pk = self.pk
+        for d in defs:
+            imt = ManagedTable(self.spark, self.warehouse, d.name)
+            puts = IX.index_rows(post, d, pk)
+            gone = key_join(IX.index_rows(pre, d, pk), puts, imt.pk, "left_anti")
+            imt._append_segment(
+                puts.withColumn(_DEL_COL, F.lit(False)).unionByName(
+                    gone.withColumn(_DEL_COL, F.lit(True))
+                ),
+                imt._next_ts(),
+            )
 
     def upsert_df(self, df: DataFrame, on_duplicate: str | dict | None = None) -> int:
         """UPSERT SELECT / VALUES: insert-or-overwrite by PK.
@@ -424,7 +466,10 @@ class ManagedTable:
         server-side upsert.
 
         ``on_duplicate``:
-          * None      — plain upsert (latest wins at read time; no read needed)
+          * None      — plain upsert (latest wins at read time; no read
+                        needed); a boolean ``_deleted`` column in ``df``
+                        makes its true rows tombstones, so one change-log
+                        batch commits puts and deletes together
           * 'ignore'  — ON DUPLICATE KEY IGNORE: only rows whose PK is absent
                         are appended
           * {col: expr} — ON DUPLICATE KEY UPDATE: expressions evaluated over

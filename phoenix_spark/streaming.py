@@ -15,9 +15,10 @@ Phoenix's stream-shaped features and their Spark-native homes:
     beyond-reference surface (window(), session_window()).
 
 Scale: the stream source lists only NEW segment files per micro-batch; state
-for windowed aggregation is bounded by the watermark horizon, and the CDC
-apply job (`apply_changes`) writes through the same latest-wins change-log
-commit path as batch mutations.
+for windowed aggregation is bounded by the watermark horizon.  The CDC apply
+job (`apply_changes`) commits each micro-batch through `upsert_df`, and the
+TTL expiry (`compact_with_ttl`) through `delete_where` — the change-log
+commit that batch mutations use, which also maintains the target's indexes.
 """
 
 from __future__ import annotations
@@ -57,6 +58,8 @@ def apply_changes(
     foreachBatch receives each micro-batch of change rows; within a batch,
     latest-wins per PK is resolved before the single change-log commit, so
     the target's history stays compact (the MutationState batch analogue).
+    The commit holds the puts and the tombstones of the deleted keys that
+    are live in the target, and maintains the target's indexes.
     Returns the started StreamingQuery (caller awaits termination).
     """
     from pyspark.sql.window import Window
@@ -72,14 +75,13 @@ def apply_changes(
             .drop("_rn")
         )
         ups = latest.filter(F.col("change_op") == "UPSERT").select(*data_cols)
-        dels = latest.filter(F.col("change_op") == "DELETE").select(*data_cols)
-        if ups.limit(1).count():
-            target.upsert_df(ups)
-        if dels.limit(1).count():
-            # tombstone exactly these PKs
-            victims = target.read(keys=dels)
-            if victims.limit(1).count():
-                target._append_segment(victims, target._next_ts(), deleted=True)
+        dels = latest.filter(F.col("change_op") == "DELETE")
+        rows = ups.withColumn(_DEL_COL, F.lit(False)).unionByName(
+            target.read(keys=dels).withColumn(_DEL_COL, F.lit(True)),
+            allowMissingColumns=True,
+        )
+        if rows.limit(1).count():
+            target.upsert_df(rows)
 
     return (
         stream_changes(spark, source)

@@ -11,10 +11,12 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 # for every registered query, the 100 TB plan-contract sweep, the
 # Arrow-kernel equivalence pins, the exact integer dot behind every cosine,
 # the SQL front end (the dialect lexer's primitives and the sqlfront
-# property tests), the index-consistency property test over random DML
-# scripts, and the small-commit pins (client-built rows, index temp views).
-# Everything else (the IT-replay suites, engine/mutation/streaming tests) is
-# marked slow and runs via `pytest tests/ -m "" -q`.
+# property tests), the index-consistency property tests over random write
+# scripts — every writer of an indexed table: Engine.sql DML, both bulk
+# loads and an availableNow streaming CDC apply, the one streaming job in
+# this set — and the small-commit pins (client-built rows, index temp
+# views).  Everything else (the IT-replay suites, engine/mutation/streaming
+# tests) is marked slow and runs via `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",

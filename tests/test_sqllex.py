@@ -204,3 +204,15 @@ def test_split_top_rejoin_is_lossless(pieces, sep):
     else:
         assert sep.join(parts) == text
     assert all(split_top(p, sep) == [p] for p in parts)
+
+
+def test_create_table_drops_comments_in_column_list():
+    from phoenix_spark.ddl import parse_create_table
+
+    ct = parse_create_table(
+        "CREATE TABLE c2 (k INTEGER PRIMARY KEY, -- note, with comma\n"
+        " v VARCHAR DEFAULT '-- kept, as text', /* w, */ n BIGINT)"
+    )
+    assert ct.schema.fieldNames() == ["k", "v", "n"]
+    assert ct.pk == ["k"]
+    assert ct.defaults == {"v": "'-- kept, as text'"}
