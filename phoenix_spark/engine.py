@@ -27,10 +27,11 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from phoenix_spark import ddl as D
 from phoenix_spark import indexes as IX
-from phoenix_spark.catalog import Catalog
+from phoenix_spark.catalog import Catalog, file_signature
 from phoenix_spark.mutations import (
     _DEL_COL,
     ManagedTable,
@@ -40,6 +41,26 @@ from phoenix_spark.mutations import (
 )
 from phoenix_spark.sqlfront import classify, translate_phoenix_sql
 from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, unmask
+
+# translate_phoenix_sql's catalog arguments and the Spark types each holds
+_COLUMN_KINDS = {
+    "ts_columns": (T.DateType, T.TimestampType, T.TimestampNTZType),
+    "int_columns": (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+    "str_columns": (T.StringType,),
+    "float_columns": (T.FloatType,),
+}
+_WORD_RE = re.compile(r"[A-Za-z_]\w*")
+
+
+def _words(text: str) -> set[str]:
+    return {m.lower() for m in _WORD_RE.findall(text)}
+
+
+def _column_kinds(schema: T.StructType) -> dict[str, set[str]]:
+    return {
+        kind: {f.name for f in schema.fields if isinstance(f.dataType, types)}
+        for kind, types in _COLUMN_KINDS.items()
+    }
 
 
 class Engine:
@@ -110,8 +131,15 @@ class Engine:
         # (class_name, return_type, num_args).  Session-scoped like the
         # Spark UDF registry the callables live in.
         self._functions: dict[str, tuple[str, str | None, int | None]] = {}
-        self._registered: set[str] = set()
-        self._ts_cols: dict[str, set[str]] | None = None
+        # bare temp-view name -> what it shows: a managed table's (or
+        # index's) qualified name, or the frame registered under it
+        self._registered: dict[str, str | DataFrame] = {}
+        # managed table -> its newest commit ts when its temp view was
+        # registered (a temp view pins the segment list of that moment)
+        self._commits: dict[str, int] = {}
+        # meta.json or attached parquet path -> (file signature, column
+        # kinds): one column-type map per table version (_typed_columns)
+        self._columns: dict[str, tuple[tuple, dict[str, set[str]]]] = {}
         if sf_dir is not None:
             self.attach(sf_dir)
         # a registry written before indexes recorded their base: bind each
@@ -169,7 +197,6 @@ class Engine:
         """Point the engine at a data directory and register its tables."""
         self.catalog = Catalog(self.spark, sf_dir)
         self.catalog.register_all()
-        self._ts_cols = None
         return self
 
     def table(
@@ -308,19 +335,24 @@ class Engine:
         except ValueError:
             pass  # a view: its indexes are on its physical base
         for n in [name, *deps]:
-            bare = n.split(".")[-1]
-            owner = self._view_owners.get(self._qualify(n))
+            bare, q = n.split(".")[-1], self._qualify(n)
+            owner = self._view_owners.get(q)
             if owner is None:
-                self._unscoped().table(n).createOrReplaceTempView(bare)
+                df = self._unscoped().table(n)
             elif owner == self.tenant_id:
                 # tenant-owned view: only its owner can resolve it; register
                 # the scoped frame (foreign connections are rejected before
                 # lookup)
-                self.table(n).createOrReplaceTempView(bare)
+                df = self.table(n)
             else:
                 continue
-            self._registered.add(bare)
-        self._ts_cols = None  # new schema may add date/timestamp columns
+            df.createOrReplaceTempView(bare)
+            mt = ManagedTable(self.spark, self.warehouse, q)
+            if q not in self._views and mt.exists():
+                self._registered[bare] = q
+                self._commits[q] = mt._next_ts() - 1
+            else:
+                self._registered[bare] = df
 
     def _view_root(self, name: str) -> str:
         """The table at the bottom of view ``name``'s chain (``name`` itself
@@ -330,95 +362,53 @@ class Engine:
             node = self._qualify(self._views[node][0])
         return node
 
-    def _ts_columns(self) -> dict[str, set[str]]:
-        """Per-table names of date/timestamp-typed columns across attached +
-        managed tables — catalog knowledge the sqlfront needs to rewrite
-        Phoenix ``date ± int`` (days) arithmetic (DateAddExpression
-        analogue)."""
-        if self._ts_cols is not None:
-            return self._ts_cols
-        from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+    def _typed_columns(self, text: str) -> dict[str, set[str]]:
+        """The catalog knowledge ``translate_phoenix_sql`` takes, as its
+        keyword arguments: the ``ts_columns`` (date ± int, the
+        DateAddExpression analogue), ``int_columns`` (truncating division,
+        LongDivideExpression), ``str_columns`` (NULL-as-empty ``||``,
+        StringConcatExpression) and ``float_columns`` (float-precision
+        comparison literals, NotQueryIT) of the tables ``text`` names.
+        Scoped to those tables: a column that is numeric in the queried
+        table but a timestamp elsewhere must not trigger a rewrite.
 
-        by_table: dict[str, set[str]] = {}
-        sources: list[tuple[str, DataFrame]] = []
-        if self.catalog is not None:
-            sources += [(n, self.catalog.df(n)) for n in self.catalog.tables]
-        for n in list(self._registered):
-            try:
-                sources.append((n, self.spark.table(n)))
-            except Exception:
-                # stale temp view (dropped by another connection): skip
-                self._registered.discard(n)
-        for name, df in sources:
-            by_table[name.split(".")[-1].lower()] = {
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, (DateType, TimestampType, TimestampNTZType))
-            }
-        self._ts_cols = by_table
-        return by_table
+        The PMetaData analogue: each table's map is built once per version
+        and checked against it on every lookup, as the client checks a
+        cached PTable's last-DDL timestamp.  A managed table or index reads
+        its ``meta.json``, versioned by that file's signature, so the map
+        needs no Spark job and sees DDL run by another ``Engine`` on the
+        warehouse; an attached table reads its ``read_table`` frame,
+        versioned by the parquet file's signature; any other temp view is
+        the frame registered under its name."""
+        sets: dict[str, set[str]] = {kind: set() for kind in _COLUMN_KINDS}
+        for word in _words(text):
+            for kind, cols in self._table_columns(word).items():
+                sets[kind] |= cols
+        return sets
 
-    def _ts_columns_for(self, text: str) -> set[str]:
-        """ts-typed column names scoped to the tables the statement actually
-        references — a same-named column that is numeric in the queried table
-        but a timestamp elsewhere must NOT trigger the date-arith rewrite."""
-        by_table = self._ts_columns()
-        tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
-        cols: set[str] = set()
-        for table, ts_cols in by_table.items():
-            if table in tokens:
-                cols |= ts_cols
-        return cols
-
-    def _typed_columns_for(self, text: str, types: tuple) -> set[str]:
-        """Column names of the given Spark types, scoped to the referenced
-        tables — catalog knowledge for type-sensitive dialect rewrites."""
-        tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
-        cols: set[str] = set()
-        sources: list[tuple[str, DataFrame]] = []
-        if self.catalog is not None:
-            sources += [(n, self.catalog.df(n)) for n in self.catalog.tables]
-        for n in list(self._registered):
-            try:
-                sources.append((n, self.spark.table(n)))
-            except Exception:
-                # stale temp view (dropped by another connection): skip
-                self._registered.discard(n)
-        for name, df in sources:
-            if name.split(".")[-1].lower() not in tokens:
-                continue
-            cols |= {
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, types)
-            }
-        return cols
-
-    def _int_columns_for(self, text: str) -> set[str]:
-        """Integral-typed columns — for the truncating-division rewrite
-        (LongDivideExpression: long/long division truncates in the
-        dialect, while Spark's / returns a double)."""
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-        return self._typed_columns_for(
-            text, (ByteType, ShortType, IntegerType, LongType)
-        )
-
-    def _str_columns_for(self, text: str) -> set[str]:
-        """String-typed columns — for the NULL-as-empty concat rewrite
-        (StringConcatExpression skips null children; Spark concat
-        propagates NULL)."""
-        from pyspark.sql.types import StringType
-
-        return self._typed_columns_for(text, (StringType,))
-
-    def _float_columns_for(self, text: str) -> set[str]:
-        """FLOAT-typed columns — comparison literals coerce to the column
-        type in the dialect, so float comparisons run at float precision
-        (NotQueryIT; sqlfront._rewrite_float_literal_cmp)."""
-        from pyspark.sql.types import FloatType
-
-        return self._typed_columns_for(text, (FloatType,))
+    def _table_columns(self, name: str) -> dict[str, set[str]]:
+        """Column kinds of the table a bare name resolves to ({} if none)."""
+        src = self._registered.get(name)
+        if isinstance(src, DataFrame):
+            return _column_kinds(src.schema)
+        mt = None
+        if src is None and self.catalog is not None and name in self.catalog.tables:
+            path = self.catalog.tables[name].path
+        else:
+            mt = ManagedTable(self.spark, self.warehouse, src or self._qualify(name))
+            path = mt.meta_path
+        try:
+            sig = file_signature(path)
+        except (FileNotFoundError, NotADirectoryError):
+            if src is not None:
+                # stale temp view (dropped by another connection)
+                self._registered.pop(name, None)
+            return {}
+        hit = self._columns.get(path)
+        if hit is None or hit[0] != sig:
+            schema = self.catalog.df(name).schema if mt is None else mt.schema
+            hit = self._columns[path] = (sig, _column_kinds(schema))
+        return hit[1]
 
     # -- sequences (SequenceRegionObserver analogue) -----------------------
 
@@ -609,7 +599,25 @@ class Engine:
         handler = getattr(self, f"_exec_{stmt.kind}", None)
         if handler is None:
             raise ValueError(f"unsupported statement kind {stmt.kind}")
+        self._reregister_moved(stmt.text)
         return handler(stmt.text)
+
+    def _reregister_moved(self, text: str) -> None:
+        """Re-register, with its views and indexes, every managed table
+        ``text`` names (directly or through one of its views) whose newest
+        commit is not the one its temp view was registered at: a writer
+        outside this Engine (``streaming.apply_changes``,
+        ``compact_with_ttl``, ``ManagedTable.upsert_df``) committed since,
+        and a temp view pins the segment list it was registered with."""
+        words = _words(text)
+        named = {q for q in self._commits if q.split(".")[-1] in words}
+        named |= {self._view_root(v) for v in self._views if v.split(".")[-1] in words}
+        for q in named & self._commits.keys():
+            mt = ManagedTable(self.spark, self.warehouse, q)
+            if not mt.exists():
+                del self._commits[q]  # dropped by another connection
+            elif mt._next_ts() - 1 != self._commits[q]:
+                self._register(q)
 
     @staticmethod
     def _render_literal(v) -> str:
@@ -659,6 +667,7 @@ class Engine:
     def explain(self, text: str) -> str:
         # consume_sequences=False: explaining a query must not advance
         # sequences (the reference compiles without running the sequence RPC)
+        self._reregister_moved(text)
         df = self._exec_select(text, consume_sequences=False)
         return df._jdf.queryExecution().explainString(  # noqa: SLF001
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: SLF001
@@ -731,15 +740,7 @@ class Engine:
         # index substitution runs on the UNMASKED text: partial-index
         # predicate matching compares literal-containing conjuncts
         text = self._maybe_use_index(text)
-        return self.spark.sql(
-            translate_phoenix_sql(
-                text,
-                ts_columns=self._ts_columns_for(text),
-                int_columns=self._int_columns_for(text),
-                str_columns=self._str_columns_for(text),
-                float_columns=self._float_columns_for(text),
-            )
-        )
+        return self.spark.sql(translate_phoenix_sql(text, **self._typed_columns(text)))
 
     # SELECT DISTINCT ... GROUP BY g1,g2 ORDER BY g1,g2 where a sort key is
     # a GROUPING column absent from the projection: Phoenix orders the
@@ -842,8 +843,9 @@ class Engine:
                 return m.group(0)
             view = f"{bare}__scn{self.scn}"
             if view not in self._registered:
-                self.table(bare).createOrReplaceTempView(view)
-                self._registered.add(view)
+                df = self.table(bare)
+                df.createOrReplaceTempView(view)
+                self._registered[view] = df
             # keep qualified references (t.col) resolving when no alias
             return f"{kw} {view} {alias or bare}"
 
@@ -878,8 +880,9 @@ class Engine:
             if bare not in known:
                 return m.group(0)
             view = f"{bare}__tn{tag}"
-            self.table(bare).createOrReplaceTempView(view)
-            self._registered.add(view)
+            df = self.table(bare)
+            df.createOrReplaceTempView(view)
+            self._registered[view] = df
             return f"{kw} {view} {alias or bare}"
 
         return pat.sub(sub, masked)
@@ -1140,13 +1143,7 @@ class Engine:
         )
         probe_sql = unmask(probe)
         pdf = self.spark.sql(
-            translate_phoenix_sql(
-                probe_sql,
-                ts_columns=self._ts_columns_for(probe_sql),
-                int_columns=self._int_columns_for(probe_sql),
-                str_columns=self._str_columns_for(probe_sql),
-                float_columns=self._float_columns_for(probe_sql),
-            )
+            translate_phoenix_sql(probe_sql, **self._typed_columns(probe_sql))
         )
         # per-partition row counts: one tiny aggregate (num-partitions rows)
         counts = sorted(
@@ -1878,8 +1875,11 @@ class Engine:
         """Record in ``d`` what a commit on its base needs to maintain it —
         the serialized IndexMaintainer analogue: the physical base table,
         the view chain, and the Spark SQL of the functional keys and of the
-        partial predicate.  Returns the physical base."""
-        base, d.chain = self._index_base(d.table)
+        partial predicate.  Returns the physical base.  A table index
+        resolves ``base`` (the declared name until it is first bound); a
+        view index resolves its view again, by name."""
+        name = d.base if d.base is not None and d.chain is None else d.table
+        base, d.chain = self._index_base(name)
         d.base = base.name
         d.expr_sql = {n: self._translate_pred(x, d.table) for n, x in d.exprs.items()}
         d.where_sql = d.where and self._translate_pred(d.where, d.table)
@@ -1890,8 +1890,7 @@ class Engine:
         IX.save_indexes(self.warehouse, self._indexes)
         ManagedTable(self.spark, self.warehouse, name).drop()
         self.spark.catalog.dropTempView(name)
-        self._registered.discard(name)
-        self._ts_cols = None
+        self._registered.pop(name, None)
 
     def _index_base(self, table: str):
         """Resolve an index's declared base to ``(ManagedTable, chain)``.
@@ -1899,11 +1898,16 @@ class Engine:
         ``chain`` is ``None`` for a plain table; for a VIEW (the reference's
         view indexes — MetaDataClient.createIndex accepts views, see IT
         add_view_index.sql) it is the view chain base-outward as
-        ``[(where, vcols), ...]`` to replay over any base frame."""
+        ``[(where, vcols), ...]`` to replay over any base frame.  A name
+        that is a view or a managed table as given resolves to it; only a
+        bare name that is neither falls back to the one view of that bare
+        name."""
         q = self._qualify(table)
         vname = None
         if q in self._views:
             vname = q
+        elif ManagedTable(self.spark, self.warehouse, q).exists():
+            return self.managed(q), None
         else:
             cands = [
                 v for v in self._views if v.split(".")[-1] == table.lower()
@@ -1926,11 +1930,7 @@ class Engine:
         same translation the SELECT path applies to full statements).
         ``table`` scopes the date-arith rewrite's ts-column set to the
         indexed base table."""
-        ts = (
-            self._ts_columns().get(table.split(".")[-1].lower(), set())
-            if table
-            else set()
-        )
+        ts = self._typed_columns(table)["ts_columns"] if table else set()
         return translate_phoenix_sql(pred, ts)
 
     def _exec_drop(self, text: str) -> int:
@@ -2042,7 +2042,7 @@ class Engine:
             for v in child_views:
                 self._views.pop(v, None)
                 self.spark.catalog.dropTempView(v.split(".")[-1])
-                self._registered.discard(v.split(".")[-1])
+                self._registered.pop(v.split(".")[-1], None)
             self._save_views()
         if dr.truncate:
             mt.truncate()  # its indexes too
@@ -2050,8 +2050,7 @@ class Engine:
         else:
             mt.drop()
             self.spark.catalog.dropTempView(dr.name)
-            self._registered.discard(dr.name.split(".")[-1])
-            self._ts_cols = None
+            self._registered.pop(dr.name.split(".")[-1], None)
             # its indexes go with it, those on the dropped child views too
             # (r04 advice: they otherwise stay ACTIVE with orphaned segments)
             for d in mt._indexes():
@@ -2361,14 +2360,8 @@ class Engine:
                 # division, date±int) apply exactly as in a SELECT over the
                 # same table (OnDuplicateKeyIT: counter1 = counter1 || ...,
                 # counter1 = counter1 + 1); the full statement text carries
-                # the table name the _for helpers scope on
-                return translate_phoenix_sql(
-                    s,
-                    ts_columns=self._ts_columns_for(text),
-                    int_columns=self._int_columns_for(text),
-                    str_columns=self._str_columns_for(text),
-                    float_columns=self._float_columns_for(text),
-                )
+                # the table name _typed_columns scopes on
+                return translate_phoenix_sql(s, **self._typed_columns(text))
 
             def _dup_expr(e: str):
                 m = re.fullmatch(

@@ -100,6 +100,9 @@ class IndexDef:
     # base commit derives the index rows without the engine: the physical
     # base, the view chain (base-outward ``[where, vcols]``; None on a table)
     # and the Spark SQL of the functional keys and the partial predicate.
+    # Until CREATE INDEX binds it, ``base`` is the declared (possibly
+    # schema-qualified) table or view name; ``table`` keeps the bare name
+    # that queries are matched on.
     base: str | None = None
     chain: list | None = None
     expr_sql: dict[str, str] = field(default_factory=dict)
@@ -251,6 +254,7 @@ def parse_create_index(text: str) -> tuple[IndexDef, bool]:
     d = IndexDef(
         name=m.group("name").lower(),
         table=m.group("table").lower().split(".")[-1],
+        base=m.group("table").lower(),
         key=key,
         sort_orders=sort_orders,
         include=include,

@@ -678,8 +678,9 @@ def _stream_dedup_exact(spark, sf):
     import tempfile
     import uuid
 
-    path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(path).schema
+    from phoenix_spark.queries._util import t as _t
+
+    schema = _t(spark, sf, "documents").schema
     # the fixture table is a single file; the streaming file source wants a
     # directory, so point it at the sf dir with a glob selecting the table
     src = (

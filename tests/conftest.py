@@ -14,9 +14,11 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 # property tests), the index-consistency property tests over random write
 # scripts — every writer of an indexed table: Engine.sql DML, both bulk
 # loads and an availableNow streaming CDC apply, the one streaming job in
-# this set — and the small-commit pins (client-built rows, index temp
-# views).  Everything else (the IT-replay suites, engine/mutation/streaming
-# tests) is marked slow and runs via `pytest tests/ -m "" -q`.
+# this set — the small-commit pins (client-built rows, index temp
+# views) and the metadata cache (one frame and one column-type map per
+# table version, and what invalidates them).  Everything else (the
+# IT-replay suites, engine/mutation/streaming tests) is marked slow and
+# runs via `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",
@@ -27,6 +29,7 @@ _FAST_FILES = {
     "test_sqlfront_properties.py",
     "test_index_consistency.py",
     "test_local_commit.py",
+    "test_metadata_cache.py",
 }
 
 

@@ -625,13 +625,14 @@ def test_ts_columns_scoped_to_referenced_tables(spark):
 
     e = Engine(spark, SF_TEST_DIR)
     # orders is not referenced → its o_orderdate must not be rewritten
-    assert "o_orderdate" not in e._ts_columns_for("SELECT l_quantity FROM lineitem")
-    assert "o_orderdate" in e._ts_columns_for(
-        "SELECT o_orderdate - 3 FROM orders"
-    )
+    def ts_cols(text):
+        return e._typed_columns(text)["ts_columns"]
+
+    assert "o_orderdate" not in ts_cols("SELECT l_quantity FROM lineitem")
+    assert "o_orderdate" in ts_cols("SELECT o_orderdate - 3 FROM orders")
     # a numeric column sharing a ts column's NAME in another, unreferenced
     # table stays untouched: only referenced tables contribute ts columns
-    cols = e._ts_columns_for("SELECT ts FROM events")
+    cols = ts_cols("SELECT ts FROM events")
     assert "ts" in cols and "o_orderdate" not in cols
 
 

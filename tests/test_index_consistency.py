@@ -303,18 +303,24 @@ def test_bulk_load_csv_maintains_index(spark, tmp_path):
     assert _served(e, "t") == (want, want)
 
 
-def test_apply_changes_maintains_index(spark, tmp_path):
+def _apply_stream(spark, e, tmp_path):
+    """Apply, by an availableNow ``apply_changes`` micro-batch, the changes
+    of a source ``s`` that puts (2, 'd', 40), (3, 'q', 5) and deletes k=1."""
     from phoenix_spark.streaming import apply_changes
 
-    e = _indexed(spark, tmp_path)
     e.sql("CREATE TABLE s (k INTEGER PRIMARY KEY, v VARCHAR, w INTEGER)")
     e.sql("UPSERT INTO s VALUES (1, 'x', 1), (2, 'd', 40), (3, 'q', 5)")
     e.sql("DELETE FROM s WHERE k = 1")
-    t = e.managed("t")
-    segs = len(t._segments())
-    q = apply_changes(spark, e.managed("s"), t, str(tmp_path / "ckpt"))
+    q = apply_changes(spark, e.managed("s"), e.managed("t"), str(tmp_path / "ckpt"))
     assert q.awaitTermination(120)
     assert q.exception() is None
+
+
+def test_apply_changes_maintains_index(spark, tmp_path):
+    e = _indexed(spark, tmp_path)
+    t = e.managed("t")
+    segs = len(t._segments())
+    _apply_stream(spark, e, tmp_path)
     assert sorted(tuple(r) for r in t.read().collect()) == [(2, "d", 40), (3, "q", 5)]
     assert sorted(tuple(r) for r in e.managed("ix").read().collect()) == [
         ("d", 2, 40),
@@ -322,6 +328,40 @@ def test_apply_changes_maintains_index(spark, tmp_path):
     ]
     # the micro-batch's puts and tombstone are one commit
     assert len(t._segments()) == segs + 1
+
+
+def test_engine_serves_a_commit_made_outside_it(spark, tmp_path):
+    """A commit by ``ManagedTable.upsert_df`` (as streaming and TTL
+    expiry make them) reaches the Engine's temp views, base and index."""
+    e = _indexed(spark, tmp_path)
+    e.managed("t").upsert_df(
+        spark.createDataFrame([(2, "d", 40)], "k int, v string, w int")
+    )
+    want = [("a", 10), ("d", 40)]
+    assert _served(e, "t") == (want, want)
+
+
+def test_engine_serves_rows_applied_by_a_stream(spark, tmp_path):
+    e = _indexed(spark, tmp_path)
+    _served(e, "t")  # the temp views as the engine registered them
+    _apply_stream(spark, e, tmp_path)
+    want = [("d", 40), ("q", 5)]
+    assert _by_index(e, "t")
+    assert _served(e, "t") == (want, want)
+
+
+def test_index_on_qualified_table_beside_a_view_of_its_bare_name(spark, tmp_path):
+    """``CREATE INDEX ix2 ON s2.tv`` indexes table ``s2.tv``, not the view
+    ``tv`` over ``t``."""
+    from phoenix_spark.indexes import load_indexes
+
+    first = ("CREATE TABLE s2.tv (k INTEGER PRIMARY KEY, v VARCHAR)",)
+    e = _indexed(spark, tmp_path, view_pred="w > 5", first=first)
+    e.sql("CREATE INDEX ix2 ON s2.tv (v)")
+    d = load_indexes(e.warehouse)["ix2"]
+    assert (d.base, d.chain) == ("s2.tv", None)
+    e.sql("UPSERT INTO s2.tv VALUES (7, 'm')")
+    assert [tuple(r) for r in e.managed("ix2").read().collect()] == [("m", 7)]
 
 
 def test_truncate_clears_view_index(spark, tmp_path):
