@@ -2749,26 +2749,13 @@ class Engine:
                 for r in rows
             ]
             src = local_frame(self.spark, rows, schema=src_schema)
-        listed = set(cols) - set(dyn)
-        unlisted = [c for c in mt.schema.fieldNames() if c not in listed]
-        if unlisted and up.on_duplicate is None:
-            # Partial column list — Phoenix writes only the listed CELLS
-            # (UpsertCompiler builds one Put per listed column): unlisted
-            # columns of existing rows are preserved, brand-new rows read
-            # NULL.  The change-log stores whole rows, so the write is a
-            # read-modify-write: left-join the incoming rows against the
-            # current state of their own keys and take unlisted values from
-            # the existing row — the read the reference's RegionServer makes
-            # to merge cells on every partial upsert.  ON DUPLICATE KEY needs
-            # no merge here: upsert_df keeps an existing row's cells itself,
-            # and a new row's unlisted cells are NULL either way.
-            cur = mt.read(keys=src).select(*mt.pk, *unlisted)
-            src = key_join(src, cur, mt.pk, "left")
-        elif unlisted:
-            src = src.withColumns(
-                {c: F.lit(None).cast(base_by_name[c].dataType) for c in unlisted}
-            )
+        # A partial column list leaves the unlisted cells out of ``df``:
+        # upsert_df keeps an existing row's cells and NULL-fills a new row's.
         if dyn:
+            if "props" not in cols:
+                # the JSON overflow merge below needs the row's own ``props``
+                cur = mt.read(keys=src).select(*mt.pk, "props")
+                src = key_join(src, cur, mt.pk, "left")
             # merge the typed dynamic values into the JSON overflow column,
             # preserving unrelated keys of an existing row's JSON
             patch = F.create_map(
@@ -2788,7 +2775,7 @@ class Engine:
             src = src.withColumn(
                 "props", F.to_json(F.map_concat(keep, patch))
             ).drop(*dyn)
-        df = src.select(*mt.schema.fieldNames())
+        df = src.select(*[c for c in mt.schema.fieldNames() if c in src.columns])
         if up.select is not None:
             # single-pass: count on the write action itself (observe), never
             # a separate .count() pre-scan — a 100 TB INSERT-SELECT must read
@@ -2818,21 +2805,18 @@ class Engine:
                 .filter(F.col("__rn") == 1)
                 .drop("__ord", "__rn")
             )
-            mt.upsert_df(df, on_duplicate=up.on_duplicate)
+            ts = mt.upsert_df(df, on_duplicate=up.on_duplicate)
             n = obs.get["n"]
         else:
             from phoenix_spark.ddl import UpdateOnly
 
-            if isinstance(up.on_duplicate, UpdateOnly) or up.on_duplicate == "ignore":
-                # UPDATE_ONLY drops absent-PK rows; IGNORE drops present-PK
-                # rows — either way the mutation count is the written-row
-                # count upsert_df observes on the write action, not the
-                # incoming VALUES arity (r7 advice fix +
-                # OnDuplicateKey2IT.testIgnoreReturnValue)
-                n = mt.upsert_df(df, on_duplicate=up.on_duplicate)
-            else:
+            # UPDATE_ONLY drops absent-PK rows; IGNORE drops present-PK
+            # rows — either way the mutation count is the written-row count
+            # upsert_df returns, not the incoming VALUES arity (r7 advice
+            # fix + OnDuplicateKey2IT.testIgnoreReturnValue)
+            ts = n = mt.upsert_df(df, on_duplicate=up.on_duplicate)
+            if not (isinstance(up.on_duplicate, UpdateOnly) or up.on_duplicate == "ignore"):
                 n = len(up.values)
-                mt.upsert_df(df, on_duplicate=up.on_duplicate)
         self._register(up.table)
         if up.returning:
             # RETURNING * (grammar :901): the written slice as full rows.
@@ -2844,7 +2828,7 @@ class Engine:
             # incoming values.
             if up.on_duplicate is not None:
                 return mt.read(keys=df)
-            return df
+            return mt.read_commit(ts).drop(_DEL_COL)
         return n
 
     def _exec_delete(self, text: str) -> DataFrame | int:

@@ -186,19 +186,16 @@ def catalog_df(engine) -> DataFrame:
     for name, d in sorted(engine._indexes.items()):
         imt = ManagedTable(engine.spark, engine.warehouse, name)
         # the index lives in its base's schema (MetaDataClient puts the
-        # index row under the data table's TABLE_SCHEM)
-        target = engine._qualify(d.table)
-        if "." not in target:
-            vc = [v for v in engine._views if v.split(".")[-1] == d.table]
-            mc = [
-                n
-                for n in engine._managed_names()
-                if n.split(".")[-1] == d.table
-            ]
-            target = vc[0] if len(vc) == 1 else (mc[0] if len(mc) == 1 else target)
-        on_view = target in engine._views
+        # index row under the data table's TABLE_SCHEM), placed by its
+        # registry entry: a table index names its table in ``base``; a view
+        # index (``chain`` set) is on the view of its bare name
+        on_view = d.chain is not None
         if on_view:
             view_ix_id += 1
+            vc = [v for v in engine._views if v.split(".")[-1] == d.table]
+            target = vc[0] if len(vc) == 1 else engine._qualify(d.table)
+        else:
+            target = d.base or engine._qualify(d.table)
         schem = target.split(".")[0] if "." in target else None
         emit(
             f"{schem}.{name}" if schem else name,

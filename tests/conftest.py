@@ -13,12 +13,14 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 # the SQL front end (the dialect lexer's primitives and the sqlfront
 # property tests), the index-consistency property tests over random write
 # scripts — every writer of an indexed table: Engine.sql DML, both bulk
-# loads and an availableNow streaming CDC apply, the one streaming job in
-# this set — the small-commit pins (client-built rows, index temp
-# views) and the metadata cache (one frame and one column-type map per
-# table version, and what invalidates them).  Everything else (the
-# IT-replay suites, engine/mutation/streaming tests) is marked slow and
-# runs via `pytest tests/ -m "" -q`.
+# loads and an availableNow streaming CDC apply — the small-commit pins
+# (client-built rows, index temp views), the point commits (client-batch
+# UPSERT VALUES and pinned DELETE against the distributed write, their
+# jobs, their atomicity and an availableNow change stream over them) and
+# the metadata cache (one frame and one column-type map per table version,
+# and what invalidates them).  Everything else (the IT-replay suites,
+# engine/mutation/streaming tests) is marked slow and runs via
+# `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",
@@ -29,6 +31,7 @@ _FAST_FILES = {
     "test_sqlfront_properties.py",
     "test_index_consistency.py",
     "test_local_commit.py",
+    "test_point_commit.py",
     "test_metadata_cache.py",
 }
 

@@ -1274,6 +1274,33 @@ def test_dynamic_columns_in_upsert(engine):
     assert got[2] == (None, 7)
 
 
+def test_dynamic_column_upsert_keeps_unlisted_cells(engine):
+    """A dynamic-column UPSERT writes only its listed cells: an existing
+    row keeps its other columns, plainly and under ON DUPLICATE KEY."""
+    engine.sql(
+        "CREATE TABLE dku (k BIGINT NOT NULL, a VARCHAR, props VARCHAR, "
+        "CONSTRAINT pk PRIMARY KEY (k))"
+    )
+    engine.sql("UPSERT INTO dku VALUES (1, 'keep', '{\"x\": \"1\"}'), (2, 'also', NULL)")
+    engine.sql("UPSERT INTO dku (k, score BIGINT) VALUES (1, 42), (3, 7)")
+    engine.sql(
+        "UPSERT INTO dku (k, score BIGINT) VALUES (2, 5), (4, 9) "
+        "ON DUPLICATE KEY UPDATE a = 'hit'"
+    )
+    got = {
+        r.k: (r.a, r.x, r.score)
+        for r in engine.sql(
+            "SELECT k, a, x, score FROM dku (x VARCHAR, score BIGINT)"
+        ).collect()
+    }
+    assert got == {
+        1: ("keep", "1", 42),
+        2: ("hit", None, None),
+        3: (None, None, 7),
+        4: (None, None, 9),
+    }
+
+
 def test_sequence_options_minmax_cycle_bulk(engine):
     """CREATE SEQUENCE MINVALUE/MAXVALUE/CYCLE/CACHE + NEXT n VALUES FOR
     (grammar :619-628, :1203-1208; Sequence.java limit/cycle semantics:

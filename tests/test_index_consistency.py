@@ -364,6 +364,20 @@ def test_index_on_qualified_table_beside_a_view_of_its_bare_name(spark, tmp_path
     assert [tuple(r) for r in e.managed("ix2").read().collect()] == [("m", 7)]
 
 
+def test_catalog_places_index_on_qualified_table_beside_a_view(spark, tmp_path):
+    """SYSTEM.CATALOG lists ``ix2`` under its table's schema ``S2``, not as
+    a view index on the view ``tv`` of the same bare name; the view index
+    ``ix`` keeps its view index id."""
+    first = ("CREATE TABLE s2.tv (k INTEGER PRIMARY KEY, v VARCHAR)",)
+    e = _indexed(spark, tmp_path, view_pred="w > 5", first=first)
+    e.sql("CREATE INDEX ix2 ON s2.tv (v)")
+    rows = e.sql(
+        "SELECT TABLE_NAME, TABLE_SCHEM, VIEW_INDEX_ID FROM SYSTEM.CATALOG "
+        "WHERE TABLE_TYPE = 'i' AND COLUMN_COUNT IS NOT NULL"
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [("IX", None, 1), ("IX2", "S2", None)]
+
+
 def test_truncate_clears_view_index(spark, tmp_path):
     e = _indexed(spark, tmp_path, view_pred="w > 5")
     assert _by_index(e, "tv")

@@ -1,9 +1,10 @@
 """Small DML commits: client-built rows and index temp views.
 
 UPSERT VALUES rows are evaluated in the client, as Phoenix's MutationState
-evaluates them, and reach Spark as a LocalRelation built from Arrow: the
-frame a commit writes must not scan a Python-pickled RDD (every task over
-one runs a Python worker, on every evaluation).  The rows must keep their
+evaluates them, and reach Spark as a LocalRelation built from Arrow: no
+frame a commit evaluates may scan a Python-pickled RDD (every task over one
+runs a Python worker, on every evaluation), and the commit writes its
+segments from the driver, without a Spark job.  The rows must keep their
 values through that path, TIMESTAMP literals included, whatever the time
 zone of the Python process.
 
@@ -33,29 +34,50 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_values_commits_scan_no_python_rdd(engine, monkeypatch):
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup("local_commit", "local_commit")
+    before = set(sc.statusTracker().getJobIdsForGroup("local_commit"))
+    fn()
+    return len(set(sc.statusTracker().getJobIdsForGroup("local_commit")) - before)
+
+
+def test_values_commits_scan_no_python_rdd(engine, spark, monkeypatch):
+    """A VALUES commit evaluates no Python-pickled RDD and runs no write
+    job: the only job an ON DUPLICATE KEY statement starts is the read of
+    its keys' current rows, and a plain one into a new table starts none."""
+    from phoenix_spark import mutations
     from phoenix_spark.mutations import ManagedTable
 
-    written = []
-    append = ManagedTable._append_segment
+    evaluated = []
+    collect = mutations.collect_arrow
 
-    def capture(self, df, ts, deleted=False):
-        if self.name == "lc":
-            written.append(df)
-        return append(self, df, ts, deleted)
+    def capture(df):
+        evaluated.append(_optimized(df))
+        return collect(df)
 
-    monkeypatch.setattr(ManagedTable, "_append_segment", capture)
+    def distributed(*_args, **_kw):
+        raise AssertionError("a VALUES commit wrote through a Spark job")
+
+    monkeypatch.setattr(mutations, "collect_arrow", capture)
+    monkeypatch.setattr(ManagedTable, "_append_segment", distributed)
     engine.sql("CREATE TABLE lc (k INTEGER PRIMARY KEY, v VARCHAR, n BIGINT)")
-    engine.sql("UPSERT INTO lc VALUES (1, 'a', 10), (2, 'b', 20)")
-    engine.sql(
-        "UPSERT INTO lc VALUES (2, 'x', 1), (3, 'c', 30) "
-        "ON DUPLICATE KEY UPDATE n = n + 1"
+    assert _jobs(spark, lambda: engine.sql("UPSERT INTO lc VALUES (1, 'a', 10), (2, 'b', 20)")) == 0
+    # the table has one segment, so reading its keys is one scan job
+    read = _jobs(spark, lambda: engine.managed("lc").read().filter("k IN (2, 3)").collect())
+    assert read == 1
+    on_dup = _jobs(
+        spark,
+        lambda: engine.sql(
+            "UPSERT INTO lc VALUES (2, 'x', 1), (3, 'c', 30) "
+            "ON DUPLICATE KEY UPDATE n = n + 1"
+        ),
     )
-    assert len(written) == 2
-    for df in written:
-        plan = _optimized(df)
+    assert on_dup == read
+    assert evaluated
+    for plan in evaluated:
         assert "LogicalRDD" not in plan, plan
-        assert "LocalRelation" in plan, plan
     got = {tuple(r) for r in engine.sql("SELECT k, v, n FROM lc").collect()}
     assert got == {(1, "a", 10), (2, "b", 21), (3, "c", 30)}
 
