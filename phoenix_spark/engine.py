@@ -13,6 +13,13 @@ The Spark-first split of that pipeline (SURVEY.md §3.1):
     (MetaDataClient → MetaDataEndpointImpl analogue, minus the RPC).
   * EXPLAIN → Spark's formatted plan.
 
+Table references bind once per statement, as FromCompiler binds each one to a
+PTable by (tenant, schema, name): ``_resolve`` maps a name to the managed
+table, view or index it denotes on the connection (USE'd schema, tenant,
+SCN), and ``_bind`` reads it through a temp view of its own, registered when
+a statement reads it and again only after the table has moved.  Writes
+register nothing.
+
 Views are Phoenix-semantics views: single-table, predicate-only, recompiled
 into every read (QueryCompiler.java:803-806).  Sequences are a single-writer
 metadata counter (SequenceRegionObserver analogue; SURVEY §7 documents the
@@ -22,9 +29,11 @@ no-concurrent-writers scope).
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -39,8 +48,14 @@ from phoenix_spark.mutations import (
     local_frame,
     wall_clock,
 )
-from phoenix_spark.sqlfront import classify, translate_phoenix_sql
-from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, unmask
+from phoenix_spark.sqlfront import (
+    _ALIAS_STOP_KW,
+    _rewrite_aliased_table_qualifiers,
+    classify,
+    translate_phoenix_sql,
+)
+from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, tokens, unmask
+from phoenix_spark.types import parse_type
 
 # translate_phoenix_sql's catalog arguments and the Spark types each holds
 _COLUMN_KINDS = {
@@ -61,6 +76,28 @@ def _column_kinds(schema: T.StructType) -> dict[str, set[str]]:
         kind: {f.name for f in schema.fields if isinstance(f.dataType, types)}
         for kind, types in _COLUMN_KINDS.items()
     }
+
+
+# The temp views ``Engine._bind`` registered, per SparkSession (whose
+# temp-view namespace they share): view name -> the binding it shows,
+# ``(warehouse, qualified name, tenant, SCN, dynamic columns, version)``.
+_BOUND: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
+    weakref.WeakKeyDictionary()
+)
+# words that end a FROM item list at their bracket depth
+_FROM_END = frozenset(
+    "WHERE GROUP ORDER HAVING LIMIT OFFSET FETCH UNION INTERSECT EXCEPT "
+    "MINUS WINDOW SELECT".split()
+)
+# words after FROM that begin no table reference
+_NOT_A_TABLE = frozenset({"SELECT", "WITH", "VALUES", "LATERAL"})
+# words after a table name that are no alias of it
+_ALIAS_STOP = _ALIAS_STOP_KW | {"WINDOW", "MINUS", "TABLESAMPLE"}
+
+
+def _ident(tok) -> str:
+    """The name a word or quoted-identifier token spells."""
+    return tok.text[1:-1].replace('""', '"') if tok.kind == "ident" else tok.text
 
 
 class Engine:
@@ -131,12 +168,6 @@ class Engine:
         # (class_name, return_type, num_args).  Session-scoped like the
         # Spark UDF registry the callables live in.
         self._functions: dict[str, tuple[str, str | None, int | None]] = {}
-        # bare temp-view name -> what it shows: a managed table's (or
-        # index's) qualified name, or the frame registered under it
-        self._registered: dict[str, str | DataFrame] = {}
-        # managed table -> its newest commit ts when its temp view was
-        # registered (a temp view pins the segment list of that moment)
-        self._commits: dict[str, int] = {}
         # meta.json or attached parquet path -> (file signature, column
         # kinds): one column-type map per table version (_typed_columns)
         self._columns: dict[str, tuple[tuple, dict[str, set[str]]]] = {}
@@ -275,17 +306,6 @@ class Engine:
 
     def managed(self, name: str) -> ManagedTable:
         mt = ManagedTable(self.spark, self.warehouse, self._qualify(name))
-        if not mt.exists() and "." not in name:
-            # a bare name may denote a schema-qualified table (e.g. CREATE
-            # INDEX ... ON s.t parses the base down to 't'); resolve it when
-            # exactly one managed table carries that trailing segment
-            cands = [
-                n
-                for n in self._managed_names()
-                if n.split(".")[-1] == name.lower()
-            ]
-            if len(cands) == 1:
-                mt = ManagedTable(self.spark, self.warehouse, cands[0])
         if not mt.exists():
             raise ValueError(f"no managed table {name}")
         return mt
@@ -301,66 +321,159 @@ class Engine:
                 dirs[:] = []  # table dirs do not nest further tables
         return names
 
-    def _unscoped(self) -> "Engine":
-        """A global (non-tenant) connection over the same warehouse — used
-        to refresh the SHARED bare temp views: the temp-view namespace is
-        session-global, so its bare names always hold the UNSCOPED state;
-        tenant/SCN connections resolve through per-connection suffixed
-        snapshot views instead (_rewrite_tenant_refs / _rewrite_scn_refs)."""
-        if self.tenant_id is None and self.scn is None:
-            return self
-        e = self._connection(None, None)
-        e._registered = self._registered
-        return e
+    # -- name resolution (FromCompiler / ColumnResolver analogue) -----------
 
-    def _register(self, name: str) -> None:
-        # temp view names cannot be dotted; register the bare table name.
-        # The shared temp view always carries the UNSCOPED state — a tenant
-        # connection registering its filtered frame here would leak its
-        # scope into every other connection (TenantSpecificTablesDMLIT).
-        # Views recompile their predicate over the CURRENT base state
-        # (QueryCompiler.java:803-806), and an index follows its base's
-        # commits — but a Spark temp view pins the segment list that existed
-        # when it was registered, so re-register every view whose chain
-        # bottoms out at this table, and every index on it, or the temp view
-        # would keep serving the pre-mutation snapshot.
-        base = name.split(".")[-1].lower()
-        deps = [
-            v
-            for v in self._views
-            if v != name and self._view_root(v).split(".")[-1] == base
-        ]
-        try:
-            deps += [d.name for d in self.managed(name)._indexes()]
-        except ValueError:
-            pass  # a view: its indexes are on its physical base
-        for n in [name, *deps]:
-            bare, q = n.split(".")[-1], self._qualify(n)
+    def _resolve(self, ref: str) -> str | None:
+        """The qualified name of the view, managed table or index that
+        table reference ``ref`` denotes on this connection (the USE'd
+        schema first), or None when it denotes none of them: an attached
+        table, a CDC object or another temp view keeps its own name.  A
+        view another tenant owns is not found (TableNotFoundException)."""
+        q = self._qualify(ref)
+        if q in self._views:
             owner = self._view_owners.get(q)
-            if owner is None:
-                df = self._unscoped().table(n)
-            elif owner == self.tenant_id:
-                # tenant-owned view: only its owner can resolve it; register
-                # the scoped frame (foreign connections are rejected before
-                # lookup)
-                df = self.table(n)
-            else:
-                continue
-            df.createOrReplaceTempView(bare)
-            mt = ManagedTable(self.spark, self.warehouse, q)
-            if q not in self._views and mt.exists():
-                self._registered[bare] = q
-                self._commits[q] = mt._next_ts() - 1
-            else:
-                self._registered[bare] = df
+            if owner is not None and owner != self.tenant_id:
+                raise ValueError(f"Table undefined. tableName={q}")
+            return q
+        return q if ManagedTable(self.spark, self.warehouse, q).exists() else None
 
-    def _view_root(self, name: str) -> str:
-        """The table at the bottom of view ``name``'s chain (``name`` itself
-        when it is no view)."""
-        node = self._qualify(name)
+    def _bind(self, q: str, dyn: dict[str, str] | None = None) -> str:
+        """The temp view that shows ``q`` (a name ``_resolve`` returned, with
+        dynamic columns ``dyn``) on this connection, registered now unless
+        it already shows ``q`` at its current version.  Its name is ``q``'s
+        under a reserved prefix (``_p_<schema>__<name>``), suffixed with the
+        connection's tenant, SCN and dynamic-column spec, so no two
+        bindings a statement reads share a name."""
+        schema, _, name = q.rpartition(".")
+        view = f"_p_{schema}__{name}"
+        if self.tenant_id is not None:
+            view += f"__tn{hashlib.md5(self.tenant_id.encode()).hexdigest()[:8]}"
+        if self.scn is not None:
+            view += f"__scn{self.scn}"
+        spec = ",".join(f"{k}:{v}" for k, v in sorted((dyn or {}).items()))
+        if spec:
+            view += f"__dyn{hashlib.md5(spec.encode()).hexdigest()[:8]}"
+        key = (self.warehouse, q, self.tenant_id, self.scn, spec, self._version(q))
+        bound = _BOUND.setdefault(self.spark, {})
+        if bound.get(view) != key:
+            self.table(q, dyn_cols=dyn).createOrReplaceTempView(view)
+            bound[view] = key
+        return view
+
+    def _version(self, q: str) -> tuple:
+        """What a temp view of ``q`` pins: the definitions along its view
+        chain, and its physical root's ``meta.json`` signature and segment
+        files (every commit adds one, with a unique name)."""
+        chain, root = self._view_chain(q)
+        mt = ManagedTable(self.spark, self.warehouse, root)
+        if not mt.exists():
+            return (repr(chain),)  # a view over an attached table
+        return (repr(chain), file_signature(mt.meta_path), tuple(mt._segments()))
+
+    def _unbind(self, q: str) -> None:
+        """Drop every temp view bound to ``q`` in this warehouse."""
+        bound = _BOUND.get(self.spark, {})
+        for view, key in list(bound.items()):
+            if key[:2] == (self.warehouse, q):
+                self.spark.catalog.dropTempView(view)
+                del bound[view]
+
+    def _bind_refs(self, text: str) -> str:
+        """Rewrite each table reference of ``text`` — after a SELECT's FROM
+        or a JOIN, in a FROM item list, or opening a parenthesized join — to
+        the temp view of its binding (``_bind``), aliased by its bare name
+        unless the statement gives an alias; ``schema.table.col`` column
+        references become ``alias.col``.  A name that resolves to no managed
+        table, view or index (an attached table, a CTE, a CDC object, any
+        other temp view) stays as written.  This is where a statement's
+        table names resolve, once each."""
+        toks = [t for t in tokens(text) if t.kind != "comment"]
+        ctes = {
+            toks[i - 1].text.lower()
+            for i in range(1, len(toks) - 1)
+            if toks[i].text.upper() == "AS"
+            and toks[i + 1].kind == "open"
+            and toks[i - 1].kind == "word"
+        }
+        edits: list[tuple[int, int, str]] = []
+        aliases: dict[str, str] = {}  # dotted name as written -> its alias
+        views: dict[str, str] = {}  # view -> the name bound to it here
+        selects: set[int] = set()  # depths whose bracket group has a SELECT
+        lists: set[int] = set()  # depths inside a FROM item list
+        expect = False
+        i = 0
+        while i < len(toks):
+            t = toks[i]
+            word = t.text.upper() if t.kind == "word" else ""
+            if t.kind == "open":
+                selects.discard(t.depth + 1)
+                lists.discard(t.depth + 1)
+                i += 1  # a derived table or a parenthesized join follows
+                continue
+            if expect and t.kind in ("word", "ident") and word not in _NOT_A_TABLE:
+                expect = False
+                j = i
+                while (
+                    j + 2 < len(toks)
+                    and toks[j + 1].text == "."
+                    and toks[j + 2].kind in ("word", "ident")
+                ):
+                    j += 2
+                name = ".".join(_ident(p) for p in toks[i : j + 1 : 2])
+                nxt = toks[j + 1] if j + 1 < len(toks) else None
+                q = None
+                if (nxt is None or nxt.text != "(") and name.lower() not in ctes:
+                    q = self._resolve(name)
+                if q is not None:
+                    view = self._bind(q)
+                    if views.setdefault(view, q) != q:
+                        raise ValueError(f"tables {views[view]} and {q} share view {view}")
+                    bare = _ident(toks[j])
+                    alias = None
+                    if nxt is not None and nxt.text.upper() == "AS" and j + 2 < len(toks):
+                        alias = _ident(toks[j + 2])
+                    elif nxt is not None and nxt.kind in ("word", "ident") and (
+                        nxt.text.upper() not in _ALIAS_STOP
+                    ):
+                        alias = _ident(nxt)
+                    edits.append((t.start, toks[j].end, view if alias else f"{view} {bare}"))
+                    if j > i:
+                        aliases[name.lower()] = alias or bare
+                i = j + 1
+                continue
+            expect = False
+            if word == "SELECT":
+                selects.add(t.depth)
+                lists.discard(t.depth)
+            elif (word == "FROM" and t.depth in selects) or word == "JOIN":
+                lists.add(t.depth)
+                expect = True
+            elif t.text == "," and t.depth in lists:
+                expect = True
+            elif word in _FROM_END:
+                lists.discard(t.depth)
+            i += 1
+        # schema.table.column -> alias.column
+        for k in range(len(toks) - 3):
+            if toks[k + 1].text == "." and toks[k + 3].text == ".":
+                alias = aliases.get(f"{_ident(toks[k])}.{_ident(toks[k + 2])}".lower())
+                if alias is not None:
+                    edits.append((toks[k].start, toks[k + 2].end, alias))
+        out, pos = [], 0
+        for start, end, new in sorted(edits):
+            out += [text[pos:start], new]
+            pos = end
+        return "".join(out) + text[pos:]
+
+    def _view_chain(self, name: str) -> tuple[list[tuple], str]:
+        """The ``(parent, where, columns)`` definitions along view ``name``'s
+        chain, outermost first, and the table at its bottom (``[]`` and
+        ``name`` when it is no view)."""
+        node, chain = self._qualify(name), []
         while node in self._views:
+            chain.append(self._views[node])
             node = self._qualify(self._views[node][0])
-        return node
+        return chain, node
 
     def _typed_columns(self, text: str) -> dict[str, set[str]]:
         """The catalog knowledge ``translate_phoenix_sql`` takes, as its
@@ -378,8 +491,9 @@ class Engine:
         its ``meta.json``, versioned by that file's signature, so the map
         needs no Spark job and sees DDL run by another ``Engine`` on the
         warehouse; an attached table reads its ``read_table`` frame,
-        versioned by the parquet file's signature; any other temp view is
-        the frame registered under its name."""
+        versioned by the parquet file's signature.  A temp view ``_bind``
+        registered stands for its table or view; a view adds the columns
+        its chain declares to its root table's."""
         sets: dict[str, set[str]] = {kind: set() for kind in _COLUMN_KINDS}
         for word in _words(text):
             for kind, cols in self._table_columns(word).items():
@@ -387,28 +501,32 @@ class Engine:
         return sets
 
     def _table_columns(self, name: str) -> dict[str, set[str]]:
-        """Column kinds of the table a bare name resolves to ({} if none)."""
-        src = self._registered.get(name)
-        if isinstance(src, DataFrame):
-            return _column_kinds(src.schema)
-        mt = None
-        if src is None and self.catalog is not None and name in self.catalog.tables:
-            path = self.catalog.tables[name].path
-        else:
-            mt = ManagedTable(self.spark, self.warehouse, src or self._qualify(name))
+        """Column kinds of the relation a word names ({} if none)."""
+        key = _BOUND.get(self.spark, {}).get(name)
+        chain, q = self._view_chain(key[1] if key else name)
+        sets = _column_kinds(
+            T.StructType(
+                [
+                    T.StructField(c, parse_type(t))
+                    for _parent, _where, vcols in chain
+                    for c, t in (vcols or {}).items()
+                    if t is not None
+                ]
+            )
+        )
+        mt = ManagedTable(self.spark, self.warehouse, q)
+        if mt.exists():
             path = mt.meta_path
-        try:
-            sig = file_signature(path)
-        except (FileNotFoundError, NotADirectoryError):
-            if src is not None:
-                # stale temp view (dropped by another connection)
-                self._registered.pop(name, None)
-            return {}
+        elif self.catalog is not None and q in self.catalog.tables:
+            path = self.catalog.tables[q].path
+        else:
+            return sets
+        sig = file_signature(path)
         hit = self._columns.get(path)
         if hit is None or hit[0] != sig:
-            schema = self.catalog.df(name).schema if mt is None else mt.schema
+            schema = mt.schema if mt.exists() else self.catalog.df(q).schema
             hit = self._columns[path] = (sig, _column_kinds(schema))
-        return hit[1]
+        return {kind: sets[kind] | cols for kind, cols in hit[1].items()}
 
     # -- sequences (SequenceRegionObserver analogue) -----------------------
 
@@ -599,25 +717,7 @@ class Engine:
         handler = getattr(self, f"_exec_{stmt.kind}", None)
         if handler is None:
             raise ValueError(f"unsupported statement kind {stmt.kind}")
-        self._reregister_moved(stmt.text)
         return handler(stmt.text)
-
-    def _reregister_moved(self, text: str) -> None:
-        """Re-register, with its views and indexes, every managed table
-        ``text`` names (directly or through one of its views) whose newest
-        commit is not the one its temp view was registered at: a writer
-        outside this Engine (``streaming.apply_changes``,
-        ``compact_with_ttl``, ``ManagedTable.upsert_df``) committed since,
-        and a temp view pins the segment list it was registered with."""
-        words = _words(text)
-        named = {q for q in self._commits if q.split(".")[-1] in words}
-        named |= {self._view_root(v) for v in self._views if v.split(".")[-1] in words}
-        for q in named & self._commits.keys():
-            mt = ManagedTable(self.spark, self.warehouse, q)
-            if not mt.exists():
-                del self._commits[q]  # dropped by another connection
-            elif mt._next_ts() - 1 != self._commits[q]:
-                self._register(q)
 
     @staticmethod
     def _render_literal(v) -> str:
@@ -667,7 +767,6 @@ class Engine:
     def explain(self, text: str) -> str:
         # consume_sequences=False: explaining a query must not advance
         # sequences (the reference compiles without running the sequence RPC)
-        self._reregister_moved(text)
         df = self._exec_select(text, consume_sequences=False)
         return df._jdf.queryExecution().explainString(  # noqa: SLF001
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: SLF001
@@ -703,13 +802,6 @@ class Engine:
             )
 
     def _exec_select(self, text: str, consume_sequences: bool = True) -> DataFrame:
-        # tenant-owned views resolve only under their tenant — the shared
-        # temp-view namespace would otherwise leak them to every connection
-        for vname, owner in self._view_owners.items():
-            if owner != self.tenant_id and re.search(
-                rf"\b{re.escape(vname.split('.')[-1])}\b", text, re.I
-            ):
-                raise ValueError(f"Table undefined. tableName={vname}")
         if self._cdcs:
             self._register_cdc_views(text)
         # literals, quoted identifiers and comments are masked, so the
@@ -718,17 +810,11 @@ class Engine:
         # containing the words 'NEXT VALUE FOR s'
         masked, stash = mask(text)
         restore = functools.partial(unmask, stash=stash)
-        masked = self._rewrite_qualified_refs(masked)
+        masked = self._SYSTEM_REF_RE.sub(self._system_view, masked)
         # table-name qualifiers over an aliased table must resolve to the
         # alias BEFORE index substitution renames the FROM item
         # (QueryIT.testColumnAliasMapping under an index variant)
-        from phoenix_spark.sqlfront import _rewrite_aliased_table_qualifiers
-
         masked = _rewrite_aliased_table_qualifiers(masked)
-        if self.scn is not None:
-            masked = self._rewrite_scn_refs(masked)
-        elif self.tenant_id is not None:
-            masked = self._rewrite_tenant_refs(masked)
         masked = self._rewrite_distinct_orderby(masked)
         masked = self._rewrite_rvc_offset(masked, restore)
         masked = self._rewrite_dynamic_cols(masked)
@@ -736,10 +822,10 @@ class Engine:
         masked = self._rewrite_sequence_refs(
             masked, restore, consume=consume_sequences
         )
-        text = restore(masked)
         # index substitution runs on the UNMASKED text: partial-index
-        # predicate matching compares literal-containing conjuncts
-        text = self._maybe_use_index(text)
+        # predicate matching compares literal-containing conjuncts; the
+        # table references it leaves then bind
+        text = self._bind_refs(self._maybe_use_index(restore(masked)))
         return self.spark.sql(translate_phoenix_sql(text, **self._typed_columns(text)))
 
     # SELECT DISTINCT ... GROUP BY g1,g2 ORDER BY g1,g2 where a sort key is
@@ -789,103 +875,16 @@ class Engine:
         r"\bSYSTEM\s*\.\s*\"?(CATALOG|SEQUENCE|FUNCTION|TASK|STATS)\"?", re.I
     )
 
-    def _rewrite_qualified_refs(self, text: str) -> str:
-        """Spark temp views cannot be dotted, so ``schema.table`` references
-        resolve by substituting the bare registered name — covering the
-        3-part column form too (``sch.t.col`` → ``t.col``).  ``SYSTEM.X``
-        references materialize the metadata table from engine state
-        (PhoenixDatabaseMetaData surface; see system_tables.py) and swap in
-        its generated view.  Runs on literal-masked text."""
+    def _system_view(self, m: re.Match) -> str:
+        """``SYSTEM.X`` materializes the metadata table from engine state
+        (PhoenixDatabaseMetaData surface; see system_tables.py) as a temp
+        view, whose name replaces the reference."""
+        from phoenix_spark import system_tables as ST
 
-        def _sys(m: re.Match) -> str:
-            from phoenix_spark import system_tables as ST
-
-            kind = m.group(1).lower()
-            view = f"system_{kind}"
-            ST.BUILDERS[kind](self).createOrReplaceTempView(view)
-            return view
-
-        text = self._SYSTEM_REF_RE.sub(_sys, text)
-        dotted = [n for n in self._managed_names() if "." in n]
-        dotted += [v for v in self._views if "." in v and v not in dotted]
-        for name in sorted(dotted, key=len, reverse=True):
-            bare = name.split(".")[-1]
-            pat = r"\b" + re.escape(name) + r"\b"
-            new, n = re.subn(pat, bare, text, flags=re.I)
-            if n and bare not in self._registered:
-                # lazy temp-view registration (pre-existing warehouse)
-                self._register(name)
-            text = new
-        return text
-
-    _SCN_ALIAS_KW = (
-        "ON|WHERE|JOIN|GROUP|ORDER|LIMIT|OFFSET|FETCH|HAVING|UNION|"
-        "INTERSECT|EXCEPT|LEFT|RIGHT|INNER|CROSS|FULL|NATURAL|USING|SET|VALUES"
-    )
-
-    def _rewrite_scn_refs(self, masked: str) -> str:
-        """Point-in-time connections (CurrentSCN) cannot resolve through the
-        shared current-state temp views — swap each managed-table reference
-        for a per-SCN snapshot view (``t`` → ``t__scn<N> t``), registered
-        from this connection's AS-OF read.  Snapshot views are immutable, so
-        registration is idempotent and cache-friendly."""
-        names = {n.split(".")[-1].lower() for n in self._managed_names()}
-        pat = re.compile(
-            r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)"
-            rf"(?:\s+(?:AS\s+)?(?!(?:{self._SCN_ALIAS_KW})\b)([A-Za-z_]\w*))?",
-            re.I,
-        )
-
-        def sub(m: "re.Match[str]") -> str:
-            kw, tbl, alias = m.group(1), m.group(2), m.group(3)
-            bare = tbl.lower()
-            if bare not in names:
-                return m.group(0)
-            view = f"{bare}__scn{self.scn}"
-            if view not in self._registered:
-                df = self.table(bare)
-                df.createOrReplaceTempView(view)
-                self._registered[view] = df
-            # keep qualified references (t.col) resolving when no alias
-            return f"{kw} {view} {alias or bare}"
-
-        return pat.sub(sub, masked)
-
-    def _rewrite_tenant_refs(self, masked: str) -> str:
-        """Tenant connections resolve managed tables/views through
-        per-tenant scoped temp views (``t`` → ``t__tn<hash> t``) — the
-        shared bare temp views always hold the UNSCOPED state (see
-        _register), so resolving them here would leak other tenants' rows
-        and expose the tenant column.  Registration is per-SELECT: the
-        scoped frame recompiles over the current base segments, so reads
-        see every connection's committed mutations."""
-        import hashlib
-
-        tag = hashlib.md5(self.tenant_id.encode()).hexdigest()[:8]
-        known = {n.split(".")[-1].lower() for n in self._managed_names()}
-        known |= {
-            v.split(".")[-1].lower()
-            for v in self._views
-            if self._view_owners.get(v) in (None, self.tenant_id)
-        }
-        pat = re.compile(
-            r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)"
-            rf"(?:\s+(?:AS\s+)?(?!(?:{self._SCN_ALIAS_KW})\b)([A-Za-z_]\w*))?",
-            re.I,
-        )
-
-        def sub(m: "re.Match[str]") -> str:
-            kw, tbl, alias = m.group(1), m.group(2), m.group(3)
-            bare = tbl.lower()
-            if bare not in known:
-                return m.group(0)
-            view = f"{bare}__tn{tag}"
-            df = self.table(bare)
-            df.createOrReplaceTempView(view)
-            self._registered[view] = df
-            return f"{kw} {view} {alias or bare}"
-
-        return pat.sub(sub, masked)
+        kind = m.group(1).lower()
+        view = f"system_{kind}"
+        ST.BUILDERS[kind](self).createOrReplaceTempView(view)
+        return view
 
     # OFFSET (pk1, pk2, ...) = (v1, v2, ...) — the RVC OFFSET pagination
     # form (RVCOffsetCompiler.java; QueryMoreIT
@@ -965,30 +964,22 @@ class Engine:
 
         def _sub(m: re.Match) -> str:
             table = m.group(2)
-            key = table.split(".")[-1].lower()
             dyn: dict[str, str] = {}
             for item in m.group(4).split(","):
                 parts = item.strip().split(None, 1)
                 if len(parts) != 2:
                     return m.group(0)
                 dyn[parts[0].lower()] = parts[1]
-            # md5 of the column spec: deterministic across processes, so
-            # EXPLAIN output and temp-view reuse are stable run-to-run
-            import hashlib
-
-            spec = ",".join(f"{k}:{v}" for k, v in sorted(dyn.items()))
-            view = f"{key}__dyn{hashlib.md5(spec.encode()).hexdigest()[:8]}"
-            self.table(key, dyn_cols=dyn).createOrReplaceTempView(view)
+            q = self._resolve(table) or table.lower()  # or an attached table
+            view = self._bind(q, dyn)
             if m.group(3):  # alias written BEFORE the dyn-column list
                 return f"{m.group(1)} {view} {m.group(3)}"
             # keep qualified references (t.col) resolving: alias the view as
             # the table name unless the query supplies its own alias next
             nxt = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", m.string[m.end() :])
-            _KW = {"WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "FETCH",
-                   "HAVING", "UNION", "JOIN", "LEFT", "RIGHT", "INNER",
-                   "FULL", "CROSS", "ON", "TABLESAMPLE"}
-            has_alias = nxt and nxt.group(1).upper() not in _KW
-            return f"{m.group(1)} {view}" + ("" if has_alias else f" {key}")
+            has_alias = nxt and nxt.group(1).upper() not in _ALIAS_STOP
+            alias = "" if has_alias else f" {q.rpartition('.')[2]}"
+            return f"{m.group(1)} {view}{alias}"
 
         return self._DYN_COLS_RE.sub(_sub, text)
 
@@ -1010,20 +1001,19 @@ class Engine:
 
         def _sub(m: re.Match) -> str:
             table = m.group(2)
-            alias = m.group(4) or table.split(".")[-1]
+            alias = m.group(4) or table.rpartition(".")[2]
             # decimal rates (grammar accepts e.g. TABLESAMPLE(0.5)): scale
             # both sides so the threshold compare stays in exact integers
             rate = float(m.group(5))
             scale = 10 ** max(
                 len(m.group(5).partition(".")[2]), 0
             )
-            key = table.split(".")[-1].lower()
             pk: tuple[str, ...] | None = None
             try:
-                pk = tuple(self.managed(key).pk)
+                pk = tuple(self.managed(table).pk)
             except ValueError:
-                if self.catalog is not None and key in self.catalog.tables:
-                    pk = tuple(self.catalog.tables[key].pk)
+                if self.catalog is not None and table.lower() in self.catalog.tables:
+                    pk = tuple(self.catalog.tables[table.lower()].pk)
             if not pk:
                 raise ValueError(
                     f"TABLESAMPLE on {table}: primary key unknown — register "
@@ -1141,7 +1131,7 @@ class Engine:
             probe,
             flags=re.IGNORECASE,
         )
-        probe_sql = unmask(probe)
+        probe_sql = self._bind_refs(unmask(probe))
         pdf = self.spark.sql(
             translate_phoenix_sql(probe_sql, **self._typed_columns(probe_sql))
         )
@@ -1236,26 +1226,22 @@ class Engine:
 
         def base_cols_of(table: str):
             try:
-                return set(self.managed(table).schema.fieldNames())
+                b, chain = self._index_base(table)
             except ValueError:
-                try:  # a VIEW with indexes: columns of its resolved frame
-                    b, chain = self._index_base(table)
-                except ValueError:
-                    return None
-                if chain is None:
-                    return None
-                frame = IX.apply_view_chain(b.read(), chain)
-                return set(frame.schema.fieldNames())  # analysis only, no job
+                return None
+            if chain is None:
+                return set(b.schema.fieldNames())
+            # a VIEW with indexes: columns of its resolved frame
+            frame = IX.apply_view_chain(b.read(), chain)
+            return set(frame.schema.fieldNames())  # analysis only, no job
 
         def base_pk_of(table: str):
-            try:
-                return self.managed(table).pk
-            except ValueError:
-                return self._index_base(table)[0].pk
+            return self._index_base(table)[0].pk
 
         active = {
             k: d for k, d in self._indexes.items() if d.state == "ACTIVE" and d.base
         }
+        forced = {self._qualify(t): ixs for t, ixs in forced.items()}
         if forced:
             # INDEX(t ix...) restricts each hinted table to the named indexes
             active = {
@@ -1265,22 +1251,17 @@ class Engine:
             }
         if not active:
             return text
-        choice = IX.choose_index(text, active, base_cols_of, base_pk_of)
+        choice = IX.choose_index(text, active, self._resolve, base_cols_of, base_pk_of)
         if choice is not None:
             table_ref, d, eff_text = choice
-            if d.name.split(".")[-1] not in self._registered:
-                # an index changes only by its base's commits and TRUNCATE
-                # (both re-register the base, so its indexes) or by CREATE
-                # and REBUILD (which register it): a registered one is current
-                self._register(d.name)
-            return IX.substitute_table(eff_text, table_ref, d.name)
+            return IX.substitute_table(eff_text, table_ref, self._bind(d.name))
         jb = IX.choose_join_back(
-            text, active, base_cols_of, base_pk_of, forced=forced
+            text, active, self._resolve, base_cols_of, base_pk_of, forced=forced
         )
         if jb is None:
             return text
         table_ref, d, probe_pred = jb
-        table = table_ref.split(".")[-1].lower()
+        q = self._resolve(table_ref)
         # the FROM target may be a VIEW carrying the index (view indexes,
         # MetaDataClient.createIndex accepts views): resolve the physical
         # base through the view chain instead of managed(), which only
@@ -1288,8 +1269,8 @@ class Engine:
         # view columns), so joining its frame on the base PK is sound —
         # unless a diverged view EXCLUDED a PK column, in which case the
         # join-back can't anchor and we fall back to the plain view scan.
-        base, _chain = self._index_base(table)
-        target = self.table(table)
+        base, _chain = self._index_base(q)
+        target = self.table(q)
         if not set(base.pk) <= set(target.schema.fieldNames()):
             return text
         # narrow index scan answers the probe, the (small) matching-PK set
@@ -1300,12 +1281,7 @@ class Engine:
         )
         keys = F.broadcast(probe.select(*base.pk).distinct())
         pruned = target.join(keys, base.pk, "semi")
-        import hashlib
-
-        view = (
-            f"{table}__viaix_"
-            f"{hashlib.md5(f'{d.name}|{probe_pred}'.encode()).hexdigest()[:8]}"
-        )
+        view = f"_p_viaix_{hashlib.md5(f'{q}|{d.name}|{probe_pred}'.encode()).hexdigest()[:8]}"
         pruned.createOrReplaceTempView(view)
         return IX.substitute_table(text, table_ref, view)
 
@@ -1397,7 +1373,6 @@ class Engine:
             },
             not_null=ct.not_null,
         )
-        self._register(name)
         return 0
 
     def _save_views(self) -> None:
@@ -1411,7 +1386,7 @@ class Engine:
             # (TenantSpecificTablesDDLIT.testCreateTenantViewFromNonMultiTenant
             # -> TableNotFoundException)
             try:
-                base_mt0 = self.managed(self._view_root(cv.parent))
+                base_mt0 = self.managed(self._view_chain(cv.parent)[1])
             except ValueError:
                 base_mt0 = None
             if base_mt0 is None or self._tenant_col(base_mt0) is None:
@@ -1420,11 +1395,8 @@ class Engine:
             # a view column may not shadow a parent column
             # (ColumnAlreadyExistsException; TenantSpecificTablesDDLIT
             # .testTenantSpecificTableCannotOverrideParentCol)
-            node = self._qualify(cv.parent)
-            parent_cols: set[str] = set()
-            while node in self._views:
-                parent_cols |= {c.lower() for c in (self._views[node][2] or {})}
-                node = self._qualify(self._views[node][0])
+            chain, node = self._view_chain(cv.parent)
+            parent_cols = {c.lower() for _p, _w, vcols in chain for c in (vcols or {})}
             try:
                 parent_cols |= {
                     f.lower() for f in self.managed(node).schema.fieldNames()
@@ -1450,7 +1422,7 @@ class Engine:
             # column (the reference writes them as ordinary cells of the same
             # physical HBase table — any row can grow cells; here the base
             # grows the overflow column once, metadata-only)
-            base_mt = self.managed(self._view_root(cv.parent))
+            base_mt = self.managed(self._view_chain(cv.parent)[1])
             if "props" not in base_mt.schema.fieldNames():
                 from pyspark.sql import types as T
 
@@ -1461,7 +1433,6 @@ class Engine:
                 meta = base_mt.meta
                 meta["props"]["HIDDEN_OVERFLOW"] = True
                 base_mt._save_meta(meta)
-                self._register(base_mt.name)
         self._views[cv.name] = (cv.parent, cv.where, cv.columns or {})
         if self.tenant_id is not None:
             # a view created through a tenant connection is tenant-owned
@@ -1469,7 +1440,6 @@ class Engine:
             with open(self._view_owners_path, "w") as f:
                 json.dump(self._view_owners, f)
         self._save_views()
-        self._register(cv.name)
         return 0
 
     def _exec_create_sequence(self, text: str) -> int:
@@ -1569,11 +1539,15 @@ class Engine:
         return 0
 
     def _qualify(self, name: str) -> str:
-        """Resolve an unqualified managed-table name against USE'd schema."""
+        """Resolve an unqualified table or view name against the USE'd
+        schema."""
         name = name.lower()
         if "." not in name and getattr(self, "default_schema", None):
             qualified = f"{self.default_schema}.{name}"
-            if ManagedTable(self.spark, self.warehouse, qualified).exists():
+            if (
+                qualified in self._views
+                or ManagedTable(self.spark, self.warehouse, qualified).exists()
+            ):
                 return qualified
         return name
 
@@ -1671,16 +1645,16 @@ class Engine:
         distributed spark.read.csv → one change-log commit)."""
         mt = self.managed(table)
         df = self.spark.read.csv(csv_path, header=header, schema=mt.schema)
-        return self._load_once(mt, table, df)
+        return self._load_once(mt, df)
 
     def bulk_load_json(self, table: str, json_path: str) -> int:
         """JSON-lines bulk load (the reference bulkload module's JSON input
         format, same mapreduce/ package)."""
         mt = self.managed(table)
         df = self.spark.read.schema(mt.schema).json(json_path)
-        return self._load_once(mt, table, df)
+        return self._load_once(mt, df)
 
-    def _load_once(self, mt: "ManagedTable", table: str, df: DataFrame) -> int:
+    def _load_once(self, mt: "ManagedTable", df: DataFrame) -> int:
         """Commit ``df`` and return its row count with a SINGLE scan of the
         input: ``observe()`` counts on the write action itself (a separate
         ``df.count()`` would read a 100 TB load twice)."""
@@ -1688,7 +1662,6 @@ class Engine:
 
         obs = Observation()
         mt.upsert_df(df.observe(obs, F.count(F.lit(1)).alias("n")))
-        self._register(table)
         return obs.get["n"]
 
     _CREATE_CDC_RE = re.compile(
@@ -1827,6 +1800,7 @@ class Engine:
         substituted by _exec_select when it covers a query.  Every commit
         on the base maintains it, from what ``_bind_index`` records."""
         d, if_not_exists = IX.parse_create_index(text)
+        d.table = self._qualify(d.table)
         if d.name in self._indexes:
             if if_not_exists:
                 return 0
@@ -1868,7 +1842,6 @@ class Engine:
         imt.rewrite(IX.index_rows(base.read(), d, base.pk))
         self._indexes[d.name] = d
         IX.save_indexes(self.warehouse, self._indexes)
-        self._register(d.name)
         return 0
 
     def _bind_index(self, d: "IX.IndexDef") -> ManagedTable:
@@ -1876,8 +1849,8 @@ class Engine:
         the serialized IndexMaintainer analogue: the physical base table,
         the view chain, and the Spark SQL of the functional keys and of the
         partial predicate.  Returns the physical base.  A table index
-        resolves ``base`` (the declared name until it is first bound); a
-        view index resolves its view again, by name."""
+        resolves its declared table until ``base`` is first bound, then
+        ``base``; a view index resolves its view again, by name."""
         name = d.base if d.base is not None and d.chain is None else d.table
         base, d.chain = self._index_base(name)
         d.base = base.name
@@ -1889,8 +1862,7 @@ class Engine:
         self._indexes.pop(name, None)
         IX.save_indexes(self.warehouse, self._indexes)
         ManagedTable(self.spark, self.warehouse, name).drop()
-        self.spark.catalog.dropTempView(name)
-        self._registered.pop(name, None)
+        self._unbind(name)
 
     def _index_base(self, table: str):
         """Resolve an index's declared base to ``(ManagedTable, chain)``.
@@ -1898,39 +1870,17 @@ class Engine:
         ``chain`` is ``None`` for a plain table; for a VIEW (the reference's
         view indexes — MetaDataClient.createIndex accepts views, see IT
         add_view_index.sql) it is the view chain base-outward as
-        ``[(where, vcols), ...]`` to replay over any base frame.  A name
-        that is a view or a managed table as given resolves to it; only a
-        bare name that is neither falls back to the one view of that bare
-        name."""
-        q = self._qualify(table)
-        vname = None
-        if q in self._views:
-            vname = q
-        elif ManagedTable(self.spark, self.warehouse, q).exists():
-            return self.managed(q), None
-        else:
-            cands = [
-                v for v in self._views if v.split(".")[-1] == table.lower()
-            ]
-            if len(cands) == 1:
-                vname = cands[0]
-        if vname is None:
-            return self.managed(table), None
-        chain = []
-        node = vname
-        while node in self._views:
-            parent, where, vcols = self._views[node]
-            chain.append((where, vcols))
-            node = parent if parent in self._views else self._qualify(parent)
-        chain.reverse()
-        return self.managed(node), chain
+        ``[(where, vcols), ...]`` to replay over any base frame."""
+        chain, root = self._view_chain(table)
+        replay = [(where, vcols) for _parent, where, vcols in reversed(chain)]
+        return self.managed(root), replay or None
 
     def _translate_pred(self, pred: str, table: str | None = None) -> str:
         """Phoenix-dialect predicate fragment -> Spark SQL condition (the
         same translation the SELECT path applies to full statements).
         ``table`` scopes the date-arith rewrite's ts-column set to the
-        indexed base table."""
-        ts = self._typed_columns(table)["ts_columns"] if table else set()
+        indexed table or view."""
+        ts = self._table_columns(table)["ts_columns"] if table else set()
         return translate_phoenix_sql(pred, ts)
 
     def _exec_drop(self, text: str) -> int:
@@ -2008,11 +1958,10 @@ class Engine:
             if self._views.pop(dr.name, None) is None and not dr.if_exists:
                 raise ValueError(f"no view {dr.name}")
             self._save_views()
-            self.spark.catalog.dropTempView(dr.name)
+            self._unbind(dr.name)
             # its indexes go with it: base commits would keep maintaining them
-            leaf = dr.name.split(".")[-1]
             for d in list(self._indexes.values()):
-                if d.chain is not None and d.table == leaf:
+                if d.chain is not None and d.table == dr.name:
                     self._drop_index(d.name)
             return 0
         mt = ManagedTable(self.spark, self.warehouse, self._qualify(dr.name))
@@ -2029,10 +1978,7 @@ class Engine:
         # child views block a plain DROP TABLE; CASCADE drops them too
         # (MetaDataClient.dropTable: CANNOT_MUTATE_TABLE unless cascade)
         # whole chains: a view-of-a-view goes too
-        base = dr.name.split(".")[-1].lower()
-        child_views = [
-            v for v in self._views if self._view_root(v).split(".")[-1] == base
-        ]
+        child_views = [v for v in self._views if self._view_chain(v)[1] == mt.name]
         if child_views and not dr.truncate:
             if not dr.cascade:
                 raise ValueError(
@@ -2041,16 +1987,13 @@ class Engine:
                 )
             for v in child_views:
                 self._views.pop(v, None)
-                self.spark.catalog.dropTempView(v.split(".")[-1])
-                self._registered.pop(v.split(".")[-1], None)
+                self._unbind(v)
             self._save_views()
         if dr.truncate:
             mt.truncate()  # its indexes too
-            self._register(dr.name)
         else:
             mt.drop()
-            self.spark.catalog.dropTempView(dr.name)
-            self._registered.pop(dr.name.split(".")[-1], None)
+            self._unbind(mt.name)
             # its indexes go with it, those on the dropped child views too
             # (r04 advice: they otherwise stay ACTIVE with orphaned segments)
             for d in mt._indexes():
@@ -2100,7 +2043,6 @@ class Engine:
                 base = self._bind_index(d)
                 imt = self.managed(d.name)
                 imt.rewrite(IX.index_rows(base.read(), d, base.pk))
-                self._register(d.name)
                 d.state = "ACTIVE"
                 if am.group(6):  # ASYNC: recorded in SYSTEM.TASK (the
                     # reference queues TaskType.INDEX_REBUILD=2 in SYSTEM.TASK
@@ -2158,7 +2100,7 @@ class Engine:
                             f"cannot drop {col} through view {name}: "
                             "no such column"
                         )
-                    if col in self.managed(self._view_root(parent)).pk:
+                    if col in self.managed(self._view_chain(parent)[1]).pk:
                         raise ValueError(
                             f"cannot drop PK column {col} through view "
                             f"{name}: the row key is the row identity"
@@ -2168,7 +2110,6 @@ class Engine:
                 raise ValueError("ALTER VIEW supports ADD/DROP COLUMN only")
             self._views[vname] = (parent, where, vcols)
             self._save_views()
-            self._register(vname)
             return 0
         mt = self.managed(name)
         if op == "SET":
@@ -2189,7 +2130,6 @@ class Engine:
             mt.add_column(col.lower(), parse_type(typ.strip()))
         else:
             mt.drop_column(rest.strip().strip('"').lower())
-        self._register(name)
         return 0
 
     def _exec_show(self, text: str) -> DataFrame:
@@ -2200,7 +2140,7 @@ class Engine:
             r"^\s*SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*;?\s*$", text, re.I
         )
         if m:
-            name = m.group(1).strip('"').split(".")[-1].lower()
+            name = m.group(1).strip('"').lower()
             ddl = self._render_create_table(name)
             return local_frame(
                 self.spark, [(name, ddl)], "table: string, create_statement: string"
@@ -2208,14 +2148,9 @@ class Engine:
         if "SEQUENCE" in up:
             rows = [(k,) for k in sorted(self._sequences())]
             return local_frame(self.spark, rows or [("",)], "sequence_name: string")
-        names = set()
+        names = {*self._managed_names(), *self._views}
         if self.catalog is not None:
             names |= set(self.catalog.tables)
-        for root, _dirs, files in os.walk(self.warehouse):
-            if "meta.json" in files:
-                rel = os.path.relpath(root, self.warehouse)
-                names.add(rel.replace(os.sep, "."))
-        names |= set(self._views)
         return local_frame(
             self.spark, [(n,) for n in sorted(names)], "table_name: string"
         )
@@ -2314,33 +2249,24 @@ class Engine:
         if owner is not None and owner != self.tenant_id:
             raise ValueError(f"Table undefined. tableName={name}")
         consts: dict[str, object] = {}
-        node = name
-        while node in self._views:
-            parent, where = self._views[node][:2]
-            if where:
-                # conjunct analysis runs on literal-MASKED text (r04
-                # advice): a constant like 'rock AND roll' or 'a<b' must
-                # not read as a compound/inequality predicate
-                masked_where, stash = mask(where)
-                for conj in split_top(masked_where, "AND"):
-                    m = re.match(
-                        r"^\s*([A-Za-z_]\w*)\s*=\s*(.+?)\s*$", conj, re.S
+        chain, root = self._view_chain(name)
+        for where in (w for _parent, w, _cols in chain if w):
+            # conjunct analysis runs on literal-MASKED text (r04 advice): a
+            # constant like 'rock AND roll' or 'a<b' must not read as a
+            # compound/inequality predicate
+            masked_where, stash = mask(where)
+            for conj in split_top(masked_where, "AND"):
+                m = re.match(r"^\s*([A-Za-z_]\w*)\s*=\s*(.+?)\s*$", conj, re.S)
+                if not m or re.search(r"[<>]|\bOR\b|\bAND\b", conj, re.I):
+                    raise ValueError(
+                        f"view {name} is read-only: predicate "
+                        f"{unmask(conj, stash).strip()!r} is not a simple "
+                        "equality (ViewType.UPDATABLE requires col = literal)"
                     )
-                    if not m or re.search(
-                        r"[<>]|\bOR\b|\bAND\b", conj, re.I
-                    ):
-                        raise ValueError(
-                            f"view {name} is read-only: predicate "
-                            f"{unmask(conj, stash).strip()!r} is not a simple "
-                            "equality (ViewType.UPDATABLE requires "
-                            "col = literal)"
-                        )
-                    col = m.group(1).lower()
-                    consts.setdefault(
-                        col, self._eval_literal(unmask(m.group(2), stash))
-                    )
-            node = parent
-        return node, consts
+                consts.setdefault(
+                    m.group(1).lower(), self._eval_literal(unmask(m.group(2), stash))
+                )
+        return root, consts
 
     def _exec_upsert(self, text: str) -> DataFrame | int:
         self._check_mutable()
@@ -2359,9 +2285,8 @@ class Engine:
                 # the catalog-typed dialect rewrites (|| NULL-skip, int
                 # division, date±int) apply exactly as in a SELECT over the
                 # same table (OnDuplicateKeyIT: counter1 = counter1 || ...,
-                # counter1 = counter1 + 1); the full statement text carries
-                # the table name _typed_columns scopes on
-                return translate_phoenix_sql(s, **self._typed_columns(text))
+                # counter1 = counter1 + 1)
+                return translate_phoenix_sql(s, **self._table_columns(up.table))
 
             def _dup_expr(e: str):
                 m = re.fullmatch(
@@ -2437,11 +2362,9 @@ class Engine:
             # view-added columns, view chain order (needed for the implicit
             # column list below and for overflow routing later)
             vcols: dict[str, str | None] = {}
-            node = self._qualify(up.table)
-            while node in self._views:
-                for cname, ctype in (self._views[node][2] or {}).items():
+            for _parent, _where, cols in self._view_chain(up.table)[0]:
+                for cname, ctype in (cols or {}).items():
                     vcols.setdefault(cname, ctype)
-                node = self._views[node][0]
             # Implicit column list = the VIEW's columns: parent columns in
             # declared order (minus the hidden overflow and, on a tenant
             # connection, the tenant column) INCLUDING view constants (a
@@ -2817,7 +2740,6 @@ class Engine:
             ts = n = mt.upsert_df(df, on_duplicate=up.on_duplicate)
             if not (isinstance(up.on_duplicate, UpdateOnly) or up.on_duplicate == "ignore"):
                 n = len(up.values)
-        self._register(up.table)
         if up.returning:
             # RETURNING * (grammar :901): the written slice as full rows.
             # With ON DUPLICATE KEY the reference returns the POST-operation
@@ -2839,12 +2761,8 @@ class Engine:
             # view's predicate chain on the base table (DeleteCompiler over
             # ViewType.UPDATABLE)
             self._view_constants(dl.table)  # raises if the view is read-only
-            node, preds = self._qualify(dl.table), []
-            while node in self._views:
-                parent, where = self._views[node][:2]
-                if where:
-                    preds.append(f"({where})")
-                node = parent
+            chain, node = self._view_chain(dl.table)
+            preds = [f"({where})" for _parent, where, _cols in chain if where]
             if dl.where:
                 preds.append(f"({dl.where})")
             dl = D.Delete(
@@ -2863,11 +2781,11 @@ class Engine:
                 f"({dl.where}) AND {tpred}" if dl.where else tpred,
                 dl.returning, dl.order_by, dl.limit,
             )
-        cond = translate_phoenix_sql(dl.where) if dl.where else None
+        # subqueries in the WHERE read through their bindings
+        cond = translate_phoenix_sql(self._bind_refs(dl.where)) if dl.where else None
         order = translate_phoenix_sql(dl.order_by) if dl.order_by else None
         ts = mt._next_ts()  # this statement's commit (RETURNING)
         n = mt.delete_where(cond, order_by=order, limit=dl.limit)
-        self._register(dl.table)
         if dl.returning:
             # the tombstones are the exact victim rows, top-N cut included
             return mt.read_commit(ts).drop(_DEL_COL)

@@ -100,9 +100,8 @@ class IndexDef:
     # base commit derives the index rows without the engine: the physical
     # base, the view chain (base-outward ``[where, vcols]``; None on a table)
     # and the Spark SQL of the functional keys and the partial predicate.
-    # Until CREATE INDEX binds it, ``base`` is the declared (possibly
-    # schema-qualified) table or view name; ``table`` keeps the bare name
-    # that queries are matched on.
+    # ``table`` is the declared table or view, schema-qualified, that a
+    # query's FROM reference must resolve to for the index to serve it.
     base: str | None = None
     chain: list | None = None
     expr_sql: dict[str, str] = field(default_factory=dict)
@@ -253,8 +252,7 @@ def parse_create_index(text: str) -> tuple[IndexDef, bool]:
         raise IndexError_(f"unparseable CREATE INDEX tail: {tail[:80]!r}")
     d = IndexDef(
         name=m.group("name").lower(),
-        table=m.group("table").lower().split(".")[-1],
-        base=m.group("table").lower(),
+        table=m.group("table").lower(),
         key=key,
         sort_orders=sort_orders,
         include=include,
@@ -278,7 +276,7 @@ def parse_drop_index(text: str):
         return None
     return (
         m.group(2).lower().split(".")[-1],
-        m.group(3).lower().split(".")[-1],
+        m.group(3).lower(),
         bool(m.group(1)),
     )
 
@@ -291,11 +289,12 @@ _HINT_BLOCK_RE = re.compile(r"/\*\+(.*?)\*/", re.S)
 def parse_index_hint(text: str) -> tuple[bool, dict[str, list[str]]]:
     """Extract index-selection hints from a ``/*+ ... */`` block.
 
-    Returns ``(no_index, forced)`` where ``forced`` maps a table name to the
-    index names the INDEX(table ix1 ix2...) hint restricts it to.  Matches
-    the reference's HintNode parsing: NO_INDEX vetoes substitution outright;
-    INDEX(...) both restricts candidates and authorizes plans that need a
-    join back to the data table (QueryOptimizer.java:225-353)."""
+    Returns ``(no_index, forced)`` where ``forced`` maps a table name, as
+    written, to the index names the INDEX(table ix1 ix2...) hint restricts
+    it to.  Matches the reference's HintNode parsing: NO_INDEX vetoes
+    substitution outright; INDEX(...) both restricts candidates and
+    authorizes plans that need a join back to the data table
+    (QueryOptimizer.java:225-353)."""
     no_index = False
     forced: dict[str, list[str]] = {}
     for hm in _HINT_BLOCK_RE.finditer(text):
@@ -305,8 +304,7 @@ def parse_index_hint(text: str) -> tuple[bool, dict[str, list[str]]]:
         for im in re.finditer(r"\bINDEX\s*\(([^)]*)\)", body, re.I):
             parts = im.group(1).split()
             if len(parts) >= 2:
-                tbl = parts[0].lower().split(".")[-1]
-                forced.setdefault(tbl, []).extend(
+                forced.setdefault(parts[0].lower(), []).extend(
                     p.lower().split(".")[-1] for p in parts[1:]
                 )
     return no_index, forced
@@ -343,6 +341,7 @@ def _replace_exprs(text: str, exprs: dict[str, str]) -> str:
 def choose_index(
     text: str,
     indexes: dict[str, IndexDef],
+    resolve,
     base_cols_of,
     base_pk_of,
 ) -> tuple[str, IndexDef, str] | None:
@@ -361,8 +360,10 @@ def choose_index(
     satisfies it by construction, and the predicate's columns need not be
     stored in the index.
 
+    ``resolve(ref) -> str | None`` gives the qualified table or view a FROM
+    reference denotes, which an index's ``table`` must equal;
     ``base_cols_of(table) -> set[str] | None`` and ``base_pk_of(table) ->
-    list[str]`` supply catalog knowledge.
+    list[str]`` supply catalog knowledge of it.
     """
     froms = _FROM_RE.findall(text)
     if len(froms) != 1:
@@ -373,7 +374,7 @@ def choose_index(
         r"\.\s*\*", text
     ):
         return None  # * expands to the base schema, never covered
-    table = froms[0].split(".")[-1].lower()
+    table = resolve(froms[0])
     cands = [d for d in indexes.values() if d.table == table]
     if not cands:
         return None
@@ -410,7 +411,8 @@ def choose_index(
                 continue
             eff_text = eff_text.replace(match, " TRUE ", 1)
         tokens = {t.lower() for t in re.findall(r"[A-Za-z_]\w*", eff_text)}
-        used = (tokens - {table}) & base_cols
+        ref = {t.lower() for t in re.findall(r"[A-Za-z_]\w*", froms[0])}
+        used = (tokens - ref) & base_cols
         ewm = _WHERE_RE.search(eff_text)
         where_tokens = (
             {t.lower() for t in re.findall(r"[A-Za-z_]\w*", ewm.group(1))}
@@ -436,6 +438,7 @@ def choose_index(
 def choose_join_back(
     text: str,
     indexes: dict[str, IndexDef],
+    resolve,
     base_cols_of,
     base_pk_of,
     forced: dict[str, list[str]] | None = None,
@@ -463,7 +466,9 @@ def choose_join_back(
         return None
     if re.search(r"\bJOIN\b|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b", text, re.I):
         return None
-    table = froms[0].split(".")[-1].lower()
+    table = resolve(froms[0])
+    if table is None:
+        return None
     base_cols = base_cols_of(table)
     if not base_cols:
         return None

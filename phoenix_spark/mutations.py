@@ -69,7 +69,9 @@ import json
 import os
 import re
 import uuid
+from datetime import timedelta, timezone
 from decimal import ROUND_HALF_UP, Context, Decimal
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -101,6 +103,38 @@ def _half_up(v, dt: T.DataType):
     return v
 
 
+def _instant(v, zone):
+    """TIMESTAMP value ``v`` (alone or as array elements) as a UTC instant;
+    a naive datetime is wall clock in ``zone``.  It resolves as Spark's SQL
+    literal does (java.time): a time the zone repeats takes the earlier
+    offset, and a time it skips shifts forward by the gap, which is what
+    zoneinfo's ``fold=0`` gives."""
+    if v is None:
+        return None
+    if isinstance(v, list):
+        return [_instant(x, zone) for x in v]
+    if v.tzinfo is None:
+        v = v.replace(tzinfo=zone)
+    return v.astimezone(timezone.utc)
+
+
+def _zone(name: str):
+    """Session time zone ``name``: a region ID, or a fixed offset such as
+    ``+05:30`` or ``GMT-8``."""
+    m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d\d?):?(\d\d)?", name)
+    if m is None:
+        return ZoneInfo(name)
+    off = timedelta(hours=int(m[2]), minutes=int(m[3] or 0))
+    return timezone(-off if m[1] == "-" else off)
+
+
+def _is_ltz(t: T.DataType) -> bool:
+    """A TIMESTAMP column (session-zone), alone or as array elements."""
+    if isinstance(t, T.ArrayType):
+        t = t.elementType
+    return isinstance(t, T.TimestampType)
+
+
 def local_frame(
     spark: SparkSession, rows: list, schema: T.StructType | str
 ) -> DataFrame:
@@ -124,16 +158,18 @@ def local_frame(
     decimals = [
         f for f in schema.fields if "decimal" in f.dataType.simpleString()
     ]
+    stamps = [f.name for f in schema.fields if _is_ltz(f.dataType)]
+    zone = _zone(spark.conf.get("spark.sql.session.timeZone")) if stamps else None
     recs = []
     for r in rows:
         verify(r)
         rec = dict(r) if isinstance(r, dict) else dict(zip(schema.names, r))
         for f in decimals:
             rec[f.name] = _half_up(rec.get(f.name), f.dataType)
+        for name in stamps:
+            rec[name] = _instant(rec.get(name), zone)
         recs.append(rec)
-    table = pa.Table.from_pylist(
-        recs, schema=to_arrow_schema(schema, timestamp_utc=False)
-    )
+    table = pa.Table.from_pylist(recs, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema)
 
 

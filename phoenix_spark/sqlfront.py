@@ -99,6 +99,8 @@ _SHAPE_FNS = (
     "UPPER",   # optional locale argument
     "LOWER",
     "LPAD",    # empty fill / non-positive length → NULL (StringIT)
+    "LTRIM",   # one argument only: Spark's 2-arg form is (trimStr, str)
+    "RTRIM",
 )
 
 _WORD_RE = re.compile(
@@ -698,6 +700,13 @@ def _rewrite_call(name: str, args: list[str]) -> str:
             f"if(length({fill}) = 0, NULL, "
             f"lpad({args[0]}, {args[1]}, {fill}))))"
         )
+    if up in ("LTRIM", "RTRIM"):
+        # LTrimFunction/RTrimFunction take one argument; Spark's two-argument
+        # ltrim(trimStr, str) reverses the order, so passing a second
+        # argument through would trim the wrong string
+        if len(args) != 1:
+            raise PhoenixTranslationError(f"{up} takes one argument")
+        return f"{up.lower()}({args[0]})"
     if up == "SIGN":
         # SignFunction returns INTEGER (-1/0/1; SignFunction.java:67
         # getDataType = PInteger); Spark's sign() returns DOUBLE

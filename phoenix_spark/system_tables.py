@@ -175,7 +175,7 @@ def catalog_df(engine) -> DataFrame:
 
     index_names = set(engine._indexes)
     for name in sorted(engine._managed_names()):
-        if name.split(".")[-1] in index_names:
+        if name in index_names:
             continue  # emitted below with index metadata
         mt = ManagedTable(engine.spark, engine.warehouse, name)
         emit(name, "u", mt.schema, mt.pk, props=mt.meta.get("props", {}))
@@ -185,24 +185,19 @@ def catalog_df(engine) -> DataFrame:
     view_ix_id = 0
     for name, d in sorted(engine._indexes.items()):
         imt = ManagedTable(engine.spark, engine.warehouse, name)
-        # the index lives in its base's schema (MetaDataClient puts the
-        # index row under the data table's TABLE_SCHEM), placed by its
-        # registry entry: a table index names its table in ``base``; a view
-        # index (``chain`` set) is on the view of its bare name
+        # the index lives in its table's or view's schema (MetaDataClient
+        # puts the index row under the data table's TABLE_SCHEM): the one
+        # its registry entry names
         on_view = d.chain is not None
         if on_view:
             view_ix_id += 1
-            vc = [v for v in engine._views if v.split(".")[-1] == d.table]
-            target = vc[0] if len(vc) == 1 else engine._qualify(d.table)
-        else:
-            target = d.base or engine._qualify(d.table)
-        schem = target.split(".")[0] if "." in target else None
+        schem, data_table = _split(d.table)
         emit(
             f"{schem}.{name}" if schem else name,
             "i",
             imt.schema if imt.exists() else None,
             imt.pk if imt.exists() else [],
-            data_table=d.table,
+            data_table=data_table,
             index_state=d.state,
             view_index_id=view_ix_id if on_view else None,
         )

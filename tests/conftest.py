@@ -16,11 +16,13 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 # loads and an availableNow streaming CDC apply — the small-commit pins
 # (client-built rows, index temp views), the point commits (client-batch
 # UPSERT VALUES and pinned DELETE against the distributed write, their
-# jobs, their atomicity and an availableNow change stream over them) and
-# the metadata cache (one frame and one column-type map per table version,
-# and what invalidates them).  Everything else (the IT-replay suites,
-# engine/mutation/streaming tests) is marked slow and runs via
-# `pytest tests/ -m "" -q`.
+# jobs, their atomicity and an availableNow change stream over them), the
+# metadata cache (one frame and one column-type map per table version, and
+# what invalidates them) and name resolution (each table, view and index
+# reference bound by its qualified name in the connection's schema, tenant
+# and SCN, registered only when a statement reads it).  Everything else
+# (the IT-replay suites, engine/mutation/streaming tests) is marked slow and
+# runs via `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",
@@ -33,6 +35,7 @@ _FAST_FILES = {
     "test_local_commit.py",
     "test_point_commit.py",
     "test_metadata_cache.py",
+    "test_name_resolution.py",
 }
 
 

@@ -8,10 +8,9 @@ segments from the driver, without a Spark job.  The rows must keep their
 values through that path, TIMESTAMP literals included, whatever the time
 zone of the Python process.
 
-An index-served SELECT reads the index's temp view as last registered; every
-writer of an index re-registers it, so the view must see rows written by
-``ALTER INDEX ... REBUILD`` and by another ``Engine`` over the same session
-and warehouse.
+An index-served SELECT reads the index through a temp view bound at the
+index's current version, so it must see rows written by ``ALTER INDEX ...
+REBUILD`` and by another ``Engine`` over the same session and warehouse.
 """
 
 from __future__ import annotations
