@@ -18,7 +18,10 @@ PTable by (tenant, schema, name): ``_resolve`` maps a name to the managed
 table, view or index it denotes on the connection (USE'd schema, tenant,
 SCN), and ``_bind`` reads it through a temp view of its own, registered when
 a statement reads it and again only after the table has moved.  Writes
-register nothing.
+register nothing.  A SELECT whose one table reference has its whole PK
+pinned to literals is a point lookup (``_point_lookup``): it chooses no
+index and binds the reference to that key's rows, read on the driver
+without a Spark job.
 
 Views are Phoenix-semantics views: single-table, predicate-only, recompiled
 into every read (QueryCompiler.java:803-806).  Sequences are a single-writer
@@ -34,6 +37,8 @@ import json
 import os
 import re
 import weakref
+from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -44,8 +49,10 @@ from phoenix_spark.catalog import Catalog, file_signature
 from phoenix_spark.mutations import (
     _DEL_COL,
     ManagedTable,
+    _pk_pins,
     key_join,
     local_frame,
+    pin_keys,
     wall_clock,
 )
 from phoenix_spark.sqlfront import (
@@ -56,6 +63,9 @@ from phoenix_spark.sqlfront import (
 )
 from phoenix_spark.sqllex import code_start, iter_top, mask, split_top, tokens, unmask
 from phoenix_spark.types import parse_type
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # translate_phoenix_sql's catalog arguments and the Spark types each holds
 _COLUMN_KINDS = {
@@ -80,7 +90,8 @@ def _column_kinds(schema: T.StructType) -> dict[str, set[str]]:
 
 # The temp views ``Engine._bind`` registered, per SparkSession (whose
 # temp-view namespace they share): view name -> the binding it shows,
-# ``(warehouse, qualified name, tenant, SCN, dynamic columns, version)``.
+# ``(warehouse, qualified name, tenant, SCN, dynamic columns, point keys,
+# version)``.
 _BOUND: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -93,11 +104,57 @@ _FROM_END = frozenset(
 _NOT_A_TABLE = frozenset({"SELECT", "WITH", "VALUES", "LATERAL"})
 # words after a table name that are no alias of it
 _ALIAS_STOP = _ALIAS_STOP_KW | {"WINDOW", "MINUS", "TABLESAMPLE"}
+# words that end a WHERE clause at its bracket depth
+_WHERE_END = _FROM_END - {"WHERE", "SELECT"} | {";"}
+_SET_OPS = frozenset({"UNION", "INTERSECT", "EXCEPT", "MINUS"})
 
 
 def _ident(tok) -> str:
     """The name a word or quoted-identifier token spells."""
     return tok.text[1:-1].replace('""', '"') if tok.kind == "ident" else tok.text
+
+
+def _table_refs(toks: list) -> Iterator[tuple[int, int]]:
+    """The span ``(first, last)`` in ``toks`` of each table reference's
+    (dotted) name: after a SELECT's FROM or a JOIN, in a FROM item list, or
+    opening a parenthesized join.  CTE names and table functions are
+    references too; the caller tells them apart."""
+    selects: set[int] = set()  # depths whose bracket group has a SELECT
+    lists: set[int] = set()  # depths inside a FROM item list
+    expect = False
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        word = t.text.upper() if t.kind == "word" else ""
+        if t.kind == "open":
+            selects.discard(t.depth + 1)
+            lists.discard(t.depth + 1)
+            i += 1  # a derived table or a parenthesized join follows
+            continue
+        if expect and t.kind in ("word", "ident") and word not in _NOT_A_TABLE:
+            expect = False
+            j = i
+            while (
+                j + 2 < len(toks)
+                and toks[j + 1].text == "."
+                and toks[j + 2].kind in ("word", "ident")
+            ):
+                j += 2
+            yield i, j
+            i = j + 1
+            continue
+        expect = False
+        if word == "SELECT":
+            selects.add(t.depth)
+            lists.discard(t.depth)
+        elif (word == "FROM" and t.depth in selects) or word == "JOIN":
+            lists.add(t.depth)
+            expect = True
+        elif t.text == "," and t.depth in lists:
+            expect = True
+        elif word in _FROM_END:
+            lists.discard(t.depth)
+        i += 1
 
 
 class Engine:
@@ -235,13 +292,16 @@ class Engine:
         name: str,
         dyn_cols: dict[str, str] | None = None,
         json_col: str = "props",
+        keys: pa.Table | None = None,
     ) -> DataFrame:
         """Resolve a table/view.
 
         ``dyn_cols`` is the dynamic-column surface (``SELECT * FROM t (mycol
         VARCHAR)`` — grammar PhoenixSQL.g:832-855): extra typed columns
         declared at query time, resolved from the table's JSON overflow
-        column (schema-on-read).
+        column (schema-on-read).  ``keys`` (an Arrow table of the root
+        table's PK values) reads only those keys' rows, on the driver
+        (``ManagedTable.read``).
         """
         name = self._qualify(name)
         if name in self._views:
@@ -260,14 +320,14 @@ class Engine:
             # (the reference's diverged views, LinkType.EXCLUDED_COLUMN).
             added = {c: t for c, t in (vcols or {}).items() if t is not None}
             excluded = [c for c, t in (vcols or {}).items() if t is None]
-            df = self.table(parent, dyn_cols=added or None, json_col=json_col)
+            df = self.table(parent, dyn_cols=added or None, json_col=json_col, keys=keys)
             df = df.filter(where) if where else df
             if excluded:
                 df = df.drop(*excluded)
         else:
             mt = ManagedTable(self.spark, self.warehouse, name)
             if mt.exists():
-                df = mt.read(as_of=self.scn)
+                df = mt.read(as_of=self.scn, keys=keys)
                 tcol = self._tenant_col(mt) if self.tenant_id else None
                 if tcol:
                     df = df.filter(F.col(tcol) == self.tenant_id).drop(tcol)
@@ -337,13 +397,18 @@ class Engine:
             return q
         return q if ManagedTable(self.spark, self.warehouse, q).exists() else None
 
-    def _bind(self, q: str, dyn: dict[str, str] | None = None) -> str:
+    def _bind(
+        self, q: str, dyn: dict[str, str] | None = None, keys: pa.Table | None = None
+    ) -> str:
         """The temp view that shows ``q`` (a name ``_resolve`` returned, with
         dynamic columns ``dyn``) on this connection, registered now unless
         it already shows ``q`` at its current version.  Its name is ``q``'s
         under a reserved prefix (``_p_<schema>__<name>``), suffixed with the
         connection's tenant, SCN and dynamic-column spec, so no two
-        bindings a statement reads share a name."""
+        bindings a statement reads share a name.  With point ``keys``
+        (``_point_lookup``) the view, suffixed ``__pt``, shows only their
+        rows, read on the driver into a LocalRelation (``ManagedTable.read``
+        with Arrow keys)."""
         schema, _, name = q.rpartition(".")
         view = f"_p_{schema}__{name}"
         if self.tenant_id is not None:
@@ -353,10 +418,13 @@ class Engine:
         spec = ",".join(f"{k}:{v}" for k, v in sorted((dyn or {}).items()))
         if spec:
             view += f"__dyn{hashlib.md5(spec.encode()).hexdigest()[:8]}"
-        key = (self.warehouse, q, self.tenant_id, self.scn, spec, self._version(q))
+        if keys is not None:
+            view += "__pt"
+        points = None if keys is None else keys.to_pylist()
+        key = (self.warehouse, q, self.tenant_id, self.scn, spec, points, self._version(q))
         bound = _BOUND.setdefault(self.spark, {})
         if bound.get(view) != key:
-            self.table(q, dyn_cols=dyn).createOrReplaceTempView(view)
+            self.table(q, dyn_cols=dyn, keys=keys).createOrReplaceTempView(view)
             bound[view] = key
         return view
 
@@ -378,7 +446,7 @@ class Engine:
                 self.spark.catalog.dropTempView(view)
                 del bound[view]
 
-    def _bind_refs(self, text: str) -> str:
+    def _bind_refs(self, text: str, point: tuple[str, pa.Table] | None = None) -> str:
         """Rewrite each table reference of ``text`` — after a SELECT's FROM
         or a JOIN, in a FROM item list, or opening a parenthesized join — to
         the temp view of its binding (``_bind``), aliased by its bare name
@@ -386,7 +454,8 @@ class Engine:
         references become ``alias.col``.  A name that resolves to no managed
         table, view or index (an attached table, a CTE, a CDC object, any
         other temp view) stays as written.  This is where a statement's
-        table names resolve, once each."""
+        table names resolve, once each.  ``point`` (``_point_lookup``'s
+        relation and keys) binds that relation to its point read."""
         toks = [t for t in tokens(text) if t.kind != "comment"]
         ctes = {
             toks[i - 1].text.lower()
@@ -398,61 +467,28 @@ class Engine:
         edits: list[tuple[int, int, str]] = []
         aliases: dict[str, str] = {}  # dotted name as written -> its alias
         views: dict[str, str] = {}  # view -> the name bound to it here
-        selects: set[int] = set()  # depths whose bracket group has a SELECT
-        lists: set[int] = set()  # depths inside a FROM item list
-        expect = False
-        i = 0
-        while i < len(toks):
-            t = toks[i]
-            word = t.text.upper() if t.kind == "word" else ""
-            if t.kind == "open":
-                selects.discard(t.depth + 1)
-                lists.discard(t.depth + 1)
-                i += 1  # a derived table or a parenthesized join follows
+        for i, j in _table_refs(toks):
+            name = ".".join(_ident(p) for p in toks[i : j + 1 : 2])
+            nxt = toks[j + 1] if j + 1 < len(toks) else None
+            if (nxt is not None and nxt.text == "(") or name.lower() in ctes:
                 continue
-            if expect and t.kind in ("word", "ident") and word not in _NOT_A_TABLE:
-                expect = False
-                j = i
-                while (
-                    j + 2 < len(toks)
-                    and toks[j + 1].text == "."
-                    and toks[j + 2].kind in ("word", "ident")
-                ):
-                    j += 2
-                name = ".".join(_ident(p) for p in toks[i : j + 1 : 2])
-                nxt = toks[j + 1] if j + 1 < len(toks) else None
-                q = None
-                if (nxt is None or nxt.text != "(") and name.lower() not in ctes:
-                    q = self._resolve(name)
-                if q is not None:
-                    view = self._bind(q)
-                    if views.setdefault(view, q) != q:
-                        raise ValueError(f"tables {views[view]} and {q} share view {view}")
-                    bare = _ident(toks[j])
-                    alias = None
-                    if nxt is not None and nxt.text.upper() == "AS" and j + 2 < len(toks):
-                        alias = _ident(toks[j + 2])
-                    elif nxt is not None and nxt.kind in ("word", "ident") and (
-                        nxt.text.upper() not in _ALIAS_STOP
-                    ):
-                        alias = _ident(nxt)
-                    edits.append((t.start, toks[j].end, view if alias else f"{view} {bare}"))
-                    if j > i:
-                        aliases[name.lower()] = alias or bare
-                i = j + 1
+            q = self._resolve(name)
+            if q is None:
                 continue
-            expect = False
-            if word == "SELECT":
-                selects.add(t.depth)
-                lists.discard(t.depth)
-            elif (word == "FROM" and t.depth in selects) or word == "JOIN":
-                lists.add(t.depth)
-                expect = True
-            elif t.text == "," and t.depth in lists:
-                expect = True
-            elif word in _FROM_END:
-                lists.discard(t.depth)
-            i += 1
+            view = self._bind(q, keys=point[1] if point and point[0] == q else None)
+            if views.setdefault(view, q) != q:
+                raise ValueError(f"tables {views[view]} and {q} share view {view}")
+            bare = _ident(toks[j])
+            alias = None
+            if nxt is not None and nxt.text.upper() == "AS" and j + 2 < len(toks):
+                alias = _ident(toks[j + 2])
+            elif nxt is not None and nxt.kind in ("word", "ident") and (
+                nxt.text.upper() not in _ALIAS_STOP
+            ):
+                alias = _ident(nxt)
+            edits.append((toks[i].start, toks[j].end, view if alias else f"{view} {bare}"))
+            if j > i:
+                aliases[name.lower()] = alias or bare
         # schema.table.column -> alias.column
         for k in range(len(toks) - 3):
             if toks[k + 1].text == "." and toks[k + 3].text == ".":
@@ -464,6 +500,56 @@ class Engine:
             out += [text[pos:start], new]
             pos = end
         return "".join(out) + text[pos:]
+
+    def _point_lookup(self, text: str) -> tuple[str, pa.Table] | None:
+        """The relation and keys of a point SELECT: a SELECT with no set
+        operator whose FROM holds just one table reference — a managed
+        table or view (no dynamic columns), maybe aliased, no join or
+        derived table beside it — and no other reference, whose WHERE pins
+        every PK column of its root table with a top-level ``col = literal``
+        conjunct (``_pk_pins``, on the translated WHERE; a qualified column
+        must name that reference) to a literal that converts exactly
+        (``pin_keys``).  Phoenix runs such a query as a batch of Gets and
+        chooses no index for it (ScanRanges.isPointLookup,
+        QueryOptimizer.java:230-236).  None for any other statement, and on
+        a tenant connection, whose tenant pin is implicit."""
+        if self.tenant_id is not None:
+            return None
+        toks = [t for t in tokens(text) if t.kind != "comment"]
+        refs = list(_table_refs(toks))
+        if len(refs) != 1 or toks[0].text.upper() != "SELECT":
+            return None
+        top = [k for k, t in enumerate(toks) if t.depth == 0]
+        if any(toks[k].text.upper() in _SET_OPS for k in top):
+            return None
+        i, j = refs[0]
+        if toks[i].depth or toks[i - 1].text.upper() != "FROM":
+            return None
+        # the FROM item is the name, maybe aliased, and a WHERE follows it
+        end = next((k for k in top if k > j and toks[k].text.upper() in _FROM_END | {";"}),
+                   len(toks))
+        alias = [t for t in toks[j + 1 : end] if t.text.upper() != "AS"]
+        if len(alias) > 1 or alias and (
+            alias[0].kind not in ("word", "ident") or alias[0].text.upper() in _ALIAS_STOP
+        ):
+            return None
+        if end == len(toks) or toks[end].text.upper() != "WHERE":
+            return None
+        name = ".".join(_ident(p) for p in toks[i : j + 1 : 2])
+        quals = frozenset(
+            n.lower() for n in ([_ident(alias[0])] if alias else [name, _ident(toks[j])])
+        )
+        q = self._resolve(name)
+        root = q and ManagedTable(self.spark, self.warehouse, self._view_chain(q)[1])
+        if not root or not root.exists():
+            return None
+        stop = next((k for k in top if k > end and toks[k].text.upper() in _WHERE_END), None)
+        cond = text[toks[end].end : len(text) if stop is None else toks[stop].start]
+        if not _pk_pins(cond, root.pk, quals):
+            return None  # spares the translation of every other WHERE
+        pins = _pk_pins(translate_phoenix_sql(cond, **self._table_columns(q)), root.pk, quals)
+        keys = pins and pin_keys(self.spark, pins, root.schema)
+        return None if keys is None else (q, keys)
 
     def _view_chain(self, name: str) -> tuple[list[tuple], str]:
         """The ``(parent, where, columns)`` definitions along view ``name``'s
@@ -767,12 +853,18 @@ class Engine:
     def explain(self, text: str) -> str:
         # consume_sequences=False: explaining a query must not advance
         # sequences (the reference compiles without running the sequence RPC)
-        df = self._exec_select(text, consume_sequences=False)
-        return df._jdf.queryExecution().explainString(  # noqa: SLF001
+        sql, point = self._plan_select(text, consume_sequences=False)
+        return self._explain_plan(self.spark.sql(sql), point)
+
+    def _explain_plan(self, df: DataFrame, point: tuple[str, pa.Table] | None) -> str:
+        """Spark's formatted plan of ``df``, headed, for a point SELECT
+        (``point``), as Phoenix heads a point lookup's plan."""
+        plan = df._jdf.queryExecution().explainString(  # noqa: SLF001
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: SLF001
                 "formatted"
             )
         )
+        return plan if point is None else f"POINT LOOKUP ON 1 KEY OVER {point[0]}\n{plan}"
 
     # -- per-statement executors -------------------------------------------
 
@@ -802,6 +894,16 @@ class Engine:
             )
 
     def _exec_select(self, text: str, consume_sequences: bool = True) -> DataFrame:
+        return self.spark.sql(self._plan_select(text, consume_sequences)[0])
+
+    def _plan_select(
+        self, text: str, consume_sequences: bool = True
+    ) -> tuple[str, tuple[str, pa.Table] | None]:
+        """The Spark SQL of a SELECT, every table reference bound, and the
+        relation and keys it reads as a point lookup (None for any other
+        read): a point SELECT binds its one reference to the rows of the
+        pinned key before index choice, which it skips; every other SELECT
+        chooses an index, then binds."""
         if self._cdcs:
             self._register_cdc_views(text)
         # literals, quoted identifiers and comments are masked, so the
@@ -822,11 +924,13 @@ class Engine:
         masked = self._rewrite_sequence_refs(
             masked, restore, consume=consume_sequences
         )
-        # index substitution runs on the UNMASKED text: partial-index
-        # predicate matching compares literal-containing conjuncts; the
-        # table references it leaves then bind
-        text = self._bind_refs(self._maybe_use_index(restore(masked)))
-        return self.spark.sql(translate_phoenix_sql(text, **self._typed_columns(text)))
+        # point detection and index substitution run on the UNMASKED text:
+        # pins and partial-index predicates are literal-containing
+        # conjuncts; the table references index choice leaves then bind
+        text = restore(masked)
+        point = self._point_lookup(text)
+        bound = self._bind_refs(text if point else self._maybe_use_index(text), point)
+        return translate_phoenix_sql(bound, **self._typed_columns(bound)), point
 
     # SELECT DISTINCT ... GROUP BY g1,g2 ORDER BY g1,g2 where a sort key is
     # a GROUPING column absent from the projection: Phoenix orders the
@@ -1322,12 +1426,19 @@ class Engine:
             return local_frame(
                 self.spark, [(line,) for line in plan.splitlines()], "plan: string"
             )
-        plan = self.explain(body)
-        lines = [(line,) for line in plan.splitlines()]
+        sql, point = self._plan_select(body, consume_sequences=False)
+        df = self.spark.sql(sql)
+        lines = [(line,) for line in self._explain_plan(df, point).splitlines()]
         if m.group(1):
-            df = self._exec_select(body, consume_sequences=False)
+            # a point read opens its root table's segment files itself
+            files = (
+                ManagedTable(self.spark, self.warehouse, self._view_chain(point[0])[1])
+                ._part_files(self.scn)
+                if point
+                else df.inputFiles()
+            )
             lines.append(("-- input splits (region analogue):",))
-            lines.extend((f"--   {f}",) for f in sorted(df.inputFiles()))
+            lines.extend((f"--   {f}",) for f in sorted(files))
         return local_frame(self.spark, lines, "plan: string")
 
     def _exec_create_table(self, text: str) -> int:
@@ -1352,16 +1463,10 @@ class Engine:
                 f"MULTI_TENANT table {ct.name} needs at least 2 PRIMARY KEY "
                 "columns (the first is the tenant id)"
             )
-        name = ct.name
-        if "." not in name and self.default_schema:
-            # unqualified CREATE under USE <schema> lands in that schema
-            # (the reference resolves table names against the connection
-            # schema, MetaDataClient via connection.getSchema())
-            name = f"{self.default_schema}.{name}"
         ManagedTable.create(
             self.spark,
             self.warehouse,
-            name,
+            self._qualify_new(ct.name),
             ct.schema,
             ct.pk,
             sort_orders=ct.sort_orders,
@@ -1381,6 +1486,9 @@ class Engine:
 
     def _exec_create_view(self, text: str) -> int:
         cv = D.parse_create_view(text)
+        # the view lands in the USE'd schema, and keeps reading the parent
+        # it names now whatever schema a later statement USEs
+        cv.name, cv.parent = self._qualify_new(cv.name), self._qualify(cv.parent)
         if self.tenant_id is not None:
             # a tenant connection resolves only MULTI_TENANT bases
             # (TenantSpecificTablesDDLIT.testCreateTenantViewFromNonMultiTenant
@@ -1537,6 +1645,15 @@ class Engine:
         name = m.group(1).strip('"').lower()
         self.default_schema = None if name == "default" else name
         return 0
+
+    def _qualify_new(self, name: str) -> str:
+        """The name a CREATE gives a new table or view: an unqualified one
+        lands in the USE'd schema (the reference resolves names against the
+        connection schema, MetaDataClient via connection.getSchema())."""
+        name = name.lower()
+        if "." not in name and self.default_schema:
+            return f"{self.default_schema}.{name}"
+        return name
 
     def _qualify(self, name: str) -> str:
         """Resolve an unqualified table or view name against the USE'd
@@ -1952,16 +2069,17 @@ class Engine:
                 raise ValueError(f"no sequence {dr.name}")
             return 0
         if dr.kind == "view":
-            if self._view_owners.pop(dr.name, None) is not None:
+            vname = self._qualify(dr.name)
+            if self._view_owners.pop(vname, None) is not None:
                 with open(self._view_owners_path, "w") as f:
                     json.dump(self._view_owners, f)
-            if self._views.pop(dr.name, None) is None and not dr.if_exists:
+            if self._views.pop(vname, None) is None and not dr.if_exists:
                 raise ValueError(f"no view {dr.name}")
             self._save_views()
-            self._unbind(dr.name)
+            self._unbind(vname)
             # its indexes go with it: base commits would keep maintaining them
             for d in list(self._indexes.values()):
-                if d.chain is not None and d.table == dr.name:
+                if d.chain is not None and d.table == vname:
                     self._drop_index(d.name)
             return 0
         mt = ManagedTable(self.spark, self.warehouse, self._qualify(dr.name))
@@ -2021,7 +2139,7 @@ class Engine:
         if am:
             if_exists, iname, _table, verb = (
                 am.group(1),
-                am.group(2).split(".")[-1].lower(),
+                am.group(2).lower(),
                 am.group(3),
                 am.group(4).upper(),
             )

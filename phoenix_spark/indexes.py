@@ -270,15 +270,12 @@ _DROP_INDEX_RE = re.compile(
 
 
 def parse_drop_index(text: str):
-    """Returns (name, table, if_exists) or None if not a DROP INDEX."""
+    """Returns (name, table, if_exists) or None if not a DROP INDEX.  The
+    name is kept as written, as ``parse_create_index`` records it."""
     m = _DROP_INDEX_RE.match(text)
     if not m:
         return None
-    return (
-        m.group(2).lower().split(".")[-1],
-        m.group(3).lower(),
-        bool(m.group(1)),
-    )
+    return m.group(2).lower(), m.group(3).lower(), bool(m.group(1))
 
 
 # --- query hints (HintNode.java:50-128) --------------------------------------

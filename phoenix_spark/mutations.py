@@ -33,14 +33,19 @@ Scale design (100 TB):
     (client-built rows reach Spark as an Arrow-built ``LocalRelation``,
     ``local_frame``) of up to ``_CLIENT_BATCH_ROWS`` rows, and a DELETE
     that pins every PK column to a literal — commits as Phoenix's client
-    batch (MutationState): one read of its keys' current rows, pruned by
-    PK literals and resolved latest-wins on the driver, serves ON
+    batch (MutationState): one read of its keys' current rows serves ON
     DUPLICATE KEY, the partial-column merge and the index pre-image; the
     post-image and every index's rows are derived over LocalRelations,
     which Catalyst folds without a job; and each segment is written by
     pyarrow as one file into a staging directory, all of them before any
-    is renamed into ``segments/``.  So a point statement runs one scan
-    job, and one that fails publishes nothing;
+    is renamed into ``segments/``;
+  * that read of a key set's current rows (``_current``) is one pyarrow
+    read on the driver — HBase's batch of Gets: the segments' parquet files
+    filtered by an Arrow ``is_in`` on the keys (row groups pruned on their
+    statistics), latest-wins resolved over the few versions it keeps.  It
+    also serves ``read(keys=<Arrow table>)``, the engine's point SELECT.
+    So a point statement runs no Spark job, and one that fails publishes
+    nothing;
   * every other commit (UPSERT SELECT, bulk loads, CDC apply, TTL expiry,
     other DELETEs, larger driver-held batches) writes its segment as a
     Spark job, sorted within each write task by the PK or an index's key —
@@ -69,7 +74,9 @@ import json
 import os
 import re
 import uuid
+import weakref
 from datetime import timedelta, timezone
+from typing import TYPE_CHECKING
 from decimal import ROUND_HALF_UP, Context, Decimal
 from zoneinfo import ZoneInfo
 
@@ -79,6 +86,9 @@ from pyspark.sql.window import Window
 
 from phoenix_spark import indexes as IX
 from phoenix_spark.sqllex import match_forward, split_top
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _TS_COL = "_mutation_ts"
 _DEL_COL = "_deleted"
@@ -188,7 +198,8 @@ def collect_arrow(df: DataFrame):
     (TIMESTAMP as UTC instants).  ``collect`` over a plan that folds to a
     ``LocalRelation`` runs no job (an Arrow collect always runs one), and
     TIMESTAMPs travel as epoch microseconds, so no time zone shifts them
-    (as scalars or array elements: the Phoenix column types)."""
+    (as scalars or array elements: the Phoenix column types); a
+    TIMESTAMP_NTZ travels as the naive datetime it is."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -201,22 +212,32 @@ def collect_arrow(df: DataFrame):
     rows = df.collect()
     values = list(zip(*rows)) or [()] * len(fields)
     arrays = []
-    for f, vals in zip(fields, values):
+    for f, vals, epoch in zip(fields, values, epochs):
         at = to_arrow_type(f.dataType)
         carrier = at
-        if pa.types.is_timestamp(at):
-            carrier = pa.int64()
-        elif pa.types.is_list(at) and pa.types.is_timestamp(at.value_type):
-            carrier = pa.list_(pa.int64())
+        if epoch is not None:
+            carrier = pa.list_(pa.int64()) if pa.types.is_list(at) else pa.int64()
         arrays.append(pa.array(vals, carrier).cast(at))
     return pa.Table.from_arrays(arrays, names=[f.name for f in fields])
 
 
 # The largest driver-held batch that commits as a client batch.  Its Python
-# work per row and its IN-list key filter grow with the batch: into a table
-# with one index, 2,000 rows commit in 0.7-0.8 s this way against 1.1-1.2 s
-# through a Spark write, 5,000 rows in 1.2-1.7 s against 1.0 s (4 vCPU).
-_CLIENT_BATCH_ROWS = 2000
+# work per row grows with the batch, and its read with the table: the keys
+# of a scattered batch prune few row groups, so the read decodes most of
+# every segment.  N rows, half of them present at random keys, into a table
+# of R x N rows (one Spark-written segment and four small ones) with a
+# two-column PK and one index commit this way / through a Spark write in
+# (seconds, 2 runs each, 4 vCPU, local[4]):
+#   N \ R         10                      100                    200-400
+#   1,000    0.41-0.51 / 1.63-1.85   0.45-0.53 / 1.35-1.40
+#   2,000    0.44-0.47 / 1.12-1.14   0.37-0.40 / 1.07-1.13
+#   5,000    0.65-0.75 / 1.16-1.24   0.72-0.82 / 1.11-1.13   0.95-1.08 / 1.90-2.24 (x400)
+#   10,000   0.98-1.05 / 0.97-1.29   1.00-1.04 / 1.37-1.40   0.95-1.11 / 1.48-1.69 (x200)
+#   20,000   1.95-2.10 / 1.36-1.52
+# The Spark write's scan grows with the table faster than the driver read,
+# so the crossover sits near 10,000 rows for the smallest tables and above
+# it for larger ones.
+_CLIENT_BATCH_ROWS = 10_000
 
 
 def _driver_held(df: DataFrame) -> bool:
@@ -231,11 +252,22 @@ def _driver_held(df: DataFrame) -> bool:
     )
 
 
+_NAN = float("nan")
+
+
+def _key_part(v):
+    """Key component ``v``, hashable; every NaN is one object, equal to
+    itself, as Spark's grouping and join keys normalize NaN."""
+    if isinstance(v, list):
+        return tuple(v)
+    return _NAN if v != v else v
+
+
 def _keys(rows, cols: list[str]) -> list[tuple]:
     """The key of each row of Arrow table ``rows``: its ``cols`` values,
     hashable, equal where Spark's NULL-safe equality holds."""
     cols = [rows.column(c).to_pylist() for c in cols]
-    return [tuple(tuple(v) if isinstance(v, list) else v for v in key) for key in zip(*cols)]
+    return [tuple(_key_part(v) for v in key) for key in zip(*cols)]
 
 
 def _publish(segments: list) -> None:
@@ -263,14 +295,19 @@ def _publish(segments: list) -> None:
 
 
 _PIN_RE = re.compile(
-    r"`?(\w+)`?\s*=\s*(?:[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
+    r"(?P<qual>(?:`?\w+`?\.)*)`?(?P<col>\w+)`?\s*="
+    r"\s*(?P<lit>[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
     r"|(?:(?:TIMESTAMP(?:_NTZ)?|DATE)\s*)?'(?:[^']|'')*')",
     re.I | re.S,
 )
 
 
 def _conjuncts(cond: str) -> list[str]:
-    """The top-level AND conjuncts of ``cond``, nested parentheses opened."""
+    """The top-level AND conjuncts of ``cond``, nested parentheses opened.
+    A condition with a top-level OR is one conjunct: AND binds tighter, so
+    ``a AND b OR c`` is ``(a AND b) OR c``."""
+    if len(split_top(cond, "OR")) > 1:
+        return [cond.strip()]
     out = []
     for part in split_top(cond, "AND"):
         p = part.strip()
@@ -280,20 +317,75 @@ def _conjuncts(cond: str) -> list[str]:
     return out
 
 
-def _pk_pins(cond: str, pk: list[str]) -> list[str] | None:
+def _pk_pins(cond: str, pk: list[str], quals: frozenset[str] = frozenset()) -> list[str] | None:
     """The conjuncts of ``cond`` that fix a PK column to a literal
-    (``col = literal``), one per PK column, when every PK column has one —
-    a point lookup (ScanRanges.isPointLookup) — else None.  Pins of other
-    columns are left out: they must not filter stored versions before
-    latest-wins picks the current one."""
+    (``col = literal``, the column unqualified or qualified by one of
+    ``quals``, lower case), one per PK column, when every PK column has
+    one — a point lookup (ScanRanges.isPointLookup) — else None.  Pins of
+    other columns are left out: they must not filter stored versions
+    before latest-wins picks the current one."""
     pins = {}
     for c in _conjuncts(cond):
         m = _PIN_RE.fullmatch(c)
-        if m:
-            pins[m.group(1).lower()] = c
+        qual = m and m["qual"].replace("`", "").lower()[:-1]
+        if m and (not qual or qual in quals):
+            pins[m["col"].lower()] = c
     if not {c.lower() for c in pk} <= set(pins):
         return None
     return [pins[c.lower()] for c in pk]
+
+
+_EXACT = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)
+_FRACTIONAL = (T.FloatType, T.DoubleType)
+_INSTANTS = (T.DateType, T.TimestampType, T.TimestampNTZType)
+# one literal-free row per SparkSession, to evaluate pin literals over
+_ONE_ROW: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = weakref.WeakKeyDictionary()
+
+
+def _one_to_one(col: T.DataType, lit: T.DataType) -> bool:
+    """Whether Spark's ``col = lit`` compares in a type that every value of
+    ``col`` maps into one to one, so a column value equals the literal only
+    if it equals the literal converted to ``col``'s type.  (A BIGINT column
+    against a DOUBLE literal fails: 2^53 and 2^53 + 1 both equal 2^53E0; a
+    VARCHAR against a number fails: '05' = 5.)"""
+    if isinstance(col, (*_EXACT, *_FRACTIONAL)) and isinstance(lit, (*_EXACT, *_FRACTIONAL)):
+        return isinstance(col, _FRACTIONAL) or not isinstance(lit, _FRACTIONAL)
+    if isinstance(col, _INSTANTS):
+        # an NTZ column compared with a TIMESTAMP converts through the zone,
+        # which maps two wall clocks of a skipped hour to one instant
+        ltz_vs_ntz = isinstance(col, T.TimestampNTZType) and isinstance(lit, T.TimestampType)
+        return isinstance(lit, (T.StringType, *_INSTANTS)) and not ltz_vs_ntz
+    if isinstance(col, T.BinaryType):
+        return isinstance(lit, (T.BinaryType, T.StringType))
+    return type(col) is type(lit) and not isinstance(col, T.ArrayType)
+
+
+def pin_keys(spark: SparkSession, pins: list[str], schema: T.StructType) -> pa.Table | None:
+    """The key that ``pins`` (``_pk_pins``, Spark SQL) fix, as a one-row
+    Arrow table of the PK columns under their column types, or None when a
+    literal does not convert exactly — then no read by that value is sure
+    to find every row the pin matches.  The literals are evaluated by Spark
+    over a LocalRelation, which runs no job: each is cast to its column's
+    type (``try_cast``) and must compare equal to itself after the cast."""
+    types = {f.name.lower(): f for f in schema.fields}
+    one = _ONE_ROW.get(spark)
+    if one is None:
+        one = _ONE_ROW[spark] = local_frame(spark, [(0,)], "_ int")
+    exprs, cols = [], []
+    for i, pin in enumerate(pins):
+        m = _PIN_RE.fullmatch(pin)
+        f, lit = types[m["col"].lower()], m["lit"]
+        cast = f"try_cast({lit} AS {f.dataType.simpleString()})"
+        exprs += [f"{lit} AS _l{i}", f"{cast} AS _v{i}", f"{cast} = {lit} AS _e{i}"]
+        cols.append(f)
+    frame = one.selectExpr(*exprs)
+    lits = frame.schema.fields[::3]
+    if not all(_one_to_one(f.dataType, lit.dataType) for f, lit in zip(cols, lits)):
+        return None
+    got = collect_arrow(frame)
+    if not all(got.column(f"_e{i}")[0].as_py() for i in range(len(pins))):
+        return None
+    return got.select([f"_v{i}" for i in range(len(pins))]).rename_columns([f.name for f in cols])
 
 
 def wall_clock(df: DataFrame) -> DataFrame:
@@ -739,56 +831,82 @@ class ManagedTable:
 
     # -- point commits: the client batch -----------------------------------
 
-    def _key_filter(self, rows, meta: dict) -> str | None:
-        """A predicate on the PK columns that every key in Arrow table
-        ``rows`` satisfies and that Parquet prunes row groups on: an IN list
-        of literals per PK column, as SQL text, so a batch of any size costs
-        one parse (a Column per literal costs a py4j round trip each).  None
-        when no PK column has such literals."""
-        import pyarrow as pa
+    def _part_files(self, as_of: int | None = None) -> list[str]:
+        """The parquet files of the segments committed at or before
+        ``as_of`` (all of them for None).  A segment is a directory whose
+        data files are ``part-*.parquet``; Spark writes its ``_SUCCESS`` and
+        ``.crc`` files beside them."""
+        files = []
+        for seg in self._segments():
+            if as_of is None or _seg_ts(seg) <= as_of:
+                files += sorted(
+                    os.path.join(seg, p)
+                    for p in os.listdir(seg)
+                    if p.startswith("part-") and p.endswith(".parquet")
+                )
+        return files
 
-        types = {f.name: f.dataType for f in self.schema.fields}
-        conds = []
-        for c in meta["pk"]:
-            dt, vals = types[c], rows.column(c)
-            if isinstance(dt, T.TimestampType):
-                vals, lit = vals.cast(pa.int64()), "timestamp_micros({})".format
-            elif isinstance(dt, T.StringType):
-                lit = lambda v: f"CAST(X'{v.encode().hex()}' AS STRING)"  # noqa: E731
-            elif isinstance(dt, T.BinaryType):
-                lit = lambda v: f"X'{v.hex()}'"  # noqa: E731
-            elif isinstance(dt, (T.ArrayType, T.TimestampNTZType)):
-                continue  # no literal Parquet prunes on; the read is wider
-            else:
-                lit = f"CAST('{{}}' AS {dt.simpleString()})".format
-            vals = dict.fromkeys(vals.to_pylist())
-            lits = ", ".join(lit(v) for v in vals if v is not None)
-            match = f"`{c}` IN ({lits})" if lits else "FALSE"
-            conds.append(f"({match} OR `{c}` IS NULL)" if None in vals else match)
-        return " AND ".join(conds) or None
+    def _current(self, keys: pa.Table, meta: dict, as_of: int | None = None) -> pa.Table | None:
+        """The current rows (at ``as_of``) of the keys in Arrow table
+        ``keys`` (its PK columns hold them), as an Arrow table of the data
+        columns under the types ``collect_arrow`` gives them — or None when
+        no PK column is Arrow-filterable (an ARRAY), where ``read(keys=...)``
+        serves.
 
-    def _current(self, cond: str | None, meta: dict):
-        """The current rows (an Arrow table of the data columns) whose PK
-        satisfies ``cond``, a predicate on PK columns only; none for
-        ``cond`` None.  One read: ``cond`` filters the raw segment rows, and
-        Parquet prunes on it; latest-wins is resolved on the driver over the
-        few versions of the keys it keeps, so no window shuffles."""
+        One pyarrow read on the driver, no Spark job: the segments' parquet
+        files, filtered by an ``is_in`` on each PK column (row groups pruned
+        on their statistics), INT96 timestamps read as microseconds (the
+        nanosecond default wraps years before 1677).  The rows are projected
+        as ``logical`` projects them — DEFAULTs applied by Spark over a
+        LocalRelation, which runs no job — and latest-wins is resolved on
+        the driver over the few versions of the keys the filter keeps."""
         import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        segs = self._segments()
-        if cond is None or not segs:
-            return to_arrow_schema(T.StructType.fromJson(meta["schema"])).empty_table()
-        raw = collect_arrow(self._scan(segs, meta).filter(cond))
+        schema = T.StructType.fromJson(meta["schema"])
+        arrow = to_arrow_schema(schema)
+        pk, phys, dfl = meta["pk"], meta.get("physical", {}), meta.get("defaults", {})
+        keys = keys.select(pk).cast(pa.schema([arrow.field(c) for c in pk]))
+        cond = None
+        for c in pk:
+            if pa.types.is_list(keys.schema.field(c).type):
+                continue
+            vals = pc.unique(keys.column(c))
+            if pa.types.is_floating(vals.type):
+                # Spark's = holds between 0.0 and -0.0; is_in compares bits
+                vals = pc.unique(pa.concat_arrays([vals, pc.negate(vals)]))
+            term = ds.field(phys.get(c, c)).isin(vals)
+            if c in dfl:
+                term = term | ds.field(phys.get(c, c)).is_null()  # reads as the default
+            cond = term if cond is None else cond & term
+        if cond is None:
+            return None
+        stored = self.stored_schema(meta)
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        raw = ds.dataset(
+            self._part_files(as_of), schema=to_arrow_schema(stored), format=fmt
+        ).to_table(filter=cond)
+        # one chunk per file, most of them empty; createDataFrame drops every
+        # batch that follows an empty one
+        raw = raw.combine_chunks()
+        if dfl:
+            raw = collect_arrow(self.logical(self.spark.createDataFrame(raw, stored), meta))
+        else:
+            names = [*schema.names, _TS_COL, _DEL_COL]
+            raw = raw.select([phys.get(c, c) for c in names]).rename_columns(names)
+        want = set(_keys(keys, pk))
         latest: dict = {}
-        for i, (k, ts) in enumerate(
-            zip(_keys(raw, meta["pk"]), raw.column(_TS_COL).to_pylist())
-        ):
-            if k not in latest or ts > latest[k][1]:
+        for i, (k, ts) in enumerate(zip(_keys(raw, pk), raw.column(_TS_COL).to_pylist())):
+            if k in want and (k not in latest or ts > latest[k][1]):
                 latest[k] = (i, ts)
         dead = raw.column(_DEL_COL).to_pylist()
         live = sorted(i for i, _ in latest.values() if not dead[i])
-        return raw.take(pa.array(live, pa.int64())).drop_columns([_TS_COL, _DEL_COL])
+        rows = raw.take(pa.array(live, pa.int64())).drop_columns([_TS_COL, _DEL_COL])
+        return rows.cast(arrow).combine_chunks()
 
     def _upsert_point(self, df: DataFrame, on_duplicate) -> tuple[int, int]:
         """Commit driver-held rows ``df`` as Phoenix's MutationState commits
@@ -799,9 +917,11 @@ class ManagedTable:
         together (``_publish``).  Returns the commit ts and the count of
         rows written."""
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         meta = self.meta
-        fields = T.StructType.fromJson(meta["schema"]).fields
+        schema = T.StructType.fromJson(meta["schema"])
+        fields = schema.fields
         given = [f for f in df.schema.fields if f.name in {g.name for g in fields}]
         defs = [d for d in self._indexes() if d.state != "DISABLED"]
         ts = self._next_ts()
@@ -809,13 +929,11 @@ class ManagedTable:
         keys = _keys(inc, meta["pk"])
         # a plain upsert of whole rows into an unindexed table reads nothing
         merges = on_duplicate is not None or defs or len(given) < len(fields)
-        cond = self._key_filter(inc, meta) if merges else None
-        if merges and cond is None:
-            # no PK literal to prune on: a semi-join scopes the read to the
-            # keys instead of collecting every stored version
+        cur = self._current(inc, meta) if merges else to_arrow_schema(schema).empty_table()
+        if cur is None:
+            # no Arrow-filterable PK column: a semi-join scopes the read to
+            # the keys instead of collecting every stored version
             cur = collect_arrow(self.read(keys=df))
-        else:
-            cur = self._current(cond, meta)
         at = dict(zip(_keys(cur, meta["pk"]), range(cur.num_rows)))
         take = pa.array([at.get(k) for k in keys], pa.int64())
         joined = {f"__in_{f.name}": inc.column(f.name) for f in given}
@@ -843,14 +961,15 @@ class ManagedTable:
         _publish(segments)
         return ts, rows.num_rows
 
-    def _delete_point(self, condition: str, pins: list[str], limit: int | None) -> int:
-        """DELETE of pinned keys as a client batch: one read of the keys'
-        current rows (``_current`` on the PK ``pins``), then ``condition``,
-        the tombstones and the index tombstones evaluated over a
-        LocalRelation, and every segment published together."""
+    def _delete_point(self, condition: str, keys: pa.Table, limit: int | None) -> int:
+        """DELETE of the keys in Arrow table ``keys`` (those its PK pins
+        fix, ``pin_keys``) as a client batch: one read of their current
+        rows (``_current``), then ``condition``, the tombstones and the index
+        tombstones evaluated over a LocalRelation, and every segment
+        published together."""
         meta = self.meta
         ts = self._next_ts()
-        cur = self._current(" AND ".join(f"({p})" for p in pins), meta)
+        cur = self._current(keys, meta)
         if not cur.num_rows:
             return 0
         victims = self.spark.createDataFrame(cur, self.schema).filter(condition)
@@ -927,8 +1046,9 @@ class ManagedTable:
         whole rows, so the commit's segment (``read_commit``) is the exact
         victim set for RETURNING and index maintenance.  A predicate on PK
         columns only is pushed below the latest-wins window by Catalyst.  A
-        condition that pins every PK column to a literal is a point lookup,
-        committed as a client batch (``_delete_point``).
+        condition that pins every PK column to a literal that converts
+        exactly to its type is a point lookup, committed as a client batch
+        (``_delete_point``).
         """
         from pyspark.sql import Observation
 
@@ -937,8 +1057,9 @@ class ManagedTable:
             if order_by is None and isinstance(condition, str)
             else None
         )
-        if pins:
-            return self._delete_point(condition, pins, limit)
+        keys = pin_keys(self.spark, pins, self.schema) if pins else None
+        if keys is not None:
+            return self._delete_point(condition, keys, limit)
         ts = self._next_ts()
         cur = self.read()
         victims = cur.filter(condition) if condition is not None else cur
@@ -1009,7 +1130,7 @@ class ManagedTable:
         self,
         as_of: int | None = None,
         with_row_timestamp: bool = False,
-        keys: DataFrame | None = None,
+        keys: DataFrame | pa.Table | None = None,
     ) -> DataFrame:
         """Latest-wins compacted view (optionally AS OF a mutation ts — the
         TableSnapshotResultIterator analogue).  ``with_row_timestamp``
@@ -1017,8 +1138,15 @@ class ManagedTable:
         PhoenixRowTimestampFunction analogue).  ``keys`` (a frame holding
         the PK columns of one statement's rows) scopes the read to those
         keys: a broadcast semi-join on the raw segment rows, before the
-        window, so only their versions are shuffled."""
+        window, so only their versions are shuffled.  Keys the driver holds
+        (an Arrow table of PK values, a point lookup) are read by
+        ``_current`` into a LocalRelation, with no job."""
         meta = self.meta
+        if keys is not None and not isinstance(keys, DataFrame):
+            rows = None if with_row_timestamp else self._current(keys, meta, as_of)
+            if rows is not None:
+                return self.spark.createDataFrame(rows, T.StructType.fromJson(meta["schema"]))
+            keys = self.spark.createDataFrame(keys)
         segs = self._segments()
         if as_of is not None:
             segs = [p for p in segs if _seg_ts(p) <= as_of]

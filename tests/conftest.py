@@ -18,9 +18,11 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 # UPSERT VALUES and pinned DELETE against the distributed write, their
 # jobs, their atomicity and an availableNow change stream over them), the
 # metadata cache (one frame and one column-type map per table version, and
-# what invalidates them) and name resolution (each table, view and index
+# what invalidates them), name resolution (each table, view and index
 # reference bound by its qualified name in the connection's schema, tenant
-# and SCN, registered only when a statement reads it).  Everything else
+# and SCN, registered only when a statement reads it) and the point reads
+# (the driver's Arrow read of a pinned key against Spark's latest-wins read,
+# and the point SELECT against the window read).  Everything else
 # (the IT-replay suites, engine/mutation/streaming tests) is marked slow and
 # runs via `pytest tests/ -m "" -q`.
 _FAST_FILES = {
@@ -36,6 +38,7 @@ _FAST_FILES = {
     "test_point_commit.py",
     "test_metadata_cache.py",
     "test_name_resolution.py",
+    "test_point_read.py",
 }
 
 

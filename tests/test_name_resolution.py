@@ -93,6 +93,48 @@ def test_index_on_qualified_table_beside_an_unqualified_one(engine):
     assert _rows(e.managed("ix").read().select("k", "w")) == [(2, 20), (4, 40)]
 
 
+def test_schema_qualified_index_is_altered_and_dropped_by_its_name(engine):
+    """``CREATE INDEX s2.ix2`` records ``s2.ix2``; ALTER INDEX and DROP
+    INDEX find it by the same name."""
+    e = engine
+    e.sql("CREATE SCHEMA s2")
+    e.sql("CREATE TABLE s2.t (k INTEGER PRIMARY KEY, v VARCHAR, w INTEGER)")
+    e.sql("UPSERT INTO s2.t VALUES (1, 'a', 10)")
+    e.sql("CREATE INDEX s2.ix2 ON s2.t (v) INCLUDE (w)")
+    q = "SELECT k, w FROM s2.t WHERE v = 'a'"
+    served = os.path.join("s2", "ix2", "segments")
+    assert served in e.explain(q)
+    e.sql("ALTER INDEX s2.ix2 ON s2.t UNUSABLE")
+    assert served not in e.explain(q)
+    e.sql("ALTER INDEX s2.ix2 ON s2.t REBUILD")
+    assert served in e.explain(q)
+    e.sql("DROP INDEX s2.ix2 ON s2.t")
+    assert "s2.ix2" not in e._indexes
+    assert served not in e.explain(q)
+    assert _rows(e.sql(q)) == [(1, 10)]
+
+
+def test_views_of_one_name_in_two_schemas(engine):
+    """``CREATE VIEW v`` under ``USE s`` makes ``s.v``, over the parent it
+    names in ``s``: two schemas' ``v`` coexist, and each reads its own
+    table's rows whatever schema is USE'd when it is read."""
+    e = engine
+    for s, row in (("s1", "(1, 'a')"), ("s2", "(2, 'b')")):
+        e.sql(f"CREATE SCHEMA {s}")
+        e.sql(f"USE {s}")
+        e.sql("CREATE TABLE t (k INTEGER PRIMARY KEY, v VARCHAR)")
+        e.sql(f"UPSERT INTO t VALUES {row}")
+        e.sql("CREATE VIEW v AS SELECT * FROM t")
+    assert sorted(e._views) == ["s1.v", "s2.v"]
+    assert _rows(e.sql("SELECT k, v FROM v")) == [(2, "b")]
+    assert _rows(e.sql("SELECT k, v FROM s1.v")) == [(1, "a")]
+    e.sql("USE s1")
+    assert _rows(e.sql("SELECT k, v FROM v")) == [(1, "a")]
+    assert _rows(e.sql("SELECT k, v FROM s2.v")) == [(2, "b")]
+    e.sql("DROP VIEW v")
+    assert sorted(e._views) == ["s2.v"]
+
+
 def _tenant_tables(e):
     e.sql(
         "CREATE TABLE mt (tid VARCHAR NOT NULL, k INTEGER NOT NULL, v VARCHAR, "
