@@ -157,7 +157,3 @@ def _nanos_columns(path: str) -> list[str]:
     arrow_schema = pq.read_schema(probe)
     return [f.name for f in arrow_schema if str(f.type).startswith("timestamp[ns")]
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    cat = Catalog(spark, sf_dir)
-    return {name: cat.df(name) for name in cat.tables}

@@ -47,9 +47,9 @@ from phoenix_spark import ddl as D
 from phoenix_spark import indexes as IX
 from phoenix_spark.catalog import Catalog, file_signature
 from phoenix_spark.mutations import (
-    _DEL_COL,
     ManagedTable,
     _pk_pins,
+    counted,
     key_join,
     local_frame,
     pin_keys,
@@ -1775,11 +1775,9 @@ class Engine:
         """Commit ``df`` and return its row count with a SINGLE scan of the
         input: ``observe()`` counts on the write action itself (a separate
         ``df.count()`` would read a 100 TB load twice)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        mt.upsert_df(df.observe(obs, F.count(F.lit(1)).alias("n")))
-        return obs.get["n"]
+        df, count = counted(df)
+        mt.upsert_df(df)
+        return count()
 
     _CREATE_CDC_RE = re.compile(
         r"^\s*CREATE\s+CDC\s+(?:IF\s+NOT\s+(EXISTS)\s+)?([\w.]+)\s+ON\s+"
@@ -2704,7 +2702,6 @@ class Engine:
                     f"SELECT __p.*, {nulls} FROM ({up.select}) __p",
                     up.on_duplicate, up.returning,
                 )
-        from pyspark.sql import Observation
         from pyspark.sql import types as T
 
         from phoenix_spark.types import parse_type
@@ -2821,8 +2818,7 @@ class Engine:
             # single-pass: count on the write action itself (observe), never
             # a separate .count() pre-scan — a 100 TB INSERT-SELECT must read
             # its source exactly once
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            df, count = counted(df)
             # PK invariant: a source that yields DUPLICATE target PKs must
             # collapse to one row per key, last-in-source-order winning —
             # the reference's sequential puts overwrite the same rowkey
@@ -2847,7 +2843,7 @@ class Engine:
                 .drop("__ord", "__rn")
             )
             ts = mt.upsert_df(df, on_duplicate=up.on_duplicate)
-            n = obs.get["n"]
+            n = count()
         else:
             from phoenix_spark.ddl import UpdateOnly
 
@@ -2868,7 +2864,7 @@ class Engine:
             # incoming values.
             if up.on_duplicate is not None:
                 return mt.read(keys=df)
-            return mt.read_commit(ts).drop(_DEL_COL)
+            return mt.read_commit(ts)
         return n
 
     def _exec_delete(self, text: str) -> DataFrame | int:
@@ -2902,11 +2898,10 @@ class Engine:
         # subqueries in the WHERE read through their bindings
         cond = translate_phoenix_sql(self._bind_refs(dl.where)) if dl.where else None
         order = translate_phoenix_sql(dl.order_by) if dl.order_by else None
-        ts = mt._next_ts()  # this statement's commit (RETURNING)
         n = mt.delete_where(cond, order_by=order, limit=dl.limit)
         if dl.returning:
             # the tombstones are the exact victim rows, top-N cut included
-            return mt.read_commit(ts).drop(_DEL_COL)
+            return mt.read_commit(mt.committed)
         return n
 
     def _eval_literal(self, lit: str):

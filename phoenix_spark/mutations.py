@@ -7,17 +7,34 @@ UpsertCompiler.java, DELETE in DeleteCompiler.java.  HBase gives latest-wins
 per (rowkey, timestamp) natively.
 
 The Spark-native analogue is an append-only **change log**: every commit
-writes one immutable parquet segment stamped with a monotonically increasing
-``_mutation_ts``; deletes append tombstones (``_deleted = true``).  A commit's
-segment holds whole rows, so it is the post-image of exactly the keys the
-statement touched.  The table read is the latest-wins compaction::
+writes one immutable parquet segment stamped with its own ``_mutation_ts``;
+deletes append tombstones (``_deleted = true``).  A commit's segment holds
+whole rows, so it is the post-image of exactly the keys the statement
+touched.  The table read is the latest-wins compaction, where a put beats a
+tombstone of the same ts::
 
-    row_number() OVER (PARTITION BY pk ORDER BY _mutation_ts DESC) = 1
+    row_number() OVER (PARTITION BY pk ORDER BY _mutation_ts DESC, _deleted) = 1
     ... AND NOT _deleted
 
+Every writer — point and distributed DML, bulk loads, CDC apply, TTL expiry
+and ``rewrite`` — commits by one protocol (``_commit``), HBase's timestamp
+arbitration plus IndexRegionObserver's phases around the data write:
+  1. claim the table's next ts by the exclusive create of a marker under
+     ``_claims/`` (outside ``segments/``, which streams read); a writer that
+     loses the create tries the next ts, so two writers never share a ts;
+  2. stage the base segment in a ``_stage-*`` directory: rows the driver
+     holds are written by pyarrow, any other frame by a Spark write sorted
+     within each task by the PK (the LSM shape of an HBase flush);
+  3. derive each index's segment (its ts claimed the same way) from the
+     staged base rows and the pre-image — the rows a point statement read,
+     or else a snapshot read at ``ts - 1`` of the staged keys: post-image
+     index rows as puts, every pre-image index row as a tombstone;
+  4. rename every staged segment into ``segments/``, the base first.
+A statement that fails before step 4, or writes no base row, publishes
+nothing.
+
 Scale design (100 TB):
-  * segments are immutable + append-only — a commit never rewrites data, and
-    a single atomic rename publishes it (object-store friendly);
+  * segments are immutable + append-only — a commit never rewrites data;
   * every segment is read with the stored schema (``meta.json`` plus the two
     change-log columns), so building a read launches no job and no footer
     is opened until an action;
@@ -25,32 +42,19 @@ Scale design (100 TB):
     the raw segment union with the touched keys *before* the window (valid
     because the window partitions on exactly the PK), so the window shuffles
     the touched keys' versions, never the table;
-  * the commit maintains the table's indexes, whatever wrote it (DML, bulk
-    loads, CDC apply, TTL expiry): the post-image is the commit's own
-    segment (``read_commit``), the pre-image a snapshot read scoped to its
-    keys, and the index rows follow the index's registry entry;
   * a statement whose rows the driver holds — UPSERT VALUES in every form
     (client-built rows reach Spark as an Arrow-built ``LocalRelation``,
     ``local_frame``) of up to ``_CLIENT_BATCH_ROWS`` rows, and a DELETE
     that pins every PK column to a literal — commits as Phoenix's client
     batch (MutationState): one read of its keys' current rows serves ON
-    DUPLICATE KEY, the partial-column merge and the index pre-image; the
-    post-image and every index's rows are derived over LocalRelations,
-    which Catalyst folds without a job; and each segment is written by
-    pyarrow as one file into a staging directory, all of them before any
-    is renamed into ``segments/``;
+    DUPLICATE KEY, the partial-column merge and the index pre-image, and
+    every row is derived over LocalRelations, which Catalyst folds;
   * that read of a key set's current rows (``_current``) is one pyarrow
     read on the driver — HBase's batch of Gets: the segments' parquet files
     filtered by an Arrow ``is_in`` on the keys (row groups pruned on their
     statistics), latest-wins resolved over the few versions it keeps.  It
     also serves ``read(keys=<Arrow table>)``, the engine's point SELECT.
-    So a point statement runs no Spark job, and one that fails publishes
-    nothing;
-  * every other commit (UPSERT SELECT, bulk loads, CDC apply, TTL expiry,
-    other DELETEs, larger driver-held batches) writes its segment as a
-    Spark job, sorted within each write task by the PK or an index's key —
-    the LSM shape of an HBase flush.  No range partitioning, so no
-    sampling job re-runs the statement's reads;
+    So a point statement runs no Spark job;
   * the global sort is left to whole-table rewrites (``rewrite``: the index
     build, ``REBUILD`` and ``compact()``), which lay the table out as
     disjoint sorted files in one base segment; reads of a single segment
@@ -63,16 +67,21 @@ unless a dropped column is re-added: the re-added column gets a fresh
 physical name (``meta["physical"]``), so the dropped column's bytes never
 resurface — the analogue of Phoenix's column encoding.
 
-Single-writer batch semantics (no concurrent-commit arbitration) — the same
-scope Phoenix documents for its non-transactional tables (SURVEY §7 hard
-parts #3/#4).
+What stays open: the renames of step 4 are not one atomic step, so a crash
+between them can publish a base segment without its index segments.  And
+only the ts is arbitrated between concurrent writers: ON DUPLICATE KEY's
+read-modify-write and the index pre-image are not, so two writers of one
+key can each miss the other's commit — the scope Phoenix documents for its
+non-transactional tables (SURVEY §7 hard parts #3/#4; ROADMAP item 5).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import shutil
 import uuid
 import weakref
 from datetime import timedelta, timezone
@@ -99,6 +108,17 @@ _WIDE = Context(prec=80)
 
 def _seg_ts(path: str) -> int:
     return int(_SEG_RE.search(os.path.basename(path)).group(1))
+
+
+def _data_files(seg: str) -> list[str]:
+    """The parquet files of segment (or staging) directory ``seg``: its
+    ``part-*.parquet`` files; Spark writes its ``_SUCCESS`` and ``.crc``
+    files beside them."""
+    return sorted(
+        os.path.join(seg, p)
+        for p in os.listdir(seg)
+        if p.startswith("part-") and p.endswith(".parquet")
+    )
 
 
 def _half_up(v, dt: T.DataType):
@@ -270,30 +290,6 @@ def _keys(rows, cols: list[str]) -> list[tuple]:
     return [tuple(_key_part(v) for v in key) for key in zip(*cols)]
 
 
-def _publish(segments: list) -> None:
-    """Write each ``(table, ts, rows)`` segment as one parquet file in a
-    staging directory beside the table's ``segments/``, then publish each
-    with one rename.  Nothing is published until every segment is written;
-    a failed write removes what was staged."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    staged = []
-    try:
-        for mt, ts, rows in segments:
-            stage = os.path.join(mt.dir, f"_stage-{uuid.uuid4().hex[:8]}")
-            staged.append((stage, mt._segment_path(ts)))
-            os.makedirs(stage)
-            pq.write_table(rows, os.path.join(stage, "part-00000.parquet"))
-    except BaseException:
-        for stage, _ in staged:
-            shutil.rmtree(stage, ignore_errors=True)
-        raise
-    for stage, seg in staged:
-        os.rename(stage, seg)
-
-
 _PIN_RE = re.compile(
     r"(?P<qual>(?:`?\w+`?\.)*)`?(?P<col>\w+)`?\s*="
     r"\s*(?P<lit>[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
@@ -417,6 +413,17 @@ def wall_clock(df: DataFrame) -> DataFrame:
     ).toDF(*df.columns)
 
 
+def counted(df: DataFrame):
+    """``df`` observed, and a function that gives its row count, counted by
+    the first action that runs it.  AQE drops an observed subtree whose
+    shuffle stage comes up empty, metrics and all: none means no rows."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    rows = lambda: obs.get["n"] if obs._jo.getRow().length() else 0  # noqa: E731
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), rows
+
+
 def key_join(left: DataFrame, right: DataFrame, pk: list[str], how: str) -> DataFrame:
     """Join ``left`` to ``right`` on the PK columns with NULL-safe equality —
     the latest-wins window groups NULL key components together, so key
@@ -440,6 +447,10 @@ class ManagedTable:
         self.dir = os.path.join(warehouse, *name.split("."))
         self.meta_path = os.path.join(self.dir, "meta.json")
         self.seg_dir = os.path.join(self.dir, "segments")
+        # one empty file per claimed commit ts (``_claim``)
+        self.claim_dir = os.path.join(self.dir, "_claims")
+        # the ts of the last commit this handle made (None before one)
+        self.committed: int | None = None
 
     # -- DDL ---------------------------------------------------------------
 
@@ -485,14 +496,11 @@ class ManagedTable:
         return tbl
 
     def drop(self) -> None:
-        import shutil
-
         shutil.rmtree(self.dir, ignore_errors=True)
 
     def truncate(self) -> None:
-        """Drop every row, of this table's indexes too."""
-        import shutil
-
+        """Drop every row, of this table's indexes too.  The claimed ts
+        stay claimed, so a later commit is newer than every truncated one."""
         shutil.rmtree(self.seg_dir, ignore_errors=True)
         os.makedirs(self.seg_dir, exist_ok=True)
         for d in self._indexes():
@@ -563,7 +571,24 @@ class ManagedTable:
         )
 
     def _next_ts(self) -> int:
-        return max((_seg_ts(p) for p in self._segments()), default=0) + 1
+        """One past the newest ts claimed or published."""
+        claimed = os.listdir(self.claim_dir) if os.path.isdir(self.claim_dir) else []
+        return max([*map(int, claimed), *map(_seg_ts, self._segments())], default=0) + 1
+
+    def _claim(self) -> int:
+        """Claim this table's next commit ts: the exclusive create of its
+        marker under ``_claims/``.  Of the writers that try one ts, one
+        create succeeds; the others try the next ts.  A claimed ts is never
+        reused, even by a commit that fails."""
+        os.makedirs(self.claim_dir, exist_ok=True)
+        ts = self._next_ts()
+        while True:
+            marker = os.path.join(self.claim_dir, f"{ts:012d}")
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                return ts
+            except FileExistsError:
+                ts += 1
 
     def _indexes(self) -> list["IX.IndexDef"]:
         """The indexes whose physical base is this table (view indexes too)."""
@@ -671,50 +696,108 @@ class ManagedTable:
         keys = meta.get("props", {}).get("WRITE_SORT") or meta["pk"]
         return [phys.get(c, c) for c in keys]
 
-    def _segment_path(self, ts: int) -> str:
-        return os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
+    def _stage(self, ts: int, rows, staged: list, ranged: bool = False) -> str:
+        """Write stored rows ``rows`` at ``ts`` into a new staging directory
+        beside ``segments/`` and return it; ``staged`` gets the directory
+        and the segment path it is published at before the write starts.
+        An Arrow table is written by pyarrow as one file; a frame by a Spark
+        write, each task a locally sorted run of its own partition (as HBase
+        flushes a memstore), so parquet row-group min/max stats prune key
+        range and point scans.  Only ``ranged`` (a whole-table ``rewrite``)
+        range-partitions first: its sampling jobs would re-run a statement's
+        reads before the write ran them again."""
+        stage = os.path.join(self.dir, f"_stage-{uuid.uuid4().hex[:8]}")
+        seg = os.path.join(self.seg_dir, f"seg-{ts:012d}-{uuid.uuid4().hex[:8]}.parquet")
+        staged.append((stage, seg))
+        if isinstance(rows, DataFrame):
+            cols = self._sort_cols(self.meta)
+            if ranged:
+                rows = rows.repartitionByRange(*cols)
+            rows.sortWithinPartitions(*cols).write.mode("errorifexists").parquet(stage)
+        else:
+            import pyarrow.parquet as pq
 
-    def _append_segment(self, df: DataFrame, ts: int, deleted: bool = False) -> int:
-        # A delta segment is written the way HBase flushes a memstore: each
-        # task writes a locally sorted run of its own partition, so parquet
-        # row-group min/max stats prune key range/point scans.  No range
-        # partitioning: its sampling jobs would re-run the source (a DML
-        # statement's key-scoped pre-image read) before the write runs it
-        # again, and double-fire observe() metrics.  Only a whole-table
-        # ``rewrite`` sorts globally.
+            os.makedirs(stage)
+            pq.write_table(rows, os.path.join(stage, "part-00000.parquet"))
+        return stage
+
+    def _commit(
+        self, df: DataFrame, deleted: bool = False, pre: DataFrame | None = None,
+        client: bool = False, rewrite: bool = False,
+    ) -> tuple[int, int]:
+        """Commit the rows of ``df`` (flagged as ``_to_stored`` flags them)
+        by the module's one protocol: claim a ts, stage the base segment,
+        stage each index's segment, publish them all.  ``client`` rows are
+        driver-held: they are collected and written by pyarrow, as are
+        their index rows, and ``pre`` is their pre-image — the current rows
+        of the keys they write (None for none); any other commit's
+        pre-image is the snapshot read at ``ts - 1`` of the staged keys.  A
+        ``rewrite`` (the table's whole contents) is sorted globally and
+        leaves the indexes alone.  Returns the commit ts and the count of
+        base rows written (too high for a rewrite: range sampling counts
+        rows again); a commit of no rows publishes nothing."""
         meta = self.meta
-        out = self._to_stored(df, ts, deleted, meta)
-        out = out.sortWithinPartitions(*self._sort_cols(meta))
-        out.write.mode("errorifexists").parquet(self._segment_path(ts))
-        self._maintain_indexes(ts)
-        return ts
+        ts = self.committed = self._claim()
+        stored = self._to_stored(df, ts, deleted, meta)
+        staged: list = []
+        publish = False
+        try:
+            if client:
+                rows = collect_arrow(stored)
+                self._stage(ts, rows, staged)
+                n = rows.num_rows
+            else:
+                stored, count = counted(stored)
+                self._stage(ts, stored, staged, rewrite)
+                n = count()
+            defs = [] if rewrite or not n else self._indexes()
+            defs = [d for d in defs if d.state != "DISABLED"]
+            if defs and client:
+                # driver-held rows are all puts or all tombstones
+                post = None if deleted else self.logical(stored, meta).drop(_TS_COL, _DEL_COL)
+                self._stage_indexes(defs, meta["pk"], post, pre, client, staged)
+            elif defs:
+                # a staging directory's name hides it from a Spark read of
+                # the directory itself, not of its files
+                base = self._scan(_data_files(staged[0][0]), meta)
+                post = None if deleted else base.filter(~F.col(_DEL_COL)).drop(_TS_COL, _DEL_COL)
+                pre = self.read(as_of=ts - 1, keys=base)
+                self._stage_indexes(defs, meta["pk"], post, pre, client, staged)
+            publish = n != 0
+        finally:
+            for stage, seg in staged:
+                if publish:
+                    os.rename(stage, seg)
+                else:
+                    shutil.rmtree(stage, ignore_errors=True)
+        return ts, n
 
-    def _maintain_indexes(self, ts: int) -> None:
-        """Maintain every index that is not DISABLED for the commit at
-        ``ts`` (IndexRegionObserver).  The commit's segment holds whole rows
-        for exactly the touched keys, so it is the post-image (tombstones
-        for deleted rows); the pre-image is a snapshot read at ``ts - 1``
-        scoped to those keys.  Each index gets one segment: the post-image's
-        index rows, plus tombstones for pre-image index rows not re-put (key
-        or predicate outcome changed).  A re-put key gets no tombstone: both
-        would carry the same ts and tie."""
-        defs = [d for d in self._indexes() if d.state != "DISABLED"]
-        if not defs:
-            return
-        commit = self.read_commit(ts)
-        post = commit.filter(~F.col(_DEL_COL)).drop(_DEL_COL)
-        pre = self.read(as_of=ts - 1, keys=commit)
-        pk = self.pk
+    def _stage_indexes(
+        self, defs: list, pk: list[str], post: DataFrame | None, pre: DataFrame | None,
+        client: bool, staged: list,
+    ) -> None:
+        """Stage the segment of each index in ``defs`` for a commit
+        (IndexRegionObserver): the index rows of the post-image ``post`` as
+        puts, and every index row of the pre-image ``pre`` as a tombstone —
+        one the commit re-puts ties with its put, and the put wins.  A
+        client commit's index rows are collected, and an index with none
+        gets no segment."""
+        import pyarrow as pa
+
         for d in defs:
             imt = ManagedTable(self.spark, self.warehouse, d.name)
-            puts = IX.index_rows(post, d, pk)
-            gone = key_join(IX.index_rows(pre, d, pk), puts, imt.pk, "left_anti")
-            imt._append_segment(
-                puts.withColumn(_DEL_COL, F.lit(False)).unionByName(
-                    gone.withColumn(_DEL_COL, F.lit(True))
-                ),
-                imt._next_ts(),
-            )
+            imeta, ts = imt.meta, imt._claim()
+            parts = [
+                imt._to_stored(IX.index_rows(img, d, pk), ts, dead, imeta)
+                for img, dead in ((post, False), (pre, True))
+                if img is not None
+            ]
+            if client:
+                rows = pa.concat_tables([collect_arrow(p) for p in parts])
+                if rows.num_rows:
+                    imt._stage(ts, rows, staged)
+            else:
+                imt._stage(ts, functools.reduce(DataFrame.unionByName, parts), staged)
 
     def upsert_df(self, df: DataFrame, on_duplicate: str | dict | None = None) -> int:
         """UPSERT SELECT / VALUES: insert-or-overwrite by PK.
@@ -763,31 +846,25 @@ class ManagedTable:
         fully-ignored upsert; the reference's IndexRegionObserver returns no
         mutation for an UPDATE_ONLY on an absent PK).
         """
-        from pyspark.sql import Observation
-
         from phoenix_spark.ddl import UpdateOnly
 
-        schema = self.schema
         counts = on_duplicate == "ignore" or isinstance(on_duplicate, UpdateOnly)
+        names = self.schema.fieldNames()
         if _DEL_COL not in df.columns and _driver_held(df):
             ts, n = self._upsert_point(df, on_duplicate)
-            return n if counts else ts
-        ts = self._next_ts()
-        names = schema.fieldNames()
-        if on_duplicate is None and set(names) <= set(df.columns):
-            return self._append_segment(df, ts)
-        given = [c for c in names if c in df.columns]
-        incoming = df.select(*[F.col(c).alias(f"__in_{c}") for c in given])
-        current = self.read(keys=df).withColumn("__hit", F.lit(True))
-        joined = incoming.join(
-            current,
-            on=[F.col(f"__in_{c}").eqNullSafe(F.col(c)) for c in self.pk],
-            how="left",
-        )
-        out = self._merge(joined, given, on_duplicate)[1]
-        obs = Observation()
-        self._append_segment(out.observe(obs, F.count(F.lit(1)).alias("n")), ts)
-        return int(obs.get["n"]) if counts else ts
+        elif on_duplicate is None and set(names) <= set(df.columns):
+            ts, n = self._commit(df)
+        else:
+            given = [c for c in names if c in df.columns]
+            incoming = df.select(*[F.col(c).alias(f"__in_{c}") for c in given])
+            current = self.read(keys=df).withColumn("__hit", F.lit(True))
+            joined = incoming.join(
+                current,
+                on=[F.col(f"__in_{c}").eqNullSafe(F.col(c)) for c in self.pk],
+                how="left",
+            )
+            ts, n = self._commit(self._merge(joined, given, on_duplicate)[1])
+        return n if counts else ts
 
     def _merge(
         self, joined: DataFrame, given: list[str], on_duplicate
@@ -833,18 +910,13 @@ class ManagedTable:
 
     def _part_files(self, as_of: int | None = None) -> list[str]:
         """The parquet files of the segments committed at or before
-        ``as_of`` (all of them for None).  A segment is a directory whose
-        data files are ``part-*.parquet``; Spark writes its ``_SUCCESS`` and
-        ``.crc`` files beside them."""
-        files = []
-        for seg in self._segments():
-            if as_of is None or _seg_ts(seg) <= as_of:
-                files += sorted(
-                    os.path.join(seg, p)
-                    for p in os.listdir(seg)
-                    if p.startswith("part-") and p.endswith(".parquet")
-                )
-        return files
+        ``as_of`` (all of them for None)."""
+        return [
+            f
+            for seg in self._segments()
+            if as_of is None or _seg_ts(seg) <= as_of
+            for f in _data_files(seg)
+        ]
 
     def _current(self, keys: pa.Table, meta: dict, as_of: int | None = None) -> pa.Table | None:
         """The current rows (at ``as_of``) of the keys in Arrow table
@@ -899,12 +971,13 @@ class ManagedTable:
             names = [*schema.names, _TS_COL, _DEL_COL]
             raw = raw.select([phys.get(c, c) for c in names]).rename_columns(names)
         want = set(_keys(keys, pk))
+        # the newest version of each key, a put before a tombstone of its ts
         latest: dict = {}
-        for i, (k, ts) in enumerate(zip(_keys(raw, pk), raw.column(_TS_COL).to_pylist())):
-            if k in want and (k not in latest or ts > latest[k][1]):
-                latest[k] = (i, ts)
-        dead = raw.column(_DEL_COL).to_pylist()
-        live = sorted(i for i, _ in latest.values() if not dead[i])
+        versions = zip(raw.column(_TS_COL).to_pylist(), raw.column(_DEL_COL).to_pylist())
+        for i, (k, (ts, dead)) in enumerate(zip(_keys(raw, pk), versions)):
+            if k in want and (k not in latest or (ts, not dead) > latest[k][1]):
+                latest[k] = (i, (ts, not dead))
+        live = sorted(i for i, (_, put) in latest.values() if put)
         rows = raw.take(pa.array(live, pa.int64())).drop_columns([_TS_COL, _DEL_COL])
         return rows.cast(arrow).combine_chunks()
 
@@ -913,9 +986,8 @@ class ManagedTable:
         a client batch: one read of the touched keys' current rows (for ON
         DUPLICATE KEY, the partial-column merge and the index pre-image),
         then the post-image and every index's rows derived over
-        LocalRelations, which run no job, and all segments published
-        together (``_publish``).  Returns the commit ts and the count of
-        rows written."""
+        LocalRelations, which run no job.  Returns the commit ts and the
+        count of rows written."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -924,7 +996,6 @@ class ManagedTable:
         fields = schema.fields
         given = [f for f in df.schema.fields if f.name in {g.name for g in fields}]
         defs = [d for d in self._indexes() if d.state != "DISABLED"]
-        ts = self._next_ts()
         inc = collect_arrow(df)
         keys = _keys(inc, meta["pk"])
         # a plain upsert of whole rows into an unindexed table reads nothing
@@ -948,72 +1019,23 @@ class ManagedTable:
             ),
         )
         kept, out = self._merge(frame, [f.name for f in given], on_duplicate)
-        stored = self._to_stored(out, ts, False, meta)
-        rows = collect_arrow(stored)
-        if not rows.num_rows:
-            return ts, 0
-        segments = [(self, ts, rows)]
-        if defs:
-            post = self.logical(stored, meta).drop(_TS_COL, _DEL_COL)
-            hits = on_duplicate != "ignore" and take.null_count < len(keys)
+        pre = None
+        if on_duplicate != "ignore" and take.null_count < len(keys):
             pre = kept.filter(F.col("__hit").isNotNull()).select(*[f.name for f in fields])
-            segments += self._index_segments(defs, post, pre if hits else None)
-        _publish(segments)
-        return ts, rows.num_rows
+        return self._commit(out, pre=pre, client=True)
 
     def _delete_point(self, condition: str, keys: pa.Table, limit: int | None) -> int:
         """DELETE of the keys in Arrow table ``keys`` (those its PK pins
         fix, ``pin_keys``) as a client batch: one read of their current
         rows (``_current``), then ``condition``, the tombstones and the index
-        tombstones evaluated over a LocalRelation, and every segment
-        published together."""
-        meta = self.meta
-        ts = self._next_ts()
-        cur = self._current(keys, meta)
+        tombstones evaluated over a LocalRelation."""
+        cur = self._current(keys, self.meta)
         if not cur.num_rows:
             return 0
         victims = self.spark.createDataFrame(cur, self.schema).filter(condition)
         if limit is not None:
             victims = victims.limit(limit)
-        rows = collect_arrow(self._to_stored(victims, ts, True, meta))
-        if not rows.num_rows:
-            return 0
-        segments = [(self, ts, rows)]
-        defs = [d for d in self._indexes() if d.state != "DISABLED"]
-        if defs:
-            segments += self._index_segments(defs, None, victims)
-        _publish(segments)
-        return rows.num_rows
-
-    def _index_segments(
-        self, defs: list, post: DataFrame | None, pre: DataFrame | None
-    ) -> list:
-        """The segment of each index in ``defs`` for a point commit, as
-        ``_publish`` takes them: the index rows of the post-image ``post``,
-        plus tombstones for the index rows of the pre-image ``pre`` that it
-        does not re-put (see ``_maintain_indexes``).  Empty ones are left
-        out."""
-        import pyarrow as pa
-
-        pk, out = self.pk, []
-        for d in defs:
-            imt = ManagedTable(self.spark, self.warehouse, d.name)
-            imeta, ts = imt.meta, imt._next_ts()
-            ikey = [imeta.get("physical", {}).get(c, c) for c in imeta["pk"]]
-            parts = []
-            for frame, deleted in ((post, False), (pre, True)):
-                if frame is not None:
-                    rows = IX.index_rows(frame, d, pk)
-                    parts.append(collect_arrow(imt._to_stored(rows, ts, deleted, imeta)))
-            if post is not None and pre is not None:
-                put = set(_keys(parts[0], ikey))
-                parts[1] = parts[1].filter(
-                    pa.array([k not in put for k in _keys(parts[1], ikey)], pa.bool_())
-                )
-            seg = pa.concat_tables(parts)
-            if seg.num_rows:
-                out.append((imt, ts, seg))
-        return out
+        return self._commit(victims, deleted=True, pre=victims, client=True)[1]
 
     def upsert_rows(self, rows: list[dict], on_duplicate: str | dict | None = None) -> int:
         """UPSERT VALUES: literal rows (partial columns allowed → NULL fill).
@@ -1044,14 +1066,12 @@ class ManagedTable:
         written.  The ordered LIMIT form is DeleteCompiler's top-N delete
         (TopNIT.testTopNDelete): sort, cut, tombstone.  The tombstones are
         whole rows, so the commit's segment (``read_commit``) is the exact
-        victim set for RETURNING and index maintenance.  A predicate on PK
+        victim set for RETURNING.  A predicate on PK
         columns only is pushed below the latest-wins window by Catalyst.  A
         condition that pins every PK column to a literal that converts
         exactly to its type is a point lookup, committed as a client batch
         (``_delete_point``).
         """
-        from pyspark.sql import Observation
-
         pins = (
             _pk_pins(condition, self.pk)
             if order_by is None and isinstance(condition, str)
@@ -1060,7 +1080,6 @@ class ManagedTable:
         keys = pin_keys(self.spark, pins, self.schema) if pins else None
         if keys is not None:
             return self._delete_point(condition, keys, limit)
-        ts = self._next_ts()
         cur = self.read()
         victims = cur.filter(condition) if condition is not None else cur
         if order_by:
@@ -1088,13 +1107,7 @@ class ManagedTable:
             victims = victims.orderBy(*sort_cols)
         if limit is not None:
             victims = victims.limit(limit)
-        obs = Observation()
-        self._append_segment(
-            victims.observe(obs, F.count(F.lit(1)).alias("n")),
-            ts,
-            deleted=True,
-        )
-        return int(obs.get["n"])
+        return self._commit(victims, deleted=True)[1]
 
     def rewrite(self, df: DataFrame) -> None:
         """Replace the table's contents with the rows of ``df`` (one row per
@@ -1104,19 +1117,10 @@ class ManagedTable:
         compaction: one range shuffle lays the table out as disjoint sorted
         files (the sampling pass is amortized over the full rewrite), so the
         single-segment fast path serves key scans with maximal row-group
-        pruning.  The write lands in a temp dir and is published by a single
-        atomic rename before the superseded segments are removed."""
-        import shutil
-
-        meta = self.meta
-        ts = self._next_ts()
-        cols = self._sort_cols(meta)
-        out = self._to_stored(df, ts, False, meta)
-        out = out.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        tmp = os.path.join(self.dir, f"_rewrite-{uuid.uuid4().hex[:8]}.parquet")
-        out.write.mode("errorifexists").parquet(tmp)
+        pruning.  It commits as every write does (``_commit``), and the
+        segments it supersedes are removed once it is published."""
         old = self._segments()
-        shutil.move(tmp, self._segment_path(ts))
+        self._commit(df, rewrite=True)
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
 
@@ -1160,9 +1164,9 @@ class ManagedTable:
             df = df.withColumn("phoenix_row_timestamp", F.col(_TS_COL))
         if len(segs) <= 1:
             # Fast path: a single segment holds no superseded versions; only
-            # tombstones (rare in a fresh segment) need filtering.
+            # tombstones need filtering (a put beats a tombstone of its ts).
             return df.filter(~F.col(_DEL_COL)).select(*data_cols)
-        w = Window.partitionBy(*meta["pk"]).orderBy(F.col(_TS_COL).desc())
+        w = Window.partitionBy(*meta["pk"]).orderBy(F.col(_TS_COL).desc(), _DEL_COL)
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & ~F.col(_DEL_COL))
@@ -1170,12 +1174,11 @@ class ManagedTable:
         )
 
     def read_commit(self, ts: int) -> DataFrame:
-        """The rows committed at ``ts``: the data columns plus ``_deleted``.
-        One statement commits one segment of whole rows, so this is the
-        statement's post-image, with a tombstone per deleted row."""
-        meta = self.meta
+        """The rows committed at ``ts``, a deleted row with the values it
+        had (none for a ts with no segment, or None): RETURNING's rows.  One
+        statement commits one segment of whole rows, for its touched keys."""
         segs = [p for p in self._segments() if _seg_ts(p) == ts]
-        return self._scan(segs, meta).drop(_TS_COL)
+        return self._scan(segs, self.meta).drop(_TS_COL, _DEL_COL)
 
     # -- CDC surface (SURVEY §2.11) ---------------------------------------
 

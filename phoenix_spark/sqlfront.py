@@ -213,19 +213,6 @@ def translate_datetime_pattern(fmt: str, parse: bool = False) -> str:
     return "".join(out)
 
 
-_NUM_FMT_CHARS = set("0#.,$¤")
-
-
-def _looks_like_number_format(fmt: str) -> bool:
-    """DecimalFormat patterns are digits-and-punctuation; any other letter
-    means a datetime pattern (TO_CHAR dispatches on this — the reference
-    dispatches on the ARGUMENT type, which the textual front-end can't see,
-    but the two pattern languages are disjoint on every real format)."""
-    return bool(fmt) and any(c in "0#" for c in fmt) and all(
-        c in _NUM_FMT_CHARS for c in fmt
-    )
-
-
 def _parse_decimal_format(fmt: str) -> tuple[str, bool, int, str]:
     """java.text.DecimalFormat pattern -> (currency, grouping, min_int, frac).
 
@@ -1525,7 +1512,9 @@ def _rewrite_distinct_orderby(masked: str) -> str:
 #   R longer:  mirrored (tie means R is greater).
 # Equality with unequal arity stays untouched (never true in the dialect;
 # Spark rejects it loudly rather than silently mis-matching).  Equal-arity
-# RVCs pass through to Spark's native struct compare.
+# RVCs (compared, or IN a list of RVCs) become structs with positional field
+# names, which Spark coerces element by element (bare, (a, b) and (1, 2)
+# are struct<a, b> and struct<col1, col2>: equal types only, no coercion).
 _RVC_SIMPLE_TOKEN = re.compile(r"(?:\x00\d+\x00|[A-Za-z_][\w.]*|\d+(?:\.\d+)?)$")
 
 
@@ -1593,11 +1582,27 @@ def _rewrite_rvc_arity(masked: str) -> str:
             return (j, end, [s[j:end]])
         return None
 
+    def _struct(items):
+        return "struct(" + ", ".join(f"{x} AS _{i}" for i, x in enumerate(items, 1)) + ")"
+
+    # (a, b) [NOT] IN ((1, 2), (3, 4))
+    pos = 0
+    while m := re.compile(r"\b(?:NOT\s+)?IN\s*(?=\()", re.I).search(masked, pos):
+        left, right = _left_operand(masked, m.start()), _right_operand(masked, m.end())
+        n = len(left[2]) if left and right else 0
+        rows = [(x, _right_operand(x, 0)) for x in right[2]] if n > 1 else []
+        if rows and all(r and r[1] == len(x) and len(r[2]) == n for x, r in rows):
+            new = f"{_struct(left[2])} {m.group(0)}({', '.join(_struct(r[2]) for _, r in rows)})"
+            masked = masked[: left[0]] + new + masked[right[1] :]
+            pos = left[0] + len(new)
+        else:
+            pos = m.end()
+
     ops = {">": (">=", ">"), ">=": (">=", ">"), "<": ("<", "<="), "<=": ("<", "<=")}
     # op -> (operator when LEFT is longer, operator when RIGHT is longer)
     pos = 0
     while True:
-        m = re.search(r"<=|>=|<(?![=>])|>(?!=)", masked[pos:])
+        m = re.search(r"<=>|<=|>=|<>|!=|<|>|=", masked[pos:])
         if not m:
             return masked
         op = m.group(0)
@@ -1605,7 +1610,12 @@ def _rewrite_rvc_arity(masked: str) -> str:
         end = pos + m.end()
         left = _left_operand(masked, at)
         right = _right_operand(masked, end)
-        if not left or not right or len(left[2]) == len(right[2]):
+        if left and right and len(left[2]) == len(right[2]) > 1:
+            new = f"{_struct(left[2])} {op} {_struct(right[2])}"
+            masked = masked[: left[0]] + new + masked[right[1] :]
+            pos = left[0] + len(new)
+            continue
+        if not left or not right or len(left[2]) == len(right[2]) or op not in ops:
             pos = end
             continue
         n = min(len(left[2]), len(right[2]))

@@ -82,7 +82,3 @@ def parse_type(text: str) -> T.DataType:
         dt = T.ArrayType(dt)
     return dt
 
-
-def type_name(dt: T.DataType) -> str:
-    """Spark DataType → catalog-JSON type string (simpleString round-trips)."""
-    return dt.simpleString()

@@ -1,20 +1,24 @@
 """Index consistency under random write scripts (IndexRegionObserver pin).
 
 A random script runs against a table carrying a covered index, a partial
-(``WHERE``) index, a functional index and an index on a view over it.  One
-property draws Engine.sql DML: UPSERT VALUES, partial-column UPSERT, ON
-DUPLICATE KEY IGNORE / UPDATE / UPDATE_ONLY and DELETE (by PK and by PK
-range).  The other draws the writers outside Engine.sql: CSV and JSON bulk
-loads and availableNow CDC-apply micro-batches (``streaming.apply_changes``)
-from a source table, between UPSERTs and range DELETEs.  Every one of these
-writers commits through the change log, and the commit maintains the
-indexes.  After every statement:
+(``WHERE``) index, two functional indexes and an index on a view over it.
+One property draws Engine.sql DML: UPSERT VALUES, partial-column UPSERT, ON
+DUPLICATE KEY IGNORE / UPDATE / UPDATE_ONLY, DELETE (by PK and by PK
+range), and a statement that raises — a row whose functional index key
+overflows its CAST, by UPSERT VALUES or by UPSERT SELECT.  The other draws
+the writers outside Engine.sql: CSV and JSON bulk loads and availableNow
+CDC-apply micro-batches (``streaming.apply_changes``) from a source table,
+between UPSERTs and range DELETEs.  Every one of these writers commits
+through the change log, and the commit maintains the indexes.  After every
+statement:
 
   * the base table equals a Python dict model of the script;
   * each index's live rows equal the model projected the way the index
     declares (key, base PK, INCLUDE columns; partial predicate; expression);
   * a snapshot read ``as_of`` the previous commit still shows the previous
-    state — a statement never rewrites history.
+    state — a statement never rewrites history;
+  * no staged segment is left behind, and a statement that raises changes
+    nothing.
 
 Values include NULLs in index key columns, which the latest-wins window and
 the maintenance key matching must group like any other value.
@@ -59,6 +63,7 @@ STATEMENTS = st.lists(
         st.tuples(st.just("update_only"), BATCH, st.sampled_from(sorted(ASSIGNS))),
         st.tuples(st.just("delete_pk"), KEYS),
         DELETE_RANGE,
+        st.tuples(st.just("raises"), BATCH, st.booleans()),
     ),
     min_size=1,
     max_size=5,
@@ -175,6 +180,22 @@ def _run(e, model: dict, stmt) -> None:
                 model[k] = ASSIGNS[stmt[2]](*model[k])
             elif op == "update":
                 model[k] = v
+    elif op == "raises":
+        # b = 1000 overflows ic_cast's CAST(b AS TINYINT), by VALUES (always)
+        # or by SELECT (when any row holds a b); either way nothing changes
+        if stmt[2]:
+            sql = "UPSERT INTO ic SELECT k, a, b + 1000, c FROM ic"
+            raises = any(b is not None for _a, b, _c in model.values())
+        else:
+            k, a, _b, c = stmt[1][-1]
+            sql = f"UPSERT INTO ic VALUES {_values([*stmt[1][:-1], (k, a, 1000, c)])}"
+            raises = True
+        try:
+            e.sql(sql)
+        except Exception as exc:  # noqa: BLE001 - checked below
+            assert raises and "CAST_OVERFLOW" in str(exc), exc
+        else:
+            assert not raises, sql
     elif op == "delete_pk":
         e.sql(f"DELETE FROM ic WHERE k = {stmt[1]}")
         model.pop(stmt[1], None)
@@ -196,6 +217,8 @@ def _expected_indexes(model: dict) -> dict:
             (None if c is None else c.upper(), k, b)
             for k, (a, b, c) in model.items()
         },
+        # CREATE INDEX ic_cast ON ic (CAST(b AS TINYINT))
+        "ic_cast": {(b, k) for k, (a, b, c) in model.items()},
         # CREATE VIEW icv AS SELECT * FROM ic WHERE b > 0;
         # CREATE INDEX icv_ix ON icv (c) INCLUDE (a)
         "icv_ix": {
@@ -221,6 +244,7 @@ def _check(spark, tmp, script) -> None:
     e.sql("CREATE INDEX ic_cov ON ic (a) INCLUDE (b)")
     e.sql("CREATE INDEX ic_part ON ic (b) INCLUDE (c) WHERE a = 'x'")
     e.sql("CREATE INDEX ic_fn ON ic (UPPER(c)) INCLUDE (b)")
+    e.sql("CREATE INDEX ic_cast ON ic (CAST(b AS TINYINT))")
     e.sql("CREATE VIEW icv AS SELECT * FROM ic WHERE b > 0")
     e.sql("CREATE INDEX icv_ix ON icv (c) INCLUDE (a)")
     base = e.managed("ic")
@@ -235,6 +259,8 @@ def _check(spark, tmp, script) -> None:
             assert _rows(e.managed(name).read()) == rows, (name, stmt)
         snapshot = _rows(base.read(as_of=prev_ts))
         assert snapshot == {(k, *v) for k, v in before.items()}, stmt
+        for name in ("ic", *_expected_indexes(model)):
+            assert not [p for p in os.listdir(e.managed(name).dir) if p.startswith("_stage")]
 
 
 _SETTINGS = dict(

@@ -46,6 +46,8 @@ def test_values_commits_scan_no_python_rdd(engine, spark, monkeypatch):
     """A VALUES commit evaluates no Python-pickled RDD and runs no write
     job: the only job an ON DUPLICATE KEY statement starts is the read of
     its keys' current rows, and a plain one into a new table starts none."""
+    from pyspark.sql import DataFrame
+
     from phoenix_spark import mutations
     from phoenix_spark.mutations import ManagedTable
 
@@ -56,11 +58,15 @@ def test_values_commits_scan_no_python_rdd(engine, spark, monkeypatch):
         evaluated.append(_optimized(df))
         return collect(df)
 
-    def distributed(*_args, **_kw):
-        raise AssertionError("a VALUES commit wrote through a Spark job")
+    stage = ManagedTable._stage
+
+    def driver_only(self, ts, rows, *args, **kw):
+        if isinstance(rows, DataFrame):
+            raise AssertionError("a VALUES commit wrote through a Spark job")
+        return stage(self, ts, rows, *args, **kw)
 
     monkeypatch.setattr(mutations, "collect_arrow", capture)
-    monkeypatch.setattr(ManagedTable, "_append_segment", distributed)
+    monkeypatch.setattr(ManagedTable, "_stage", driver_only)
     engine.sql("CREATE TABLE lc (k INTEGER PRIMARY KEY, v VARCHAR, n BIGINT)")
     assert _jobs(spark, lambda: engine.sql("UPSERT INTO lc VALUES (1, 'a', 10), (2, 'b', 20)")) == 0
     # the table has one segment, so a Spark read of its keys is one scan

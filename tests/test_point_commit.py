@@ -8,8 +8,9 @@ each segment from the driver, as Phoenix's MutationState sends a client
 batch.  Every other statement commits through a distributed write.  The two
 paths must leave the same rows in the table and in every index, whatever
 the column types and the session time zone.  A point statement runs no
-Spark job, publishes nothing when it fails, and never shows a stream a
-segment before it is whole.
+Spark job and never shows a stream a segment before it is whole.  A
+statement that fails publishes nothing, on either path, and writers that
+commit at once never share a commit ts.
 """
 
 from __future__ import annotations
@@ -50,13 +51,19 @@ def _replay(spark, wh: str, script: list[str], names: list[str]):
     return outcomes, {n: _rows(e.managed(n).read()) for n in names}
 
 
+def _distributed(m) -> None:
+    """Force every statement onto the distributed write (``m`` patches)."""
+    from phoenix_spark import mutations
+
+    m.setattr(mutations, "_driver_held", lambda df: False)
+    m.setattr(mutations, "_pk_pins", lambda cond, pk: None)
+
+
 def _both_ways(spark, tmp_path, monkeypatch, script, names, zone="UTC"):
     """``_replay`` in session time zone ``zone`` as committed, and with
     every statement forced onto the distributed write; asserts both leave
     the same outcomes and rows.  The scripts' rows fit in one shuffle
     partition, which keeps the distributed replay short."""
-    from phoenix_spark import mutations
-
     confs = {"spark.sql.session.timeZone": zone, "spark.sql.shuffle.partitions": "1"}
     saved = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
@@ -64,8 +71,7 @@ def _both_ways(spark, tmp_path, monkeypatch, script, names, zone="UTC"):
     try:
         point = _replay(spark, str(tmp_path / "point"), script, names)
         with monkeypatch.context() as m:
-            m.setattr(mutations, "_driver_held", lambda df: False)
-            m.setattr(mutations, "_pk_pins", lambda cond, pk: None)
+            _distributed(m)
             distributed = _replay(spark, str(tmp_path / "distributed"), script, names)
     finally:
         for k, v in saved.items():
@@ -188,20 +194,23 @@ def test_array_key_reads_only_its_keys(spark, tmp_path, monkeypatch):
 def test_large_batch_commits_through_a_spark_write(spark, tmp_path, monkeypatch):
     """A driver-held batch of more than ``_CLIENT_BATCH_ROWS`` rows commits
     through the distributed write; one of at most that many does not."""
+    from pyspark.sql import DataFrame
+
     from phoenix_spark import mutations
     from phoenix_spark.engine import Engine
 
     e = Engine(spark, warehouse=str(tmp_path / "wh"))
     e.sql("CREATE TABLE lb (k INTEGER PRIMARY KEY, v VARCHAR)")
     writes = []
-    append = mutations.ManagedTable._append_segment
+    stage = mutations.ManagedTable._stage
 
-    def spy(self, df, ts, deleted=False):
-        writes.append(ts)
-        return append(self, df, ts, deleted)
+    def spy(self, ts, rows, *args, **kw):
+        if isinstance(rows, DataFrame):
+            writes.append(ts)
+        return stage(self, ts, rows, *args, **kw)
 
     monkeypatch.setattr(mutations, "_CLIENT_BATCH_ROWS", 2)
-    monkeypatch.setattr(mutations.ManagedTable, "_append_segment", spy)
+    monkeypatch.setattr(mutations.ManagedTable, "_stage", spy)
     e.sql("UPSERT INTO lb VALUES (1, 'a'), (2, 'b')")
     assert writes == []
     e.sql("UPSERT INTO lb VALUES (1, 'x'), (3, 'c'), (4, 'd')")
@@ -245,21 +254,132 @@ def test_point_statement_runs_only_its_read(spark, tmp_path):
     ]
 
 
-def test_failed_statement_publishes_nothing(spark, tmp_path):
-    """An index row that cannot be derived fails the statement before any
-    segment is published: neither the base nor the index holds the row."""
+def _indexed_by_cast(spark, wh: str):
+    """An engine on a new warehouse with table ``t`` (one row) and a
+    functional index ``ix`` whose key CASTs ``v`` to an INTEGER."""
     from phoenix_spark.engine import Engine
 
-    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    e = Engine(spark, warehouse=wh)
     e.sql("CREATE TABLE t (k INTEGER PRIMARY KEY, v VARCHAR, w INTEGER)")
     e.sql("CREATE INDEX ix ON t (CAST(v AS INTEGER)) INCLUDE (w)")
     e.sql("UPSERT INTO t VALUES (1, '5', 10)")
-    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
-        e.sql("UPSERT INTO t VALUES (2, 'abc', 20)")
+    return e
+
+
+def _published_nothing(e) -> None:
+    """``t`` and ``ix`` hold only their first row, however they are read,
+    and no staged segment is left behind."""
     assert _rows(e.managed("t").read()) == ["(1, '5', 10)"]
     assert _rows(e.managed("ix").read()) == ["(5, 1, 10)"]
     assert _rows(e.sql("SELECT /*+ NO_INDEX */ k, w FROM t")) == ["(1, 10)"]
-    assert not [p for p in os.listdir(e.managed("t").dir) if p.startswith("_stage")]
+    for name in ("t", "ix"):
+        assert not [p for p in os.listdir(e.managed(name).dir) if p.startswith("_stage")]
+
+
+def test_failed_statement_publishes_nothing(spark, tmp_path, monkeypatch):
+    """An index row that cannot be derived fails the statement before any
+    segment is published, on the point path and on the distributed one:
+    neither the base nor the index holds the row."""
+    for path in ("point", "distributed"):
+        with monkeypatch.context() as m:
+            if path == "distributed":
+                _distributed(m)
+            e = _indexed_by_cast(spark, str(tmp_path / path))
+            with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+                e.sql("UPSERT INTO t VALUES (2, 'abc', 20)")
+        _published_nothing(e)
+
+
+def test_failed_upsert_select_publishes_nothing(spark, tmp_path):
+    e = _indexed_by_cast(spark, str(tmp_path / "wh"))
+    e.sql("CREATE TABLE s (k INTEGER PRIMARY KEY, v VARCHAR)")
+    e.sql("UPSERT INTO s VALUES (2, 'abc')")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        e.sql("UPSERT INTO t SELECT k, v, 20 FROM s")
+    _published_nothing(e)
+
+
+def test_commit_of_no_rows_publishes_nothing(spark, tmp_path):
+    """A distributed commit whose rows come up empty at run time (AQE then
+    drops the plan above its empty shuffle stage, with the row counts
+    observed below it) counts 0 rows and publishes nothing: an UPSERT
+    SELECT from a table never written, and the compaction of a table whose
+    rows are all deleted."""
+    from phoenix_spark.engine import Engine
+
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    e.sql("CREATE TABLE t (k INTEGER PRIMARY KEY, v INTEGER)")
+    e.sql("CREATE INDEX t_v ON t (v)")
+    e.sql("CREATE TABLE s (k INTEGER PRIMARY KEY, v INTEGER)")
+    e.sql("UPSERT INTO t VALUES (1, 1)")
+    assert e.sql("UPSERT INTO t SELECT k, v FROM s") == 0
+    e.sql("DELETE FROM t WHERE k = 1")
+    mt = e.managed("t")
+    mt.compact()
+    assert mt._segments() == [] and _rows(mt.read()) == []
+
+
+def test_concurrent_writers_never_share_a_timestamp(spark, tmp_path):
+    """Two engines on one warehouse, each committing point UPSERTs from its
+    own thread while a third thread commits an UPSERT SELECT, give every
+    segment of the table and of its index its own commit ts, and each key
+    reads the value of its last commit."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from phoenix_spark.engine import Engine
+    from phoenix_spark.mutations import _seg_ts
+
+    wh = str(tmp_path / "wh")
+    e = Engine(spark, warehouse=wh)
+    e.sql("CREATE TABLE cw (k INTEGER PRIMARY KEY, v INTEGER)")
+    e.sql("CREATE INDEX cw_v ON cw (v)")
+    e.sql("CREATE TABLE src (k INTEGER PRIMARY KEY, v INTEGER)")
+    e.sql("UPSERT INTO src VALUES (100, 1), (101, 2)")
+
+    def points(base: int) -> None:
+        own = Engine(spark, warehouse=wh)
+        for i in range(6):
+            own.sql(f"UPSERT INTO cw VALUES ({base + i % 3}, {base + i})")
+
+    def select() -> None:
+        Engine(spark, warehouse=wh).sql("UPSERT INTO cw SELECT k, v FROM src")
+
+    with ThreadPoolExecutor(3) as pool:
+        for f in [pool.submit(points, 0), pool.submit(points, 10), pool.submit(select)]:
+            f.result(timeout=600)
+    for name in ("cw", "cw_v"):
+        ts = [_seg_ts(p) for p in e.managed(name)._segments()]
+        assert len(ts) == len(set(ts)), (name, sorted(ts))
+    assert len(e.managed("cw")._segments()) == 13
+    want = [(0, 3), (1, 4), (2, 5), (10, 13), (11, 14), (12, 15), (100, 1), (101, 2)]
+    assert sorted(tuple(r) for r in e.sql("SELECT k, v FROM cw").collect()) == want
+    assert sorted(tuple(r) for r in e.managed("cw_v").read().collect()) == sorted(
+        (v, k) for k, v in want
+    )
+
+
+def test_claims_are_exclusive_under_contention(spark, tmp_path):
+    """More threads than cores claiming commit ts of one table, switching
+    as often as the interpreter allows, claim each ts exactly once."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from phoenix_spark.mutations import ManagedTable
+
+    def claims() -> list[int]:
+        mt = ManagedTable(spark, str(tmp_path), "t")
+        return [mt._claim() for _ in range(25)]
+
+    workers = (os.cpu_count() or 1) + 2
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(workers) as pool:
+            futures = [pool.submit(claims) for _ in range(workers)]
+            got = [ts for f in futures for ts in f.result(timeout=120)]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(got) == list(range(1, workers * 25 + 1))
 
 
 def test_stream_sees_each_point_commit_once(spark, tmp_path):

@@ -308,3 +308,27 @@ def test_concat_suffix_of_failed_head_not_rewritten():
     sql = "SELECT (SELECT name FROM u) || a || b AS v FROM t"
     out = translate_phoenix_sql(sql, str_columns={"a", "b", "name"})
     assert "concat_ws" not in out, out
+
+
+def test_rvc_compares_element_by_element(spark, tmp_path):
+    """Row value constructors of equal arity compare element by element,
+    each pair of elements widened to a common type: a BIGINT PK column
+    against INTEGER literals, in a comparison and in an IN list."""
+    from phoenix_spark.engine import Engine
+
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    e.sql(
+        "CREATE TABLE r (a BIGINT NOT NULL, b INTEGER NOT NULL, v VARCHAR, "
+        "CONSTRAINT pk PRIMARY KEY (a, b))"
+    )
+    e.sql("UPSERT INTO r VALUES (1, 2, 'p'), (1, 3, 'q'), (2, 3, 'r')")
+
+    def v(where: str) -> list[str]:
+        return sorted(r.v for r in e.sql(f"SELECT v FROM r WHERE {where}").collect())
+
+    assert v("(a, b) > (1, 2)") == ["q", "r"]
+    assert v("(a, b) <= (1, 3)") == ["p", "q"]
+    assert v("(a, b) = (1, 3)") == ["q"]
+    assert v("(a, b) IN ((2, 3))") == ["r"]
+    assert v("(a, b) NOT IN ((2, 3), (1, 2))") == ["q"]
+    assert v("(a, b, v) > (1, 2)") == ["p", "q", "r"]  # the longer RVC wins a tie
